@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Headline benchmark: runs the `bench = true` queries from [[Queries]] on
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   *
@@ -275,12 +273,7 @@ object Bench {
         AbFail(s""""error":"${jsonEscape(e.toString.take(120))}"""")
       }
     try {
-      val spark = GraftSession.configure(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-      ).getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(cpus)
 
       val headline = Queries.all.filter(_.bench)
       def run(q: Q): Boolean =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for every registered query — the plan-review
   * loop for SURVEY.md §4 (pushdown, broadcast, whole-stage codegen spans).
   * Usage: runMain graft.Explain [sfDir] [queryName...]

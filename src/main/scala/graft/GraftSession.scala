@@ -4,21 +4,18 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical session configuration for the graft engine.
   *
-  * The reference pipeline (see `/root/reference/anonymizer/src/main.rs`) scales
-  * by spawning N parallel Kafka consumers and reads every knob from the
-  * environment (`config.rs:1-187`); the analog here is `local[N]` with N
-  * shuffle partitions and the same env-first discipline — every knob below
-  * has an `SPARK_GRAFT_*` override, so bench/probe/deploy sizing is an env
-  * edit, not a code edit. On a real cluster the master/partition settings
-  * come from spark-submit and AQE handles runtime re-planning (skew splits,
-  * shuffle coalescing), so everything except the nanos flag is advisory.
+  * The reference pipeline (`anonymizer/src/main.rs`) scales by spawning N
+  * parallel Kafka consumers and reads every knob from the environment
+  * (`config.rs:1-187`); the analog here is `local[N]` with N shuffle
+  * partitions, sized from the environment. On a real cluster the master and
+  * partition settings come from spark-submit (sessions built through
+  * [[configure]]) and AQE handles runtime re-planning (skew splits, shuffle
+  * coalescing), so everything except the nanos flag is advisory.
   *
   * | env                             | default    | meaning                    |
   * |---------------------------------|------------|----------------------------|
-  * | SPARK_GRAFT_CPUS                | 32         | local[N] + shuffle default |
-  * | SPARK_GRAFT_SHUFFLE_PARTITIONS  | = CPUS     | spark.sql.shuffle.partitions |
-  * | SPARK_GRAFT_MASTER              | local[CPUS]| master URL                 |
-  * | SPARK_GRAFT_OBJ_AGG_FALLBACK    | 1048576     | ObjectHashAggregate sort-fallback keys |
+  * | SPARK_GRAFT_CPUS                | 32         | local[N] + shuffle.partitions |
+  * | SPARK_GRAFT_OBJ_AGG_FALLBACK    | 1048576    | ObjectHashAggregate sort-fallback keys |
   */
 object GraftSession {
 
@@ -61,7 +58,7 @@ object GraftSession {
     // make that string superlinear in rounds — the default 2 GiB cap let a
     // KB-sized table burn minutes of driver CPU building plan text. 1 MiB
     // keeps every legitimate explain intact.
-    .config("spark.sql.maxPlanStringLength", env("SPARK_GRAFT_MAX_PLAN_STR", "1048576"))
+    .config("spark.sql.maxPlanStringLength", "1048576")
     // Let AQE re-plan INSIDE persisted-plan materializations (off by default
     // upstream so a cache's output partitioning stays stable for consumers
     // that reuse it). The dedup family materializes every persist under
@@ -72,9 +69,7 @@ object GraftSession {
     // Scale-adaptive by construction (AQE sizes from runtime bytes); no
     // consumer here relies on a cache's physical partitioning (the pair
     // caches are joined/aggregated through their own exchanges).
-    // SPARK_GRAFT_CACHED_PLAN_AQE=false restores the upstream default.
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      env("SPARK_GRAFT_CACHED_PLAN_AQE", "true"))
+    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.ui.enabled", "false")
 
   /** Run `body` with cached-plan AQE re-partitioning OFF, so frames
@@ -100,15 +95,17 @@ object GraftSession {
     }
   }
 
-  /** Local session sized by SPARK_GRAFT_CPUS (driver contract). */
+  /** Local session: `local[cpus]` with `cpus` shuffle partitions, sized by
+    * SPARK_GRAFT_CPUS unless the caller passes a count. The harness mains
+    * and the tests all build their session here.
+    */
   def local(cpus: String = env("SPARK_GRAFT_CPUS", "32")): SparkSession = {
     val spark = configure(
       SparkSession
         .builder()
-        .master(env("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+        .master(s"local[$cpus]")
         .appName("graft")
-        .config("spark.sql.shuffle.partitions",
-          env("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
+        .config("spark.sql.shuffle.partitions", cpus)
     ).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -184,11 +184,10 @@ object Queries {
       // old SECOND exchange (hourly partials, ~group-count rows of 7 cols)
       // disappears. On http-log shapes the hourly group count is the same
       // order as N (9874 groups / 10k logs here), so total exchanged bytes
-      // DROP as well; a deployment with massive per-group collapse can
-      // restore the two-exchange shape (-Dgraft.a00onex=off, AbProbe hook).
-      val deduped = if (sys.props.get("graft.a00onex").contains("off")) logs
-        else logs.repartition(col("resource_id"), col("response_status"),
-          col("cache_status"), col("remote_addr"))
+      // DROP as well (a deployment with massive per-group collapse would
+      // prefer the two-exchange shape).
+      val deduped = logs.repartition(col("resource_id"), col("response_status"),
+        col("cache_status"), col("remote_addr"))
       val once = streaming.HttpLogPipeline.dedupReplayed(deduped, logs.columns.toSeq)
       // in-query telemetry (reference telemetry.rs counters): rows/bytes/5xx
       // ride the plan as observed metrics — no extra pass, asserted in
@@ -1029,19 +1028,10 @@ object Queries {
       // no selective filter here (every nation survives), so the reorder
       // cannot prune the big side; AbProbe (8 reps, interleaved) read the
       // reorder 1.08× WORSE on mins (0.558 vs 0.519; medians 0.644 vs
-      // 0.580). The committed shape stays the r20 one; the probed
-      // alternative stays reachable under -Dgraft.b02order=off as the
-      // measurement hook and the negative-result record.
-      val joined =
-        if (sys.props.get("graft.b02order").contains("off"))
-          li.join(o, col("l_orderkey") === col("o_orderkey"))
-            .join(c.join(broadcast(n), col("c_nationkey") === col("n_nationkey")),
-              col("o_custkey") === col("c_custkey"))
-        else
-          li.join(o, col("l_orderkey") === col("o_orderkey"))
-            .join(c, col("o_custkey") === col("c_custkey"))
-            .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      joined
+      // 0.580). The committed shape stays the r20 one.
+      li.join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(c, col("o_custkey") === col("c_custkey"))
+        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name").as("nation"))
         .agg(
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
@@ -1176,37 +1166,24 @@ object Queries {
       // BEFORE the fact-to-fact joins, so ~4/5 of lineitem rows drop before
       // they cross the orders/customer joins (guide §3.2: reduce the big
       // side first; inner joins commute, so the result multiset is
-      // unchanged). -Dgraft.b09order=off restores the old order (A/B hook).
+      // unchanged).
       val li = Tables.lineitem(s, dir)
       val o  = Tables.orders(s, dir)
       val c  = Tables.customer(s, dir)
       val su = Tables.supplier(s, dir)
       val n  = Tables.nation(s, dir)
       val r  = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      if (sys.props.get("graft.b09order").contains("off"))
-        li.join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(c, col("o_custkey") === col("c_custkey"))
-          .join(broadcast(su),
-            col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-          .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-          .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-          .groupBy(col("n_name").as("nation"))
-          .agg(
-            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-            count(lit(1)).as("line_cnt"))
-      else {
-        val suAsia = su
-          .join(n, col("s_nationkey") === col("n_nationkey"))
-          .join(r, col("n_regionkey") === col("r_regionkey"))
-        li.join(broadcast(suAsia), col("l_suppkey") === col("s_suppkey"))
-          .join(o, col("l_orderkey") === col("o_orderkey"))
-          .join(c, col("o_custkey") === col("c_custkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-          .groupBy(col("n_name").as("nation"))
-          .agg(
-            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-            count(lit(1)).as("line_cnt"))
-      }
+      val suAsia = su
+        .join(n, col("s_nationkey") === col("n_nationkey"))
+        .join(r, col("n_regionkey") === col("r_regionkey"))
+      li.join(broadcast(suAsia), col("l_suppkey") === col("s_suppkey"))
+        .join(o, col("l_orderkey") === col("o_orderkey"))
+        .join(c, col("o_custkey") === col("c_custkey") &&
+          col("c_nationkey") === col("s_nationkey"))
+        .groupBy(col("n_name").as("nation"))
+        .agg(
+          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
+          count(lit(1)).as("line_cnt"))
     },
     Some("""SELECT n_name AS nation,
       |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,

@@ -24,7 +24,6 @@ object Tables {
     * it explicitly is behavior-preserving: the data is still read from
     * parquet on every run. Keyed by full path, so differently-vintaged
     * copies (ScaleProbe's BIGINT-ts inflations) can never alias.
-    * -Dgraft.schemacache=off restores per-read inference (AbProbe A/B hook).
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
@@ -44,12 +43,8 @@ object Tables {
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    if (sys.props.get("graft.schemacache").contains("off"))
-      spark.read.parquet(path)
-    else {
-      val sch = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
-      spark.read.schema(sch).parquet(path)
-    }
+    val sch = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
+    spark.read.schema(sch).parquet(path)
   }
 
   /** events with `ts_ns` (epoch nanos, long) and `ts` (µs-truncated timestamp).

@@ -30,21 +30,8 @@ object Dedup {
     * their other bands, so recall only degrades for documents similar
     * *solely* via the degenerate band.
     */
-  private def bandJoinCandidates(banded: DataFrame,
-                                 maxBucket: Int = 100000): DataFrame = {
-    // measurement hook (AbProbe): -Dgraft.bandjoin=v1 restores the
-    // count + broadcast-anti-join + self-join shape for in-JVM A/B
-    if (sys.props.get("graft.bandjoin").exists(v => v == "v1" || v == "off")) {
-      val hot = banded.groupBy("band", "key").count()
-        .filter(col("count") > maxBucket).select("band", "key")
-      val cold = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
-      return cold.as("a")
-        .join(cold.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-    }
+  private[graft] def bandJoinCandidates(banded: DataFrame,
+                                        maxBucket: Int = 100000): DataFrame = {
     // r21: ONE aggregation replaces the previous count-pass + broadcast
     // anti-join + (band, key) self-join. collect_capped gathers each
     // bucket's ids (sorted ascending, NULL past maxBucket — the same
@@ -69,8 +56,6 @@ object Dedup {
       .select(posexplode(col("ids")).as(Seq("i", "id_a")), col("ids"))
       .select(col("id_a"),
         explode(expr("slice(ids, i + 2, size(ids) - i - 1)")).as("id_b"))
-    if (sys.props.get("graft.pairpart").exists(v => v == "v1" || v == "off"))
-      return emitted.distinct()
     // r22: the cross-band dedup partitions by id_a ALONE (subset of the
     // dedup keys, so the aggregation needs no second exchange) instead of
     // (id_a, id_b) — downstream, the first verify join is keyed on id_a,
@@ -82,8 +67,7 @@ object Dedup {
     // so the old map-side partial dedup could not collapse them before the
     // exchange). Locally the joins broadcast, so this is plan-neutral at
     // bench SF; the 100× probe is the measurement. A hot id_a is bounded by
-    // cap·bands pairs per doc. -Dgraft.pairpart=off restores the
-    // (id_a, id_b)-keyed distinct.
+    // cap·bands pairs per doc.
     emitted.repartition(col("id_a")).dropDuplicates("id_a", "id_b")
   }
 

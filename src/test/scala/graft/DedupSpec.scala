@@ -67,13 +67,77 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(over.forall(identity), "cap 9 < group size 10 must evaluate to NULL")
   }
 
+  /** Reference for [[Dedup.bandJoinCandidates]]: the pre-r21 shape — count
+    * each (band, key) bucket, broadcast-anti-join the buckets over
+    * `maxBucket` away, self-join the rest on (band, key), distinct. Null keys
+    * never match the equi-join, so they pair with nothing.
+    */
+  private def selfJoinCandidates(banded: DataFrame, maxBucket: Int = 100000): DataFrame = {
+    val hot = banded.groupBy("band", "key").count()
+      .filter(col("count") > maxBucket).select("band", "key")
+    val cold = banded.join(broadcast(hot), Seq("band", "key"), "left_anti")
+    cold.as("a")
+      .join(cold.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+  }
+
+  private def idPairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** minhashPairs' shingles and (id, band, key) frame over the spec corpus. */
+  private lazy val corpusShingles: DataFrame = corpus
+    .select(col("doc_id").as("id"), graft.functions.word_shingles(col("text"), 3).as("sh"))
+    .filter(size(col("sh")) > 0)
+
+  private lazy val corpusBanded: DataFrame = corpusShingles.select(col("id"),
+    posexplode(graft.functions.lsh_band_keys(
+      graft.functions.minhash_sig_arr(col("sh"), 128), 32)).as(Seq("band", "key")))
+
+  test("band-join candidates equal the self-join reference on the corpus") {
+    val ref = idPairs(selfJoinCandidates(corpusBanded))
+    val got = idPairs(Dedup.bandJoinCandidates(corpusBanded))
+    assert(ref.nonEmpty)
+    assert(got == ref, s"got minus ref: ${got diff ref}; ref minus got: ${ref diff got}")
+  }
+
+  test("band-join candidates drop null keys and capped buckets like the self-join") {
+    import spark.implicits._
+    // maxBucket 5: bucket (0, 1) holds ids 0..5 — one over the cap, dropped;
+    // bucket (1, 2) holds ids 0..4 — at the cap, kept; band 2 gives ids
+    // 0..9 a null key (pairs with nothing), re-pairs (0, 1) (distinct across
+    // bands) and adds (6, 7). Ids 5..9 co-bucket only through the capped
+    // bucket or null keys, so (5, x) and (8, 9) must not appear.
+    val rows: Seq[(Long, Int, Option[Long])] =
+      (0L to 5L).map(i => (i, 0, Some(1L))) ++
+        (0L to 4L).map(i => (i, 1, Some(2L))) ++
+        (0L to 9L).map(i => (i, 2, None)) ++
+        Seq((0L, 2, Some(4L)), (1L, 2, Some(4L)), (6L, 2, Some(3L)), (7L, 2, Some(3L)))
+    val banded = rows.toDF("id", "band", "key")
+    val expected = (for (a <- 0L to 4L; b <- a + 1 to 4L) yield (a, b)).toSet + ((6L, 7L))
+    assert(idPairs(selfJoinCandidates(banded, maxBucket = 5)) == expected)
+    assert(idPairs(Dedup.bandJoinCandidates(banded, maxBucket = 5)) == expected)
+  }
+
   test("band-join v2 (capped-collect) emits exactly the v1 self-join pair set") {
-    def pairSet(): Set[(Long, Long, Double)] =
-      Dedup.minhashPairs(corpus, "doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val v2 = pairSet()
-    sys.props("graft.bandjoin") = "v1"
-    val v1 = try pairSet() finally sys.props.remove("graft.bandjoin")
+    // minhashPairs' verification over the reference candidates: exact
+    // shingle Jaccard, threshold 0.5, rounded to 4 dp
+    val sh = corpusShingles
+    val ref = selfJoinCandidates(corpusBanded)
+      .join(sh.as("sa"), col("id_a") === col("sa.id"))
+      .join(sh.as("sb"), col("id_b") === col("sb.id"))
+      .withColumn("inter", size(array_intersect(col("sa.sh"), col("sb.sh"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("sa.sh")) + size(col("sb.sh")) - col("inter")))
+      .filter(col("jaccard") >= 0.5)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4))
+    def triples(df: DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val v2 = triples(Dedup.minhashPairs(corpus, "doc_id", "text"))
+    val v1 = triples(ref)
+    assert(v1.nonEmpty)
     assert(v2 == v1, s"v2 minus v1: ${v2 diff v1}; v1 minus v2: ${v1 diff v2}")
   }
 

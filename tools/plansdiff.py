@@ -24,7 +24,9 @@ Two grains:
   r22 a full-grain CHANGED row whose tree grain is unchanged and whose diff
   vanishes when bracket-list items are sorted is auto-ANNOTATED
   "[known-benign: attribute-order permutation, tree unchanged]" (the
-  documented b53 Expand class); annotation only — exit code unchanged.
+  documented b53 Expand class) unless a differing line is order-significant
+  (sort orders, join keys, hashpartitioning args — see
+  order_significant_diff); annotation only — exit code unchanged.
 - --tree: compares only each plan's operator-tree section (the lines
   before the first `(n) NodeName` detail block). Immune to attribute-order
   permutation; a --tree diff IS a structural plan change. Read the pair:
@@ -142,6 +144,31 @@ def _sort_bracket_items(s: str) -> str:
 
 def permutation_canonical(lines: list) -> list:
     return [_sort_bracket_items(l) for l in lines]
+
+
+# Bracket lists whose item ORDER is semantics, not renumbering noise: sort
+# orders (Sort, Window ORDER BY, TakeOrderedAndProject — every item carries
+# ASC/DESC), join keys (the i-th left key pairs with the i-th right key),
+# and hashpartitioning args (they fix which partition a row lands in).
+_ORDER_SIGNIFICANT_OPS = {"Sort", "Window", "TakeOrderedAndProject"}
+_ORDER_SIGNIFICANT_LINE = re.compile(
+    r"\b(ASC|DESC)\b|hashpartitioning\(|^(Left|Right) keys\b")
+_NORMALIZED_DETAIL = re.compile(r"^\s*\(N\) (\S+)")
+
+
+def order_significant_diff(old: list, new: list) -> bool:
+    """True when a line that differs between two equal-length normalized
+    plans carries an order-significant list — then a bracket-item sort
+    hides a genuine change and the permutation annotation must not apply."""
+    op = None
+    for o, n in zip(old, new):
+        m = _NORMALIZED_DETAIL.match(o)
+        if m:
+            op = m.group(1)
+        if o != n and (_ORDER_SIGNIFICANT_LINE.search(o)
+                       or (op in _ORDER_SIGNIFICANT_OPS and o.startswith("Arguments:"))):
+            return True
+    return False
 
 
 def buildside_canonical(lines: list) -> list:
@@ -349,11 +376,18 @@ Arguments: 25
                                    "Arguments: [[u, null, 2], [v, u, 1]], [v, u]")
         genuine = base.replace("Output [2]: [u, v]", "Output [2]: [u, w]")
         tree_and_perm = permuted.replace("+- Exchange (4)", "+- Sort (4)")
+        # swapped Sort keys sort to the same canonical form, but key order
+        # is the sort's semantics: a genuine change, never annotated
+        sorted_ = base.replace("Arguments: 25", "Arguments: 25\n(10) Sort\n"
+                               "Arguments: [u ASC NULLS FIRST, v ASC NULLS FIRST], false, 0")
+        sort_swapped = sorted_.replace("[u ASC NULLS FIRST, v ASC NULLS FIRST]",
+                                       "[v ASC NULLS FIRST, u ASC NULLS FIRST]")
         perm_cases = [
             (base, permuted, 1, True, "attribute permutation -> annotated, exit 1"),
             (nested, nested_perm, 1, True, "nested Expand-branch permutation -> annotated"),
             (base, genuine, 1, False, "genuine item change -> no annotation"),
             (permuted, tree_and_perm, 1, False, "permutation + tree change -> no annotation"),
+            (sorted_, sort_swapped, 1, False, "swapped Sort keys, tree unchanged -> no annotation"),
         ]
         for i, (old_t, new_t, want, want_note, label) in enumerate(perm_cases):
             fa = os.path.join(d, f"pa{i}.txt")
@@ -401,7 +435,8 @@ def main(argv) -> int:
             note = " [known-benign: run-level AQE build-side flip]"
         elif (not a.tree
                 and old_tree.get(k) == new_tree.get(k)
-                and permutation_canonical(old[k]) == permutation_canonical(new[k])):
+                and permutation_canonical(old[k]) == permutation_canonical(new[k])
+                and not order_significant_diff(old[k], new[k])):
             note = " [known-benign: attribute-order permutation, tree unchanged]"
         print(f"CHANGED {k} ({len(old[k])} -> {len(new[k])} lines){note}")
     if a.show:
