@@ -6454,10 +6454,11 @@ object Queries {
     // spec-only — the INDEX-state sibling of g15's model counts):
     // vectors arrive in 3 micro-batches, each assigned to the FROZEN
     // trained quantizer by the stateless per-row argmax
-    // (IvfMaintenance.attach — no shuffle, no retrain) and appended
-    // under dual (batch_id, cell) partitioning: dynamic overwrite on
-    // batch_id makes a replayed batch overwrite exactly itself (forced
-    // inside the gate), while the cell subdirectories keep the index
+    // (IvfMaintenance.attach — no shuffle, no retrain) and written
+    // under dual (batch_id, cell) partitioning: the idempotent sink's
+    // plain overwrite of the batch's own batch_id directory makes a
+    // replayed batch overwrite exactly itself (forced inside the gate),
+    // while the cell subdirectories inside it keep the index
     // PROBE partition-pruned (asserted in-gate: a cell-filtered read
     // carries the cell PartitionFilter). The final index contents hash
     // against the d03-discipline oracle: the ENTIRE quantizer replayed
@@ -6473,11 +6474,9 @@ object Queries {
       centroids.count() // train ONCE; every micro-batch reuses the frozen set
       val arrivals = emb.filter(col("vec_id") % 25 === 0)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding"))
+      val write = streaming.Sinks.idempotentParquet(path, partitionBy = Seq("cell"))
       def sink(b: DataFrame, id: Long): Unit =
-        streaming.IvfMaintenance.attach(b, centroids)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell").parquet(path)
+        write(streaming.IvfMaintenance.attach(b, centroids), id)
       (0 until 3).foreach { b =>
         sink(arrivals.filter(pmod(col("vec_id"), lit(3)) === b), b.toLong)
       }

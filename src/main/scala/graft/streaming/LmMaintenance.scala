@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * same exactly-once machinery as the totals sink.
   *
   * Unigram counts are MERGEABLE, so each micro-batch writes only its own
-  * PARTIAL (term, cnt) aggregate into a `batch_id=N` partition with dynamic
-  * partition overwrite: a replayed batch (failure between write and
-  * checkpoint commit) overwrites exactly itself, earlier partials are
+  * PARTIAL (term, cnt) aggregate into its own `batch_id=N` directory
+  * through [[Sinks.idempotentParquet]]: a replayed batch (failure between
+  * write and checkpoint commit) overwrites exactly itself, earlier partials are
   * untouched — at-least-once replay + idempotent write = effectively
-  * exactly-once counts ([[Sinks.idempotentParquet]]'s argument, applied to
+  * exactly-once counts (the totals sink's argument, applied to
   * aggregation state instead of rows). A model snapshot is then one
   * vocab-sized merge of the partials, taken whenever a fresh LM is wanted —
   * no read-modify-write race with the stream, because partials are only
@@ -21,18 +21,15 @@ import org.apache.spark.sql.functions._
 object LmMaintenance {
 
   /** foreachBatch sink: per-batch partial unigram counts, idempotent on
-    * replay via the batch's own partition.
+    * replay via the batch's own directory.
     */
   def countsSink(path: String, textCol: String): (DataFrame, Long) => Unit = {
+    val write = Sinks.idempotentParquet(path)
     (batch, batchId) =>
-      batch.select(explode(split(trim(col(textCol)), "\\s+")).as("term"))
+      val counts = batch.select(explode(split(trim(col(textCol)), "\\s+")).as("term"))
         .filter(length(col("term")) > 0)
         .groupBy("term").agg(count(lit(1)).as("cnt"))
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+      write(counts, batchId)
   }
 
   /** Current model snapshot: merge all partials (one vocab-sized groupBy

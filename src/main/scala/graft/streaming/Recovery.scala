@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.sources.KafkaShaped
 
@@ -26,7 +27,7 @@ import graft.sources.KafkaShaped
   *  - at-least-once REPROCESSING (crash after the sink write, before the
   *    checkpoint's offset commit — [[crashBeforeCommit]] induces it) is
   *    absorbed by [[Sinks.idempotentParquet]]: the replayed micro-batch
-  *    dynamically overwrites its OWN batch_id partition and no other.
+  *    overwrites its OWN batch_id directory and no other.
   *  - the totals themselves commute: each micro-batch writes PARTIAL
   *    hourly totals (count/sum per key), and the final re-aggregation
   *    sums partials — exact integer arithmetic, any batch split.
@@ -35,6 +36,19 @@ object Recovery {
 
   val totalKeys: Seq[String] =
     Seq("ts_hour", "resource_id", "response_status", "cache_status", "remote_addr")
+
+  /** The totals sink's file schema: [[totalKeys]] then the partial sums.
+    * Readers pass it instead of inferring it from a parquet footer.
+    */
+  val totalsSchema: StructType = StructType(Seq(
+    StructField("ts_hour", TimestampType),
+    StructField("resource_id", LongType),
+    StructField("response_status", IntegerType),
+    StructField("cache_status", StringType),
+    StructField("remote_addr", StringType),
+    StructField("requests", LongType),
+    StructField("total_bytes", LongType),
+    StructField("total_time_milli", LongType)))
 
   /** Frames → decoded/dead-letter-split → anonymized → watermarked →
     * offset-deduped logs. Works identically on a batch frame table (the
@@ -56,16 +70,23 @@ object Recovery {
       HttpLogPipeline.withEventTimeBounds(logs), Seq("offset"))
   }
 
-  /** foreachBatch sink: this micro-batch's PARTIAL hourly totals into its
-    * own batch_id partition (idempotent under replay). */
+  /** One micro-batch's PARTIAL hourly totals in [[totalsSchema]]'s
+    * columns. Unique on [[totalKeys]] by construction: it groups by the
+    * 1-hour tumbling window and the four other keys, and a tumbling window
+    * is fixed by its start, so the write needs no second dedup.
+    */
+  def partialTotals(batch: DataFrame): DataFrame =
+    HttpLogPipeline.windowedTotals(batch.drop("offset"))
+      .select(col("window.start").as("ts_hour"),
+        col("resource_id"), col("response_status"), col("cache_status"),
+        col("remote_addr"),
+        col("requests"), col("total_bytes"), col("total_time_milli"))
+
+  /** foreachBatch sink: this micro-batch's [[partialTotals]] into its own
+    * batch_id directory (idempotent under replay). */
   def totalsBatchSink(sinkDir: String): (DataFrame, Long) => Unit = {
-    (batch, batchId) =>
-      val partial = HttpLogPipeline.windowedTotals(batch.drop("offset"))
-        .select(col("window.start").as("ts_hour"),
-          col("resource_id"), col("response_status"), col("cache_status"),
-          col("remote_addr"),
-          col("requests"), col("total_bytes"), col("total_time_milli"))
-      Sinks.idempotentParquet(sinkDir, totalKeys)(partial, batchId)
+    val write = Sinks.idempotentParquet(sinkDir)
+    (batch, batchId) => write(partialTotals(batch), batchId)
   }
 
   /** Run the pipeline over every frame file currently in `framesDir`,
@@ -181,10 +202,11 @@ object Recovery {
 
   /** The serving-side view: re-aggregate the sink's per-batch partials
     * into final totals (what the reference's ClickHouse does at merge /
-    * query time for its ReplacingMergeTree inserts).
+    * query time for its ReplacingMergeTree inserts). Reads with
+    * [[totalsSchema]], so no footer-inference job runs per read.
     */
   def finalTotals(spark: SparkSession, sinkDir: String): DataFrame =
-    spark.read.parquet(sinkDir)
+    spark.read.schema(totalsSchema).parquet(sinkDir)
       .groupBy(totalKeys.map(col): _*)
       .agg(sum("requests").as("requests"),
         sum("total_bytes").as("total_bytes"),

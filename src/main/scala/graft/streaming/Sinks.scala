@@ -3,7 +3,6 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Rate limiting for a downstream store, as in the reference's 1-req/min
   * ClickHouse proxy (`/root/reference/anonymizer/src/limiter.rs` +
@@ -36,24 +35,24 @@ final class RateLimiter(minIntervalMs: Long,
 object Sinks {
 
   /** Idempotent parquet sink — the ReplacingMergeTree analog. Each
-    * micro-batch is deduplicated on `keys` and written with dynamic
-    * partition overwrite on its own `batch_id` partition, so a replayed
-    * micro-batch (failure between write and checkpoint commit) overwrites
-    * exactly itself — earlier batches' partitions are untouched:
-    * at-least-once replay + idempotent write = effectively exactly-once,
-    * the same argument as reference lib.rs:99-116.
+    * micro-batch is written with plain overwrite into its own
+    * `path/batch_id=<id>` directory (optionally sub-partitioned by
+    * `partitionBy` inside it), so a replayed micro-batch (failure between
+    * write and checkpoint commit) overwrites exactly itself — earlier
+    * batches' directories are untouched: at-least-once replay + idempotent
+    * write = effectively exactly-once, the same argument as reference
+    * lib.rs:99-116. Reading `path` discovers `batch_id` as a partition
+    * column. The batch id never enters the plan as a literal, so every
+    * micro-batch reuses the same generated code.
     */
-  def idempotentParquet(path: String, keys: Seq[String], limiter: Option[RateLimiter] = None)
+  def idempotentParquet(path: String, limiter: Option[RateLimiter] = None,
+                        partitionBy: Seq[String] = Nil)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     limiter.foreach(_.acquire())
-    batch
-      .dropDuplicates(keys)
-      .withColumn("batch_id", lit(batchId))
-      .write
+    batch.write
       .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(path)
+      .partitionBy(partitionBy: _*)
+      .parquet(s"$path/batch_id=$batchId")
   }
 
   /** Append-only parquet sink with rate limiting (at-least-once). */

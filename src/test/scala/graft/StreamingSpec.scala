@@ -159,14 +159,13 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("idempotent sink: replaying a micro-batch does not duplicate rows") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val batch = Seq((1L, "a"), (2L, "b"), (3L, "c"), (2L, "b"))
-      .toDF("log_id", "payload")
-    val sink = Sinks.idempotentParquet(dir, Seq("log_id"))
+    val batch = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("log_id", "payload")
+    val sink = Sinks.idempotentParquet(dir)
     sink(batch, 0L)
     val first = spark.read.parquet(dir).count()
     sink(batch, 0L) // replay after simulated failure-before-commit
     val second = spark.read.parquet(dir).count()
-    assert(first == 3, "within-batch dedup")
+    assert(first == 3, "batch written as given")
     assert(second == 3, "replay is idempotent")
     // a LATER batch must accumulate, not clobber earlier partitions
     val batch2 = Seq((7L, "g"), (8L, "h")).toDF("log_id", "payload")
@@ -174,6 +173,144 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(dir).count() == 5, "later batch clobbered earlier rows")
     sink(batch2, 1L) // replaying the later batch is also idempotent
     assert(spark.read.parquet(dir).count() == 5)
+  }
+
+  /** The sink's input for the first `n` real events, in `parts` batches:
+    * frames through [[Recovery.offsetKeyedLogs]] (batch posture), each
+    * batch materialized into its own local frame so that, like a
+    * foreachBatch batch, it carries no upstream plan of its own.
+    */
+  private def sinkInput(n: Int, parts: Int = 1) = {
+    val logs = Recovery.offsetKeyedLogs(
+      KafkaShaped.framesFromPayloads(encodedPayloads(n), "value", "log_id"))
+    val rows = logs.collect()
+    (0 until parts).map(p => spark.createDataFrame(java.util.Arrays.asList(
+      rows.filter(_.getAs[Long]("offset") % parts == p): _*), logs.schema))
+  }
+
+  test("totals sink: a warm micro-batch compiles no code and shuffles once") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        nodes(qe.executedPlan).collectFirst { case w: DataWritingCommandExec => w }
+          .foreach(writes.add)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val batches = sinkInput(60, parts = 3)
+    withTempDir("graft_sink_warm") { dir =>
+      val sink = Recovery.totalsBatchSink(s"$dir/sink")
+      sink(batches(0), 0L)
+      sink(batches(1), 1L)
+      spark.listenerManager.register(listener)
+      try {
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        sink(batches(2), 2L)
+        assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+          "a new batch id must reuse the warm batches' generated code")
+        val write = Option(writes.poll(10, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the sink's write was not reported"))
+        val exchanges = nodes(write).count(_.isInstanceOf[Exchange])
+        assert(exchanges == 1, s"expected the aggregation's exchange only:\n$write")
+      } finally spark.listenerManager.unregister(listener)
+      assert(Recovery.finalTotals(spark, s"$dir/sink").agg(sum("requests"))
+        .head().getLong(0) == batches.map(_.count()).sum)
+    }
+  }
+
+  test("partial totals are unique on totalKeys over random frames and batch splits") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import spark.implicits._
+    import graft.functions.HttpLogCodec
+    def u(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    // small key domains, so rows collide on every key within an hour; the
+    // addresses also collide after anonymization
+    val event = for {
+      ms <- Gen.chooseNum(0L, 4 * 3600 * 1000L)
+      rid <- Gen.chooseNum(0L, 2L)
+      st <- Gen.oneOf(200, 404, 503)
+      cache <- Gen.oneOf("HIT", "MISS")
+      addr <- Gen.oneOf("10.0.0.1", "10.0.0.2", "10.0.9.1", "2001:db8::1", "unix")
+      bytes <- Gen.chooseNum(0L, 5000L)
+    } yield HttpLogCodec.encode(t0 + ms, rid, bytes, 7L, st, u(cache), u("GET"),
+      u(addr), u("/x"))
+    // (events, per-event batch index, redelivered offsets)
+    val split = for {
+      events <- Gen.nonEmptyListOf(event).map(_.take(80))
+      nBatches <- Gen.chooseNum(1, 3)
+      batchOf <- Gen.listOfN(events.size, Gen.chooseNum(0, nBatches - 1))
+      redelivered <- Gen.someOf(events.indices)
+    } yield (events, batchOf, redelivered)
+    val prop = Prop.forAll(split) { case (events, batchOf, redelivered) =>
+      val frames = events.zipWithIndex.map { case (v, o) => (v, o.toLong, batchOf(o)) } ++
+        redelivered.map(o => (events(o), o.toLong, batchOf(o)))
+      frames.map(_._3).distinct.forall { b =>
+        val batch = Recovery.offsetKeyedLogs(KafkaShaped.framesFromPayloads(
+          frames.filter(_._3 == b).map(f => (f._1, f._2)).toDF("value", "offset"),
+          "value", "offset"))
+        val partial = Recovery.partialTotals(batch)
+        val keys = partial.select(Recovery.totalKeys.map(col): _*).collect().toSeq
+        val requests = partial.agg(sum("requests")).head().getLong(0)
+        keys.distinct.size == keys.size &&
+          requests == frames.filter(_._3 == b).map(_._2).distinct.size
+      }
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("totals sink: a no-data micro-batch leaves finalTotals unchanged") {
+    val logs = sinkInput(40).head
+    withTempDir("graft_sink_empty") { dir =>
+      val sinkDir = s"$dir/sink"
+      val sink = Recovery.totalsBatchSink(sinkDir)
+      def snapshot() = Recovery.finalTotals(spark, sinkDir).collect()
+        .map(_.toString).sorted.toSeq
+      sink(logs, 0L)
+      val before = snapshot()
+      assert(before.nonEmpty)
+      sink(logs.where(lit(false)), 1L)
+      // the empty batch may leave its own (row-less) batch_id directory
+      assert(snapshot() == before, "a no-data batch changed the totals")
+      sink(logs.where(lit(false)), 1L) // and its replay is as harmless
+      assert(snapshot() == before)
+    }
+  }
+
+  test("finalTotals' declared schema reads as the inferred schema on a g13-style sink") {
+    withTempDir("graft_sink_schema") { tmp =>
+      val framesDir = s"$tmp/frames"; val ckpt = s"$tmp/ckpt"; val sink = s"$tmp/sink"
+      val frames = KafkaShaped.framesFromPayloads(encodedPayloads(30), "value", "log_id")
+      Seq((0, 15), (15, 30)).foreach { case (lo, hi) =>
+        frames.filter(col("offset") >= lo && col("offset") < hi)
+          .coalesce(1).write.mode("append").parquet(framesDir)
+      }
+      Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      val declared = spark.read.schema(Recovery.totalsSchema).parquet(sink)
+      val inferred = spark.read.parquet(sink)
+      assert(declared.schema == inferred.schema)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(declared) == rows(inferred))
+      assert(rows(declared).size >= 2, "expected partials from both batches")
+      val totals = Recovery.finalTotals(spark, sink)
+      assert(totals.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+        "ts_hour" -> "timestamp", "resource_id" -> "bigint", "response_status" -> "int",
+        "cache_status" -> "string", "remote_addr" -> "string", "requests" -> "bigint",
+        "total_bytes" -> "bigint", "total_time_milli" -> "bigint"))
+      assert(totals.agg(sum("requests")).head().getLong(0) == 30)
+    }
   }
 
   test("file-stream ETL recovers from checkpoint without loss or duplication") {
@@ -434,7 +571,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental LM maintenance: replayed batch leaves counts exactly-once") {
-    // partial (term, cnt) per batch_id partition + dynamic overwrite: a
+    // partial (term, cnt) per batch_id directory, overwritten whole: a
     // replayed micro-batch overwrites exactly itself, and the merged
     // snapshot equals the LM trained on the full corpus in one batch
     import spark.implicits._
