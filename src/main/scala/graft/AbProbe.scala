@@ -36,12 +36,7 @@ object AbProbe {
     val valB = (!valA.toBoolean).toString
 
     val qs = Queries.all.filter(q => q.bench && names(q.name))
-    def run(q: Q): Double = {
-      spark.sharedState.cacheManager.clearCache()
-      val t0 = System.nanoTime()
-      q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(q: Q): Double = Bench.timedPass(spark)(q.fn(spark, sfDir))
     def setA(): Unit = spark.conf.set(prop, valA)
     def setB(): Unit = spark.conf.set(prop, valB)
     qs.foreach { q =>

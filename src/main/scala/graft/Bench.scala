@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Headline benchmark: runs the `bench = true` queries from [[Queries]] on
   * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
   *
@@ -70,6 +72,21 @@ object Bench {
     * the tail budget.
     */
   private[graft] val maxAbWindows = 5
+
+  /** The timed pass every harness main shares: clear the cache, force `df`
+    * through the `noop` sink, return the seconds. The cleared cache keeps
+    * operators that persist intermediates (the dedup family) from being
+    * served a previous run's blocks via canonical-plan cache matching, so
+    * the timing measures the computation, not a cache read; in-run persists
+    * still count as part of the operator's real cost. `df` is built inside
+    * the timed window, as building it may already collect or run jobs.
+    */
+  private[graft] def timedPass(spark: SparkSession)(df: => DataFrame): Double = {
+    spark.sharedState.cacheManager.clearCache()
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
 
   /** Run `cmd` in `cwd`, stdout captured, stderr inherited; kills on
     * timeout. Returns (exitCode, stdout) with exitCode −1 on timeout.
@@ -276,9 +293,6 @@ object Bench {
       val spark = GraftSession.local(cpus)
 
       val headline = Queries.all.filter(_.bench)
-      def run(q: Q): Boolean =
-        try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: $e"); false }
       // warm each query once (codegen compile, JIT, file index), then time
       // rotated full passes and keep the per-query min — one slow run from
       // CI-machine contention (GC, other tenants, writeback) otherwise
@@ -287,17 +301,10 @@ object Bench {
       // a single contended wall-clock window degrades at most one of a query's
       // samples instead of all of them back-to-back. A failing query
       // reports -1, never a flattering near-zero timing.
-      // Every timed run starts from a CLEARED cache: operators that persist
-      // intermediates (the dedup family) would otherwise be served a previous
-      // run's blocks via canonical-plan cache matching and the "timing" would
-      // measure a cache read, not the computation. In-run persists still count
-      // — they're part of the operator's real cost.
-      def timed(q: Q): Double = {
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        if (run(q)) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      val warmed = headline.filter(run)
+      def timed(q: Q): Double =
+        try timedPass(spark)(q.fn(spark, sfDir))
+        catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: $e"); -1.0 }
+      val warmed = headline.filter(timed(_) >= 0)
       // 5 passes (r8, was 3): the r7 driver session showed a single contended
       // wall-clock window can poison 2 of 3 samples (sum-of-medians 43.5 s vs
       // sum-of-mins 24.8 on identical code); two more rotated passes cost

@@ -9,7 +9,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * stage — wall clock, task count, executor run/CPU time, input bytes, shuffle
   * read/write bytes — so the expensive exchange is attributable before any
   * change is made. Same session shape as [[Bench]] (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, noop sink, cleared cache). Diagnostic only:
+  * shuffle.partitions = cpus, [[Bench.timedPass]]). Diagnostic only:
   * never part of the driver contract, adds no query, changes none.
   */
 object ProfileBench {
@@ -38,15 +38,10 @@ object ProfileBench {
 
     val qs = Queries.all.filter(q => q.bench && (names.isEmpty || names(q.name)))
     qs.foreach { q =>
-      def run(): Unit = q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      spark.sharedState.cacheManager.clearCache()
-      run() // warm: codegen, JIT, file index
-      spark.sharedState.cacheManager.clearCache()
+      Bench.timedPass(spark)(q.fn(spark, sfDir)) // warm: codegen, JIT, file index
       stages.clear(); jobs.set(0)
       spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      run()
-      val sec = (System.nanoTime() - t0) / 1e9
+      val sec = Bench.timedPass(spark)(q.fn(spark, sfDir))
       spark.sparkContext.removeSparkListener(listener)
       println(f"\n===== ${q.name} total=$sec%.3f s, jobs=${jobs.get()}, stages=${stages.size} =====")
       println(f"${"stage"}%6s ${"wall_ms"}%8s ${"tasks"}%5s ${"run_ms"}%8s ${"cpu_ms"}%8s ${"input"}%10s ${"sh_read"}%10s ${"sh_write"}%10s  name")

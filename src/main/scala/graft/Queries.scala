@@ -41,11 +41,11 @@ object Queries {
     HttpLog.view(Tables.events(s, dir))
 
   /** http_log view + epoch-millis column, as the capnp encoder wants it. */
-  private def httpLogMs(s: SparkSession, dir: String): DataFrame =
+  private[graft] def httpLogMs(s: SparkSession, dir: String): DataFrame =
     httpLog(s, dir).withColumn("ts_milli", expr("unix_millis(ts)"))
 
   /** The 9-field HttpLogRecord encode over [[httpLogMs]] columns. */
-  private def capnpMsg: org.apache.spark.sql.Column =
+  private[graft] def capnpMsg: org.apache.spark.sql.Column =
     graft.functions.capnp_encode_http_log(
       col("ts_milli"), col("resource_id"), col("bytes_sent"),
       col("request_time_milli"), col("response_status"),

@@ -359,6 +359,30 @@ object Dedup {
         round(col("jaccard"), 4).as("jaccard"))
   }
 
+  /** The prelude [[cleanCorpus]] and [[cleanCorpusCC]] share: length floor
+    * → exact dedup (keep min id). Returns (keepers, exactKept).
+    *
+    * r21: keepers (fp, id, copies — NO text) is persisted and is the left
+    * side of each caller's final anti-join. The previous shape anti-joined
+    * the text-bearing exactKept frame, whose lineage (corpus scan → md5 agg
+    * → text re-join) ran a SECOND time under the output action — a whole
+    * extra corpus pass at scale. The keepers cache is the post-dedup key
+    * set (16 B + id per row, no payload), materialized as a byproduct of
+    * the pair materialization the operators already do; text is attached
+    * once, only to feed the LSH screen. Output rows are identical: every
+    * keeper_id exists in longEnough, so the dropped text join was 1:1.
+    * Callers release keepers before they return.
+    */
+  private def exactKeepers(df: DataFrame, idCol: String, textCol: String,
+                           minTokens: Int): (DataFrame, DataFrame) = {
+    val longEnough = df.filter(
+      size(split(trim(col(textCol)), "\\s+")) >= minTokens)
+    val keepers = exact(longEnough, idCol, textCol)
+      .select(col("fp"), col("keeper_id").as(idCol), col("n_copies").as("exact_copies"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    (keepers, keepers.join(longEnough.select(col(idCol), col(textCol)), idCol))
+  }
+
   /** The full corpus-cleaning pipeline a training-data run needs, composed
     * from the family above: length floor → exact dedup (keep min id) →
     * near-dup removal (greedy: the higher id of every verified MinHash pair
@@ -372,21 +396,7 @@ object Dedup {
     */
   def cleanCorpus(df: DataFrame, idCol: String, textCol: String,
                   minTokens: Int = 5, nearThreshold: Double = 0.5): DataFrame = {
-    val longEnough = df.filter(
-      size(split(trim(col(textCol)), "\\s+")) >= minTokens)
-    // r21: keepers (fp, id, copies — NO text) is persisted and is the left
-    // side of the final anti-join. The previous shape anti-joined the
-    // text-bearing exactKept frame, whose lineage (corpus scan → md5 agg →
-    // text re-join) ran a SECOND time under the output action — a whole
-    // extra corpus pass at scale. The keepers cache is the post-dedup key
-    // set (16 B + id per row, no payload), materialized as a byproduct of
-    // the pair materialization the operator already does; text is attached
-    // once, only to feed the LSH screen. Output rows are identical: every
-    // keeper_id exists in longEnough, so the dropped text join was 1:1.
-    val keepers = exact(longEnough, idCol, textCol)
-      .select(col("fp"), col("keeper_id").as(idCol), col("n_copies").as("exact_copies"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exactKept = keepers.join(longEnough.select(col(idCol), col(textCol)), idCol)
+    val (keepers, exactKept) = exactKeepers(df, idCol, textCol, minTokens)
     val nearPairs = minhashPairs(exactKept, idCol, textCol, threshold = nearThreshold)
     val dropIds = nearPairs.select(col("id_b").as(idCol)).distinct()
     // r22 (VERDICT task #2): the output key set (tiny — one row per kept
@@ -525,15 +535,7 @@ object Dedup {
     */
   def cleanCorpusCC(df: DataFrame, idCol: String, textCol: String,
                     minTokens: Int = 5, nearThreshold: Double = 0.5): DataFrame = {
-    val longEnough = df.filter(
-      size(split(trim(col(textCol)), "\\s+")) >= minTokens)
-    // same keepers-cache shape as [[cleanCorpus]] (r21): the final anti-join
-    // reads the tiny persisted key set instead of re-running the corpus
-    // scan → md5 agg → text join a second time under the output action
-    val keepers = exact(longEnough, idCol, textCol)
-      .select(col("fp"), col("keeper_id").as(idCol), col("n_copies").as("exact_copies"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val exactKept = keepers.join(longEnough.select(col(idCol), col(textCol)), idCol)
+    val (keepers, exactKept) = exactKeepers(df, idCol, textCol, minTokens)
     val pairs = minhashPairs(exactKept, idCol, textCol, threshold = nearThreshold)
     val cc = connectedComponents(pairs.select("id_a", "id_b"))
     pairs.unpersist(blocking = false) // CC output is materialized

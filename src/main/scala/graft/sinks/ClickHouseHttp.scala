@@ -76,15 +76,6 @@ object ClickHouseHttp {
     }
   }
 
-  /** One row as a TSV line string — convenience for tests/debugging; the
-    * sink itself streams bytes via [[writeTsvRow]].
-    */
-  def tsvLine(row: Row): String = {
-    val bos = new java.io.ByteArrayOutputStream()
-    writeTsvRow(row, bos)
-    new String(bos.toByteArray, StandardCharsets.UTF_8).stripSuffix("\n")
-  }
-
   /** Fixed-delay retry, reference `async_retry` semantics: run `f`; on
     * RETRYABLE failure (IO-class: connection refused/reset, non-2xx) sleep
     * and retry while attempts remain; rethrow the final error. Interruption

@@ -23,11 +23,7 @@ object HttpLogPipeline {
     * frames are dropped (dead-letter counting in [[graft.sources.KafkaShaped]]).
     */
   def decodeAndAnonymize(frames: DataFrame): DataFrame = {
-    val decoded = frames
-      // fenced: one decode per frame (see KafkaShaped.decodeSplit)
-      .withColumn("r",
-        graft.functions.opt_fence(graft.functions.capnp_decode_http_log(col("value"))))
-      .filter(col("r").isNotNull)
+    val decoded = graft.sources.KafkaShaped.decodeSplit(frames)._1
       .select(
         expr("timestamp_millis(r.ts_milli)").as("ts"),
         col("r.resource_id").as("resource_id"),

@@ -54,11 +54,4 @@ object Sinks {
       .partitionBy(partitionBy: _*)
       .parquet(s"$path/batch_id=$batchId")
   }
-
-  /** Append-only parquet sink with rate limiting (at-least-once). */
-  def rateLimitedAppend(path: String, limiter: RateLimiter): (DataFrame, Long) => Unit = {
-    (batch, _) =>
-      limiter.acquire()
-      batch.write.mode("append").parquet(path)
-  }
 }
