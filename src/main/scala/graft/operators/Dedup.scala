@@ -171,24 +171,42 @@ object Dedup {
     // Token-less docs are excluded: their constant densified signature would
     // collide all blank docs on every band, then 0/0 the Jaccard verify
     // (ANSI divide error) — the exact-Jaccard oracle excludes them too.
-    // Shingle ONCE per doc: `sh` is fenced so neither CollapseProject (into
-    // the keys projection) nor PushDownPredicates (into the size filter)
-    // duplicates the tokenize+hash pass, and the signature derives from the
-    // materialized shingle array (bit-identical to minhash_sig on the text —
-    // OPH is a per-bucket min, order-free). The unfenced shape evaluated
-    // word_shingles up to 3× per doc: once in the pushed-down filter, once
-    // for `sh`, once inside minhash_sig's internal re-shingling.
-    val sigs = df
-      .select(col(idCol).as("id"), opt_fence(word_shingles(col(textCol), k)).as("sh"))
-      .select(col("id"), col("sh"),
-        lsh_band_keys(minhash_sig_arr(col("sh"), n), bands).as("keys"))
-      .filter(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // NOT eagerly materialized (r22 probe): AQE's leaf query stages (band
     // map + the two broadcast builds) race this cache's block locks on
     // first run, but the waiters overlap the winner's compute — forcing the
     // cache with its own action first measured a ~5% LOSS on interleaved
     // mins (c02 0.955, c07 0.946, lazy/eager) for one extra job.
+    val sigs = signatures(df, idCol, textCol, Nil, k, n, bands)
+      .filter(size(col("sh")) > 0)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    materializedPairs(verifiedPairs(sigs, threshold), sigs)
+  }
+
+  /** (id, carry…, sh, keys): each doc's ascending shingle-hash array and its
+    * `bands` LSH band keys. Shingle ONCE per doc: `sh` is fenced so neither
+    * CollapseProject (into the keys projection) nor PushDownPredicates (into
+    * a caller's size filter) duplicates the tokenize+hash pass, and the
+    * signature derives from the materialized shingle array (bit-identical to
+    * minhash_sig on the text — OPH is a per-bucket min, order-free). The
+    * unfenced shape evaluated word_shingles up to 3× per doc: once in the
+    * pushed-down filter, once for `sh`, once inside minhash_sig's internal
+    * re-shingling. Token-less docs get an empty `sh`; callers filter them
+    * off the band/verify side.
+    */
+  private def signatures(df: DataFrame, idCol: String, textCol: String,
+                         carry: Seq[String], k: Int, n: Int, bands: Int): DataFrame = {
+    val carried = carry.map(col)
+    df.select(col(idCol).as("id") +: carried :+
+        opt_fence(word_shingles(col(textCol), k)).as("sh"): _*)
+      .select(col("id") +: carried :+ col("sh") :+
+        lsh_band_keys(minhash_sig_arr(col("sh"), n), bands).as("keys"): _*)
+  }
+
+  /** Verified near-dup pairs (id_a < id_b, jaccard ≥ threshold, rounded to
+    * 4 dp) over a [[signatures]] frame of docs with at least one shingle:
+    * band equi-join candidates, then exact shingle Jaccard.
+    */
+  private def verifiedPairs(sigs: DataFrame, threshold: Double): DataFrame = {
     val banded = sigs.select(col("id"), posexplode(col("keys")).as(Seq("band", "key")))
     val cand = bandJoinCandidates(banded)
     // The attach joins below deliberately shuffle the full sig frame rather
@@ -204,7 +222,7 @@ object Dedup {
     // hash-set builds like array_intersect/array_union. Fenced: otherwise
     // the threshold filter is rewritten to contain the merge expression and
     // verification runs twice per candidate.
-    val pairs = cand
+    cand
       .join(sh.as("sa"), col("id_a") === col("sa.id"))
       .join(sh.as("sb"), col("id_b") === col("sb.id"))
       .withColumn("inter",
@@ -213,7 +231,6 @@ object Dedup {
         (size(col("sa.sh")) + size(col("sb.sh")) - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    materializedPairs(pairs, sigs)
   }
 
   /** SimHash near-dup pairs: 4×16-bit bands (any band equal → candidate),
@@ -359,57 +376,69 @@ object Dedup {
         round(col("jaccard"), 4).as("jaccard"))
   }
 
-  /** The prelude [[cleanCorpus]] and [[cleanCorpusCC]] share: length floor
-    * → exact dedup (keep min id). Returns (keepers, exactKept).
+  /** The prelude [[cleanCorpus]] and [[cleanCorpusCC]] share, as ONE
+    * persisted frame (id, fp, exact_copies, sh, keys) — one row per exact
+    * keeper, signed for the LSH screen:
     *
-    * r21: keepers (fp, id, copies — NO text) is persisted and is the left
-    * side of each caller's final anti-join. The previous shape anti-joined
-    * the text-bearing exactKept frame, whose lineage (corpus scan → md5 agg
-    * → text re-join) ran a SECOND time under the output action — a whole
-    * extra corpus pass at scale. The keepers cache is the post-dedup key
-    * set (16 B + id per row, no payload), materialized as a byproduct of
-    * the pair materialization the operators already do; text is attached
-    * once, only to feed the LSH screen. Output rows are identical: every
-    * keeper_id exists in longEnough, so the dropped text join was 1:1.
-    * Callers release keepers before they return.
+    *  - length floor, then exact dedup as a single md5 group-by whose
+    *    `keep_latest(-id, struct(id, text))` yields the min id and its text
+    *    (every row of an fp group has the same text, so no join back to the
+    *    corpus is needed; ObjectHashAggregate with map-side combine, like
+    *    [[exactKeepBest]]). Ids must be integral.
+    *  - [[signatures]] over the keepers. Token-less keepers (≥ minTokens
+    *    tokens but no word shingle) stay in the frame with an empty `sh`:
+    *    they are kept docs, so the final anti-join must see them, and only
+    *    the band/verify side filters them out.
+    *
+    * The frame is not materialized on its own: its three consumers (the
+    * band join, the verify attach joins, the final anti-join's left side)
+    * all run under the caller's one output action, which fills the cache on
+    * first read. Callers release it after that action.
     */
-  private def exactKeepers(df: DataFrame, idCol: String, textCol: String,
-                           minTokens: Int): (DataFrame, DataFrame) = {
-    val longEnough = df.filter(
-      size(split(trim(col(textCol)), "\\s+")) >= minTokens)
-    val keepers = exact(longEnough, idCol, textCol)
-      .select(col("fp"), col("keeper_id").as(idCol), col("n_copies").as("exact_copies"))
+  private def keeperSignatures(df: DataFrame, idCol: String, textCol: String,
+                               minTokens: Int): DataFrame = {
+    val keepers = df.filter(size(split(trim(col(textCol)), "\\s+")) >= minTokens)
+      .withColumn("fp", md5(col(textCol).cast("binary")))
+      .groupBy("fp")
+      .agg(
+        graft.functions.keep_latest(-col(idCol).cast("long"),
+          struct(col(idCol).as("id"), col(textCol).as("text"))).as("keeper"),
+        count(lit(1)).as("exact_copies"))
+      .select(col("keeper.id").as("id"), col("fp"), col("exact_copies"),
+        col("keeper.text").as("text"))
+    signatures(keepers, "id", "text", Seq("fp", "exact_copies"), k = 3, n = 128, bands = 32)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (keepers, keepers.join(longEnough.select(col(idCol), col(textCol)), idCol))
   }
+
+  /** The keepers minus `dropped` (an `id` column, duplicates allowed) as
+    * (idCol, fp, exact_copies), materialized as the returned cache — the
+    * call's one action — after which `sigs` and `caches` are released.
+    */
+  private def keptRows(sigs: DataFrame, dropped: DataFrame, idCol: String,
+                       caches: DataFrame*): DataFrame =
+    materializedPairs(
+      sigs.join(dropped, Seq("id"), "left_anti")
+        .select(col("id").as(idCol), col("fp"), col("exact_copies")),
+      sigs +: caches: _*)
 
   /** The full corpus-cleaning pipeline a training-data run needs, composed
     * from the family above: length floor → exact dedup (keep min id) →
     * near-dup removal (greedy: the higher id of every verified MinHash pair
-    * is dropped). Each stage is a shuffle-partitioned join/agg — no stage
-    * materializes pairs beyond LSH candidates. The keeper key set
-    * (fp, id, copies — no payload) is persisted so the final anti-join
-    * reuses it instead of re-running the exact-dedup pass (r21). Since r22
-    * the returned frame is the ONLY cache left behind (materialized output;
-    * keepers and the verified-pair cache are released before return — the
+    * is dropped). Output: (idCol, fp, exact_copies), one row per kept doc.
+    *
+    * Shape: [[keeperSignatures]] is the one per-document cache. The band
+    * join and the sorted-merge verify read it, the verified pairs' `id_b`
+    * feeds the left-anti join against it as is (an anti-join needs no
+    * distinct right side), and the output's persist+count is the call's
+    * only action. The returned frame is the only cache left behind (the
     * CacheHygieneSpec contract); callers holding it long-term unpersist it.
     */
   def cleanCorpus(df: DataFrame, idCol: String, textCol: String,
                   minTokens: Int = 5, nearThreshold: Double = 0.5): DataFrame = {
-    val (keepers, exactKept) = exactKeepers(df, idCol, textCol, minTokens)
-    val nearPairs = minhashPairs(exactKept, idCol, textCol, threshold = nearThreshold)
-    val dropIds = nearPairs.select(col("id_b").as(idCol)).distinct()
-    // r22 (VERDICT task #2): the output key set (tiny — one row per kept
-    // doc, no payload) is materialized through the same materializedPairs
-    // discipline every other operator here uses, which lets the keepers and
-    // verified-pair caches be RELEASED before return instead of leaking
-    // into the session until somebody clears the cache manager. Rows are
-    // identical; callers holding the result long-term unpersist it.
-    materializedPairs(
-      keepers
-        .join(dropIds, Seq(idCol), "left_anti")
-        .select(col(idCol), col("fp"), col("exact_copies")),
-      keepers, nearPairs)
+    val sigs = keeperSignatures(df, idCol, textCol, minTokens)
+    val dropIds = verifiedPairs(sigs.filter(size(col("sh")) > 0), nearThreshold)
+      .select(col("id_b").as("id"))
+    keptRows(sigs, dropIds, idCol)
   }
 
   /** Connected components of an undirected pair graph via alternating
@@ -532,22 +561,22 @@ object Dedup {
     * of every pair". The two differ on hub shapes — pairs (1,3) and (2,3)
     * with 1≁2: greedy keeps 1 AND 2, CC keeps only 1 — and CC is the policy
     * a training run usually wants ("one doc per duplicate cluster").
+    *
+    * Same prelude and output as [[cleanCorpus]]. The verified pairs are
+    * persisted but not counted: [[connectedComponents]] reads them twice
+    * (its first round and its singleton pass), and its first round's action
+    * fills the cache. The signature, pair and CC caches are released after
+    * the output's persist+count.
     */
   def cleanCorpusCC(df: DataFrame, idCol: String, textCol: String,
                     minTokens: Int = 5, nearThreshold: Double = 0.5): DataFrame = {
-    val (keepers, exactKept) = exactKeepers(df, idCol, textCol, minTokens)
-    val pairs = minhashPairs(exactKept, idCol, textCol, threshold = nearThreshold)
-    val cc = connectedComponents(pairs.select("id_a", "id_b"))
-    pairs.unpersist(blocking = false) // CC output is materialized
-    val nonReps = cc.filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as(idCol))
-    // r22: same release discipline as [[cleanCorpus]] — materialize the tiny
-    // output key set, then free the keepers and CC caches before return
-    materializedPairs(
-      keepers
-        .join(nonReps, Seq(idCol), "left_anti")
-        .select(col(idCol), col("fp"), col("exact_copies")),
-      keepers, cc)
+    val sigs = keeperSignatures(df, idCol, textCol, minTokens)
+    val pairs = verifiedPairs(sigs.filter(size(col("sh")) > 0), nearThreshold)
+      .select("id_a", "id_b")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cc = connectedComponents(pairs)
+    val nonReps = cc.filter(col("doc_id") =!= col("rep")).select(col("doc_id").as("id"))
+    keptRows(sigs, nonReps, idCol, pairs, cc)
   }
 
   /** Benchmark decontamination: flag (training doc, benchmark doc) pairs

@@ -26,45 +26,47 @@ class AnnServeSpec extends AnyFunSuite with SparkTestBase {
     val centroids = Similarity.ivfCentroids(corpus, nCells = 16, refineIters = 1)
     val frozen = spark.createDataFrame(
       java.util.Arrays.asList(centroids.collect(): _*), centroids.schema)
-    val dir = java.nio.file.Files.createTempDirectory("graft_annserve").toString + "/idx"
-    Similarity.writeIndex(corpus, frozen, dir)
+    withTempDir("graft_annserve") { tmp =>
+      val dir = tmp + "/idx"
+      Similarity.writeIndex(corpus, frozen, dir)
 
-    // two micro-batches of queries: the twin copies, 3 per batch
-    val qSchema = twins.select(col("vec_id").as("qid"), col("embedding").as("qv")).schema
-    implicit val enc = org.apache.spark.sql.Encoders.row(qSchema)
-    val stream = MemoryStream[org.apache.spark.sql.Row](enc, spark)
-    val all = twins.select(col("vec_id").as("qid"), col("embedding").as("qv")).collect()
+      // two micro-batches of queries: the twin copies, 3 per batch
+      val qSchema = twins.select(col("vec_id").as("qid"), col("embedding").as("qv")).schema
+      implicit val enc = org.apache.spark.sql.Encoders.row(qSchema)
+      val stream = MemoryStream[org.apache.spark.sql.Row](enc, spark)
+      val all = twins.select(col("vec_id").as("qid"), col("embedding").as("qv")).collect()
 
-    val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Int)]]
-    val q = AnnServe.serve(spark, stream.toDF(), dir, frozen, k = 5, nProbe = 4,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)) {
-      (res: DataFrame, id: Long) =>
-        got.synchronized {
-          got(id) = res.select(col("qid").cast("long"), col("neighbor").cast("long"),
+      val got = scala.collection.mutable.Map.empty[Long, Set[(Long, Long, Int)]]
+      val q = AnnServe.serve(spark, stream.toDF(), dir, frozen, k = 5, nProbe = 4,
+        trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0)) {
+        (res: DataFrame, id: Long) =>
+          got.synchronized {
+            got(id) = res.select(col("qid").cast("long"), col("neighbor").cast("long"),
+              col("rank").cast("int"))
+              .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+          }
+      }.start()
+      try {
+        stream.addData(all.take(3).toSeq)
+        q.processAllAvailable()
+        stream.addData(all.drop(3).toSeq)
+        q.processAllAvailable()
+      } finally q.stop()
+
+      assert(got.keySet == Set(0L, 1L), s"expected two committed batches, got ${got.keySet}")
+      // per-batch parity with the cold batch probe over the same query subset
+      for ((bid, qids) <- Seq(0L -> all.take(3), 1L -> all.drop(3))) {
+        val batchQ = spark.createDataFrame(java.util.Arrays.asList(qids: _*), qSchema)
+        val expect = Similarity.probeIndex(spark, dir, batchQ, frozen, k = 5, nProbe = 4)
+          .select(col("qid").cast("long"), col("neighbor").cast("long"),
             col("rank").cast("int"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-        }
-    }.start()
-    try {
-      stream.addData(all.take(3).toSeq)
-      q.processAllAvailable()
-      stream.addData(all.drop(3).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.keySet == Set(0L, 1L), s"expected two committed batches, got ${got.keySet}")
-    // per-batch parity with the cold batch probe over the same query subset
-    for ((bid, qids) <- Seq(0L -> all.take(3), 1L -> all.drop(3))) {
-      val batchQ = spark.createDataFrame(java.util.Arrays.asList(qids: _*), qSchema)
-      val expect = Similarity.probeIndex(spark, dir, batchQ, frozen, k = 5, nProbe = 4)
-        .select(col("qid").cast("long"), col("neighbor").cast("long"),
-          col("rank").cast("int"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(got(bid) == expect, s"batch $bid diverged from the batch probe")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+        assert(got(bid) == expect, s"batch $bid diverged from the batch probe")
+      }
+      // every twin query finds its original at rank 1 through the stream
+      val rank1 = got.values.flatten.filter(_._3 == 1).map(t => t._1 -> t._2).toMap
+      for (q0 <- all.map(_.getLong(0)))
+        assert(rank1.get(q0).contains(q0 - 100000L), s"twin $q0 lost its original")
     }
-    // every twin query finds its original at rank 1 through the stream
-    val rank1 = got.values.flatten.filter(_._3 == 1).map(t => t._1 -> t._2).toMap
-    for (q0 <- all.map(_.getLong(0)))
-      assert(rank1.get(q0).contains(q0 - 100000L), s"twin $q0 lost its original")
   }
 }

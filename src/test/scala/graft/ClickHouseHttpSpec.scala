@@ -191,27 +191,28 @@ class ClickHouseHttpSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
     val stub = new Stub(failFirst = Int.MaxValue) // hard down
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ch_ckpt").toString
-    try {
-      val ms = MemoryStream[(Long, String)]
-      val schema = ms.toDF().schema
-      def start() = ms.toDF().writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(ClickHouseHttp.insertSink(
-          stub.endpoint, "http_log", schema, tries = 1, delayMs = 1))
-        .start()
-      ms.addData((1L, "a"), (2L, "b"))
-      val q1 = start()
-      intercept[Exception] { q1.processAllAvailable() }
-      q1.stop()
-      assert(stub.bodies.isEmpty, "failed insert must not be recorded")
-      // ClickHouse comes back; the SAME offsets replay from the checkpoint
-      stub.recover()
-      val q2 = start()
-      q2.processAllAvailable()
-      q2.stop()
-      val ids = stub.lines.map(_.split("\t")(0).toLong).sorted
-      assert(ids == Seq(1L, 2L), "batch must replay after recovery, exactly once")
-    } finally stub.stop()
+    withTempDir("graft_ch_ckpt") { ckpt =>
+      try {
+        val ms = MemoryStream[(Long, String)]
+        val schema = ms.toDF().schema
+        def start() = ms.toDF().writeStream
+          .option("checkpointLocation", ckpt)
+          .foreachBatch(ClickHouseHttp.insertSink(
+            stub.endpoint, "http_log", schema, tries = 1, delayMs = 1))
+          .start()
+        ms.addData((1L, "a"), (2L, "b"))
+        val q1 = start()
+        intercept[Exception] { q1.processAllAvailable() }
+        q1.stop()
+        assert(stub.bodies.isEmpty, "failed insert must not be recorded")
+        // ClickHouse comes back; the SAME offsets replay from the checkpoint
+        stub.recover()
+        val q2 = start()
+        q2.processAllAvailable()
+        q2.stop()
+        val ids = stub.lines.map(_.split("\t")(0).toLong).sorted
+        assert(ids == Seq(1L, 2L), "batch must replay after recovery, exactly once")
+      } finally stub.stop()
+    }
   }
 }

@@ -171,6 +171,102 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     assert(ids.size > originals.size / 2, "cleaning dropped too much")
   }
 
+  /** Reference for [[Dedup.cleanCorpus]] and [[Dedup.cleanCorpusCC]]: the
+    * shape before their one-action prelude — length floor → `exact` keepers
+    * (fp, min id, copies) joined back to their text → `minhashPairs` →
+    * distinct greedy drop ids (or CC non-reps) → left-anti join on the
+    * keepers.
+    */
+  private def referenceClean(df: DataFrame, cc: Boolean): DataFrame = {
+    val longEnough = df.filter(size(split(trim(col("text")), "\\s+")) >= 5)
+    val keepers = Dedup.exact(longEnough, "doc_id", "text")
+      .select(col("fp"), col("keeper_id").as("doc_id"), col("n_copies").as("exact_copies"))
+    val exactKept = keepers.join(longEnough.select(col("doc_id"), col("text")), "doc_id")
+    val pairs = Dedup.minhashPairs(exactKept, "doc_id", "text")
+    val dropIds =
+      if (cc) Dedup.connectedComponents(pairs.select("id_a", "id_b"))
+        .filter(col("doc_id") =!= col("rep")).select("doc_id")
+      else pairs.select(col("id_b").as("doc_id")).distinct()
+    keepers.join(dropIds, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("fp"), col("exact_copies"))
+  }
+
+  /** cleanCorpus and cleanCorpusCC each equal [[referenceClean]] on `df`:
+    * same column names and dtypes, same rows. Returns cleanCorpus' ids.
+    */
+  private def assertCleanMatchesReference(df: DataFrame): Set[Long] = {
+    def rows(out: DataFrame): Seq[(Long, String, Long)] =
+      out.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq.sorted
+    def dtypes(out: DataFrame) = out.schema.map(f => f.name -> f.dataType)
+    try {
+      Seq(false, true).map { cc =>
+        val got = if (cc) Dedup.cleanCorpusCC(df, "doc_id", "text")
+          else Dedup.cleanCorpus(df, "doc_id", "text")
+        val ref = referenceClean(df, cc)
+        val label = if (cc) "cleanCorpusCC" else "cleanCorpus"
+        assert(dtypes(got) == dtypes(ref), s"$label dtypes")
+        val (g, r) = (rows(got), rows(ref))
+        assert(r.nonEmpty)
+        assert(g == r, s"$label: got minus ref ${g diff r}; ref minus got ${r diff g}")
+        g.map(_._1).toSet
+      }.head
+    } finally spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("cleanCorpus and cleanCorpusCC equal the keepers-join reference on the corpus") {
+    assertCleanMatchesReference(corpus)
+  }
+
+  test("cleanCorpus and cleanCorpusCC equal the reference on planted edge cases") {
+    import spark.implicits._
+    val same = "alpha beta gamma delta epsilon zeta"
+    val split = "one two three four five six seven"
+    // five tokens for the length floor's `\\s+` split, but every character
+    // is Unicode whitespace to the shingler's tokenizer: no word shingle
+    val blank = "\u001c \u001d \u001e \u001f \u3000"
+    val toks = (0 until 40).map(i => s"tok$i")
+    // four input partitions of three rows each
+    val rows: Seq[(Long, String)] = Seq(
+      (30L, same), (7L, toks.mkString(" ")), (10L, same),   // exact group: min id 10 is not first
+      (11L, blank), (20L, same), (12L, null),               // token-less doc; null text
+      (8L, toks.take(30).mkString(" ")), (5L, split), (40L, "too short"),
+      (9L, toks.drop(10).mkString(" ")), (50L, split), (60L, toks.take(30).mkString(" ")))
+    val planted = spark.sparkContext.parallelize(rows, 4).toDF("doc_id", "text")
+    val part = planted.select(col("doc_id"), spark_partition_id().as("p"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(part(5L) != part(50L), "the split copies must sit in different input partitions")
+    assert(part(30L) == part(10L), "the exact group's first row precedes its min id")
+    val shingles = planted.filter(col("doc_id") === 11L)
+      .select(size(graft.functions.word_shingles(col("text"), 3))).head().getInt(0)
+    assert(shingles == 0, "the separator-only doc has no word shingle")
+    val kept = assertCleanMatchesReference(planted)
+    assert(kept.contains(11L), "a token-less doc past the length floor is kept")
+    assert(kept.contains(10L) && !kept.contains(20L) && !kept.contains(30L))
+    assert(kept.contains(5L) && !kept.contains(50L))
+    assert(!kept.contains(12L) && !kept.contains(40L))
+  }
+
+  test("a warm cleanCorpus call starts exactly one SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val starts = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet()
+        case _ =>
+      }
+    }
+    Dedup.cleanCorpus(corpus, "doc_id", "text").unpersist(blocking = true) // warm-up
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Dedup.cleanCorpus(corpus, "doc_id", "text")
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      assert(starts.get == 1, s"${starts.get} SQL executions for one cleanCorpus call")
+      out.unpersist(blocking = true)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("weighted minhash finds every planted exact dup at weighted jaccard 1.0") {
     val pairs = Dedup.weightedMinhashPairs(corpus, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

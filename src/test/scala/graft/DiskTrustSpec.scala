@@ -43,62 +43,63 @@ class DiskTrustSpec extends AnyFunSuite with SparkTestBase {
     val pre = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
     val back = Seq((2L, "b"), (1L, "a")).toDF("id", "v") // reordered, equal
     val prevOut = sys.props.get("graft.verify.out")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sidecar").toString
-    try {
-      sys.props("graft.verify.out") = tmp
-      val path = DiskTrust.forensicSidecar(spark,
-        Seq("pre_write" -> pre, "readback" -> back),
-        Seq("k" -> "v"), "sidecar_test")
-      assert(path == s"$tmp/sidecar_test")
-      val side = spark.read.parquet(path)
-      assert(side.columns.toSeq ==
-        Seq("frame", "column", "min_or_value", "max", "sum_xxhash64"))
-      // 2 frames × (2 cols + __row__ + __count__) + 1 env row
-      assert(side.count() == 9)
-      def rows(frame: String) = side.filter(col("frame") === frame)
-        .collect().map(r => (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
-        .sortBy(_._1).toSeq
-      // the two equal frames must produce IDENTICAL stat rows — that is the
-      // property that lets a driver red localize its divergent column
-      assert(rows("pre_write") == rows("readback"))
-      val byCol = rows("pre_write").map(r => r._1 -> r).toMap
-      assert(byCol("id")._2 == "1" && byCol("id")._3 == "2")
-      assert(byCol("v")._2 == "a" && byCol("v")._3 == "b")
-      assert(byCol("id")._4 != null && byCol("__row__")._4 != null)
-      assert(byCol("__count__")._2 == "2")
-      val env = side.filter(col("frame") === "env").head()
-      assert(env.getString(1) == "k" && env.getString(2) == "v")
+    withTempDir("graft_sidecar") { tmp =>
+      try {
+        sys.props("graft.verify.out") = tmp
+        val path = DiskTrust.forensicSidecar(spark,
+          Seq("pre_write" -> pre, "readback" -> back),
+          Seq("k" -> "v"), "sidecar_test")
+        assert(path == s"$tmp/sidecar_test")
+        val side = spark.read.parquet(path)
+        assert(side.columns.toSeq ==
+          Seq("frame", "column", "min_or_value", "max", "sum_xxhash64"))
+        // 2 frames × (2 cols + __row__ + __count__) + 1 env row
+        assert(side.count() == 9)
+        def rows(frame: String) = side.filter(col("frame") === frame)
+          .collect().map(r => (r.getString(1), r.getString(2), r.getString(3), r.getString(4)))
+          .sortBy(_._1).toSeq
+        // the two equal frames must produce IDENTICAL stat rows — that is the
+        // property that lets a driver red localize its divergent column
+        assert(rows("pre_write") == rows("readback"))
+        val byCol = rows("pre_write").map(r => r._1 -> r).toMap
+        assert(byCol("id")._2 == "1" && byCol("id")._3 == "2")
+        assert(byCol("v")._2 == "a" && byCol("v")._3 == "b")
+        assert(byCol("id")._4 != null && byCol("__row__")._4 != null)
+        assert(byCol("__count__")._2 == "2")
+        val env = side.filter(col("frame") === "env").head()
+        assert(env.getString(1) == "k" && env.getString(2) == "v")
 
-      // and a real divergence moves exactly the divergent column's checksum
-      val skew = Seq((1L, "a"), (2L, "c")).toDF("id", "v")
-      DiskTrust.forensicSidecar(spark,
-        Seq("pre_write" -> pre, "readback" -> skew), Nil, "sidecar_skew")
-      val side2 = spark.read.parquet(s"$tmp/sidecar_skew")
-      def cks(side: org.apache.spark.sql.DataFrame)(frame: String, c: String) =
-        side.filter(col("frame") === frame && col("column") === c)
-          .head().getString(4)
-      val c2 = cks(side2) _
-      assert(c2("pre_write", "id") == c2("readback", "id"),
-        "untouched column's checksum must agree")
-      assert(c2("pre_write", "v") != c2("readback", "v"),
-        "divergent column's checksum must differ")
+        // and a real divergence moves exactly the divergent column's checksum
+        val skew = Seq((1L, "a"), (2L, "c")).toDF("id", "v")
+        DiskTrust.forensicSidecar(spark,
+          Seq("pre_write" -> pre, "readback" -> skew), Nil, "sidecar_skew")
+        val side2 = spark.read.parquet(s"$tmp/sidecar_skew")
+        def cks(side: org.apache.spark.sql.DataFrame)(frame: String, c: String) =
+          side.filter(col("frame") === frame && col("column") === c)
+            .head().getString(4)
+        val c2 = cks(side2) _
+        assert(c2("pre_write", "id") == c2("readback", "id"),
+          "untouched column's checksum must agree")
+        assert(c2("pre_write", "v") != c2("readback", "v"),
+          "divergent column's checksum must differ")
 
-      // r12 ADVICE: a bit_xor checksum self-cancels on EVEN-multiplicity
-      // divergences — a row duplicated 2 extra times XORs to the same value.
-      // The sum-based checksum must move on it (multiplicity-sensitive).
-      val evenDup = pre.unionByName(Seq((2L, "b"), (2L, "b")).toDF("id", "v"))
-      DiskTrust.forensicSidecar(spark,
-        Seq("pre_write" -> pre, "readback" -> evenDup), Nil, "sidecar_evendup")
-      val side3 = spark.read.parquet(s"$tmp/sidecar_evendup")
-      val c3 = cks(side3) _
-      assert(c3("pre_write", "id") != c3("readback", "id") &&
-        c3("pre_write", "__row__") != c3("readback", "__row__"),
-        "even-multiplicity duplicate must move the sum checksum — the XOR " +
-          "blind spot this checksum replaced")
-    } finally {
-      prevOut match {
-        case Some(p) => sys.props("graft.verify.out") = p
-        case None    => sys.props.remove("graft.verify.out")
+        // r12 ADVICE: a bit_xor checksum self-cancels on EVEN-multiplicity
+        // divergences — a row duplicated 2 extra times XORs to the same value.
+        // The sum-based checksum must move on it (multiplicity-sensitive).
+        val evenDup = pre.unionByName(Seq((2L, "b"), (2L, "b")).toDF("id", "v"))
+        DiskTrust.forensicSidecar(spark,
+          Seq("pre_write" -> pre, "readback" -> evenDup), Nil, "sidecar_evendup")
+        val side3 = spark.read.parquet(s"$tmp/sidecar_evendup")
+        val c3 = cks(side3) _
+        assert(c3("pre_write", "id") != c3("readback", "id") &&
+          c3("pre_write", "__row__") != c3("readback", "__row__"),
+          "even-multiplicity duplicate must move the sum checksum — the XOR " +
+            "blind spot this checksum replaced")
+      } finally {
+        prevOut match {
+          case Some(p) => sys.props("graft.verify.out") = p
+          case None    => sys.props.remove("graft.verify.out")
+        }
       }
     }
   }

@@ -13,13 +13,14 @@ class FormatsSpec extends AnyFunSuite with SparkTestBase {
 
   private def roundTrip(name: String)(write: (DataFrame, String) => Unit,
                                       read: String => DataFrame): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_fmt_$name").toString
-    write(src, tmp)
-    val back = read(tmp)
-    assert(back.count() == src.count())
-    val a = src.orderBy("log_id").collect()
-    val b = back.orderBy("log_id").collect()
-    assert(a.sameElements(b), s"$name round trip altered rows")
+    withTempDir(s"graft_fmt_$name") { tmp =>
+      write(src, tmp)
+      val back = read(tmp)
+      assert(back.count() == src.count())
+      val a = src.orderBy("log_id").collect()
+      val b = back.orderBy("log_id").collect()
+      assert(a.sameElements(b), s"$name round trip altered rows")
+    }
   }
 
   test("orc round trip") {
@@ -36,25 +37,26 @@ class FormatsSpec extends AnyFunSuite with SparkTestBase {
 
   test("jsonl dead-letter split keeps good rows exact and corrupt lines traceable") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl_dlq").toString
-    val lines = Seq(
-      """{"doc_id": 1, "text": "alpha"}""",
-      """{"doc_id": 2, "text": "beta"}""",
-      """{"doc_id": 3, "text": "gamma" INVALID}""", // broken JSON
-      """not json at all""",
-      """{"doc_id": 5, "text": "epsilon"}""")
-    lines.toDF("value").coalesce(1).write.mode("overwrite").text(tmp)
-    val schemaFrom = Seq((0L, "")).toDF("doc_id", "text")
-    val (good, dead) = Formats.readJsonLinesWithDlq(spark, tmp, schemaFrom)
-    assert(good.count() == 3)
-    assert(good.columns.toSeq == Seq("doc_id", "text"), "no corrupt col leaks")
-    assert(good.orderBy("doc_id").collect().map(_.getString(1)).toSeq ==
-      Seq("alpha", "beta", "epsilon"))
-    val deadLines = dead.collect().map(_.getString(0)).toSet
-    assert(deadLines.size == 2, s"got $deadLines")
-    assert(deadLines.exists(_.contains("INVALID")) &&
-      deadLines.contains("not json at all"),
-      "dead lines must carry the raw text for the failure bucket")
+    withTempDir("graft_jsonl_dlq") { tmp =>
+      val lines = Seq(
+        """{"doc_id": 1, "text": "alpha"}""",
+        """{"doc_id": 2, "text": "beta"}""",
+        """{"doc_id": 3, "text": "gamma" INVALID}""", // broken JSON
+        """not json at all""",
+        """{"doc_id": 5, "text": "epsilon"}""")
+      lines.toDF("value").coalesce(1).write.mode("overwrite").text(tmp)
+      val schemaFrom = Seq((0L, "")).toDF("doc_id", "text")
+      val (good, dead) = Formats.readJsonLinesWithDlq(spark, tmp, schemaFrom)
+      assert(good.count() == 3)
+      assert(good.columns.toSeq == Seq("doc_id", "text"), "no corrupt col leaks")
+      assert(good.orderBy("doc_id").collect().map(_.getString(1)).toSeq ==
+        Seq("alpha", "beta", "epsilon"))
+      val deadLines = dead.collect().map(_.getString(0)).toSet
+      assert(deadLines.size == 2, s"got $deadLines")
+      assert(deadLines.exists(_.contains("INVALID")) &&
+        deadLines.contains("not json at all"),
+        "dead lines must carry the raw text for the failure bucket")
+    }
   }
 
   test("approximate sketches stay within error bounds of exact values") {

@@ -73,102 +73,104 @@ class LayoutSpec extends AnyFunSuite with SparkTestBase {
 
   test("compaction merges small files, preserves content, spares big ones") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    // 1 well-sized file + 40 tiny ones (the streaming-writer pathology)
-    (1L to 50000L).map(i => (i, s"payload-$i")).toDF("id", "v")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    (50001L to 54000L).map(i => (i, s"payload-$i")).toDF("id", "v")
-      .repartition(40).write.mode("append").parquet(dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    val bigBefore = files().filter(_.getLen >= 100000).map(_.getPath.getName).toSet
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().sorted
+    withTempDir("graft_compact") { dir =>
+      // 1 well-sized file + 40 tiny ones (the streaming-writer pathology)
+      (1L to 50000L).map(i => (i, s"payload-$i")).toDF("id", "v")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      (50001L to 54000L).map(i => (i, s"payload-$i")).toDF("id", "v")
+        .repartition(40).write.mode("append").parquet(dir)
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def files() = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      val bigBefore = files().filter(_.getLen >= 100000).map(_.getPath.getName).toSet
+      val before = spark.read.parquet(dir).as[(Long, String)].collect().sorted
 
-    val stats = operators.Layout.compact(spark, dir,
-      targetBytes = 200000L, sortCols = Seq("id"))
+      val stats = operators.Layout.compact(spark, dir,
+        targetBytes = 200000L, sortCols = Seq("id"))
 
-    assert(stats.smallRewritten >= 40, s"$stats")
-    assert(stats.filesAfter < stats.filesBefore / 4, s"$stats")
-    // content is exactly preserved
-    val after = spark.read.parquet(dir).as[(Long, String)].collect().sorted
-    assert(after.sameElements(before))
-    // the well-sized file was not rewritten
-    val bigAfter = files().map(_.getPath.getName).toSet
-    assert(bigBefore.subsetOf(bigAfter), "well-sized files must survive untouched")
-    // re-sorted merge keeps min/max stats tight: a point predicate on the
-    // compacted range touches at most one compacted file
-    val touched = operators.Layout.filesTouched(spark, dir, col("id") === 53000L)
-    assert(touched <= 1, s"expected tight stats after re-sort, touched $touched")
-    // idempotent: nothing small remains, second run is a no-op
-    val again = operators.Layout.compact(spark, dir, 200000L, sortCols = Seq("id"))
-    assert(again.smallRewritten == 0 || again.filesAfter == stats.filesAfter)
+      assert(stats.smallRewritten >= 40, s"$stats")
+      assert(stats.filesAfter < stats.filesBefore / 4, s"$stats")
+      // content is exactly preserved
+      val after = spark.read.parquet(dir).as[(Long, String)].collect().sorted
+      assert(after.sameElements(before))
+      // the well-sized file was not rewritten
+      val bigAfter = files().map(_.getPath.getName).toSet
+      assert(bigBefore.subsetOf(bigAfter), "well-sized files must survive untouched")
+      // re-sorted merge keeps min/max stats tight: a point predicate on the
+      // compacted range touches at most one compacted file
+      val touched = operators.Layout.filesTouched(spark, dir, col("id") === 53000L)
+      assert(touched <= 1, s"expected tight stats after re-sort, touched $touched")
+      // idempotent: nothing small remains, second run is a no-op
+      val again = operators.Layout.compact(spark, dir, 200000L, sortCols = Seq("id"))
+      assert(again.smallRewritten == 0 || again.filesAfter == stats.filesAfter)
+    }
   }
 
   test("compaction crash recovery: every leftover state repairs to one copy") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft_crash").toString
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Plant a parquet file in `dir` under an exact name.
-    def plant(name: String, lo: Long, hi: Long): Unit = {
-      val stage = java.nio.file.Files.createTempDirectory("graft_stage").toString
-      (lo to hi).map(i => (i, s"v-$i")).toDF("id", "v")
-        .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = fs.listStatus(new Path(stage))
-        .filter(_.getPath.getName.startsWith("part-")).head.getPath
-      assert(fs.rename(part, new Path(dir, name)))
-      fs.delete(new Path(stage), true)
+    withTempDir("graft_crash") { dir =>
+      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // Plant a parquet file in `dir` under an exact name.
+      def plant(name: String, lo: Long, hi: Long): Unit = {
+        withTempDir("graft_stage") { stage =>
+          (lo to hi).map(i => (i, s"v-$i")).toDF("id", "v")
+            .coalesce(1).write.mode("overwrite").parquet(stage)
+          val part = fs.listStatus(new Path(stage))
+            .filter(_.getPath.getName.startsWith("part-")).head.getPath
+          assert(fs.rename(part, new Path(dir, name)))
+        }
+      }
+      def names() = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+      def ids() = spark.read.parquet(dir).as[(Long, String)].collect()
+        .map(_._1).sorted.toSeq
+      def writeManifest(rid: String, doomed: Seq[String]): Unit = {
+        val out = fs.create(new Path(dir, s"_compact_manifest_$rid"), true)
+        try out.write(doomed.mkString("\n").getBytes("UTF-8")) finally out.close()
+      }
+      def writeIntent(rid: String): Unit =
+        fs.create(new Path(dir, s"_compact_intent_$rid"), true).close()
+
+      // State A — post-commit crash: manifest committed, doomed source still
+      // present (duplicate of the compacted file), intent + tmp left behind.
+      plant("part-src-a.parquet", 1, 100)       // doomed source
+      plant("part-compacted-aaaa0000-0.parquet", 1, 100) // its compacted copy
+      plant("part-keep.parquet", 101, 200)      // untouched survivor
+      writeIntent("aaaa0000")
+      writeManifest("aaaa0000", Seq("part-src-a.parquet"))
+      fs.mkdirs(new Path(dir, "_compact_tmp"))
+      operators.Layout.recover(fs, new Path(dir))
+      assert(ids() == (1L to 200L), "exactly one copy after post-commit repair")
+      assert(names().contains("part-compacted-aaaa0000-0.parquet"))
+      assert(!names().exists(_.startsWith("_compact")), "markers+tmp cleaned")
+
+      // State B — mid-rename crash: sources all intact, one orphan compacted
+      // duplicate renamed in, intent + tmp present, NO manifest. Sources win
+      // — and run aaaa0000's committed compacted file (same name shape, no
+      // surviving intent) must NOT be swept as an orphan.
+      plant("part-compacted-bbbb0000-0.parquet", 1, 100) // orphan duplicate
+      writeIntent("bbbb0000")
+      fs.mkdirs(new Path(dir, "_compact_tmp"))
+      operators.Layout.recover(fs, new Path(dir))
+      assert(ids() == (1L to 200L), "orphan duplicate removed, sources kept")
+      assert(!names().contains("part-compacted-bbbb0000-0.parquet"))
+      assert(names().contains("part-compacted-aaaa0000-0.parquet"),
+        "a committed run's compacted files survive another run's crash repair")
+
+      // State C — no markers at all: recovery is a strict no-op on data.
+      operators.Layout.recover(fs, new Path(dir))
+      assert(names().contains("part-compacted-aaaa0000-0.parquet"))
+      assert(ids() == (1L to 200L))
+
+      // And compact() itself runs recovery first: plant state B again and
+      // call compact — content stays single-copy.
+      plant("part-compacted-cccc0000-0.parquet", 101, 200)
+      writeIntent("cccc0000")
+      fs.mkdirs(new Path(dir, "_compact_tmp"))
+      operators.Layout.compact(spark, dir, targetBytes = 1L << 20)
+      assert(ids() == (1L to 200L), "compact() self-repairs before compacting")
     }
-    def names() = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
-    def ids() = spark.read.parquet(dir).as[(Long, String)].collect()
-      .map(_._1).sorted.toSeq
-    def writeManifest(rid: String, doomed: Seq[String]): Unit = {
-      val out = fs.create(new Path(dir, s"_compact_manifest_$rid"), true)
-      try out.write(doomed.mkString("\n").getBytes("UTF-8")) finally out.close()
-    }
-    def writeIntent(rid: String): Unit =
-      fs.create(new Path(dir, s"_compact_intent_$rid"), true).close()
-
-    // State A — post-commit crash: manifest committed, doomed source still
-    // present (duplicate of the compacted file), intent + tmp left behind.
-    plant("part-src-a.parquet", 1, 100)       // doomed source
-    plant("part-compacted-aaaa0000-0.parquet", 1, 100) // its compacted copy
-    plant("part-keep.parquet", 101, 200)      // untouched survivor
-    writeIntent("aaaa0000")
-    writeManifest("aaaa0000", Seq("part-src-a.parquet"))
-    fs.mkdirs(new Path(dir, "_compact_tmp"))
-    operators.Layout.recover(fs, new Path(dir))
-    assert(ids() == (1L to 200L), "exactly one copy after post-commit repair")
-    assert(names().contains("part-compacted-aaaa0000-0.parquet"))
-    assert(!names().exists(_.startsWith("_compact")), "markers+tmp cleaned")
-
-    // State B — mid-rename crash: sources all intact, one orphan compacted
-    // duplicate renamed in, intent + tmp present, NO manifest. Sources win
-    // — and run aaaa0000's committed compacted file (same name shape, no
-    // surviving intent) must NOT be swept as an orphan.
-    plant("part-compacted-bbbb0000-0.parquet", 1, 100) // orphan duplicate
-    writeIntent("bbbb0000")
-    fs.mkdirs(new Path(dir, "_compact_tmp"))
-    operators.Layout.recover(fs, new Path(dir))
-    assert(ids() == (1L to 200L), "orphan duplicate removed, sources kept")
-    assert(!names().contains("part-compacted-bbbb0000-0.parquet"))
-    assert(names().contains("part-compacted-aaaa0000-0.parquet"),
-      "a committed run's compacted files survive another run's crash repair")
-
-    // State C — no markers at all: recovery is a strict no-op on data.
-    operators.Layout.recover(fs, new Path(dir))
-    assert(names().contains("part-compacted-aaaa0000-0.parquet"))
-    assert(ids() == (1L to 200L))
-
-    // And compact() itself runs recovery first: plant state B again and
-    // call compact — content stays single-copy.
-    plant("part-compacted-cccc0000-0.parquet", 101, 200)
-    writeIntent("cccc0000")
-    fs.mkdirs(new Path(dir, "_compact_tmp"))
-    operators.Layout.compact(spark, dir, targetBytes = 1L << 20)
-    assert(ids() == (1L to 200L), "compact() self-repairs before compacting")
   }
 
   test("hilbert layout prunes on both dimensions, within z-order's file counts") {

@@ -158,21 +158,22 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("idempotent sink: replaying a micro-batch does not duplicate rows") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val batch = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("log_id", "payload")
-    val sink = Sinks.idempotentParquet(dir)
-    sink(batch, 0L)
-    val first = spark.read.parquet(dir).count()
-    sink(batch, 0L) // replay after simulated failure-before-commit
-    val second = spark.read.parquet(dir).count()
-    assert(first == 3, "batch written as given")
-    assert(second == 3, "replay is idempotent")
-    // a LATER batch must accumulate, not clobber earlier partitions
-    val batch2 = Seq((7L, "g"), (8L, "h")).toDF("log_id", "payload")
-    sink(batch2, 1L)
-    assert(spark.read.parquet(dir).count() == 5, "later batch clobbered earlier rows")
-    sink(batch2, 1L) // replaying the later batch is also idempotent
-    assert(spark.read.parquet(dir).count() == 5)
+    withTempDir("graft_sink") { dir =>
+      val batch = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("log_id", "payload")
+      val sink = Sinks.idempotentParquet(dir)
+      sink(batch, 0L)
+      val first = spark.read.parquet(dir).count()
+      sink(batch, 0L) // replay after simulated failure-before-commit
+      val second = spark.read.parquet(dir).count()
+      assert(first == 3, "batch written as given")
+      assert(second == 3, "replay is idempotent")
+      // a LATER batch must accumulate, not clobber earlier partitions
+      val batch2 = Seq((7L, "g"), (8L, "h")).toDF("log_id", "payload")
+      sink(batch2, 1L)
+      assert(spark.read.parquet(dir).count() == 5, "later batch clobbered earlier rows")
+      sink(batch2, 1L) // replaying the later batch is also idempotent
+      assert(spark.read.parquet(dir).count() == 5)
+    }
   }
 
   /** The sink's input for the first `n` real events, in `parts` batches:
@@ -315,33 +316,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("file-stream ETL recovers from checkpoint without loss or duplication") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_recovery")
-    val frameDir = s"$tmp/frames"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    val frames = KafkaShaped.framesFromPayloads(encodedPayloads(30), "value", "log_id")
+    withTempDir("graft_recovery") { tmp =>
+      val frameDir = s"$tmp/frames"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
+      val frames = KafkaShaped.framesFromPayloads(encodedPayloads(30), "value", "log_id")
 
-    def startQuery() = KafkaShaped.fileStream(spark, frameDir)
-      .transform(HttpLogPipeline.decodeAndAnonymize)
-      .writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        b.write.mode("append").parquet(outDir)
-      }
-      .start()
+      def startQuery() = KafkaShaped.fileStream(spark, frameDir)
+        .transform(HttpLogPipeline.decodeAndAnonymize)
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.write.mode("append").parquet(outDir)
+        }
+        .start()
 
-    frames.filter(col("offset") < 15).coalesce(1).write.mode("append").parquet(frameDir)
-    val q1 = startQuery()
-    q1.processAllAvailable(); q1.stop()
-    val afterFirst = spark.read.parquet(outDir).count()
-    assert(afterFirst == 15)
+      frames.filter(col("offset") < 15).coalesce(1).write.mode("append").parquet(frameDir)
+      val q1 = startQuery()
+      q1.processAllAvailable(); q1.stop()
+      val afterFirst = spark.read.parquet(outDir).count()
+      assert(afterFirst == 15)
 
-    // new data arrives while the pipeline is down, then it restarts from
-    // the checkpoint: nothing lost, the already-committed batch not replayed
-    frames.filter(col("offset") >= 15).coalesce(1).write.mode("append").parquet(frameDir)
-    val q2 = startQuery()
-    q2.processAllAvailable(); q2.stop()
-    val out = spark.read.parquet(outDir)
-    assert(out.count() == 30, "loss or duplication across restart")
-    assert(out.select("remote_addr").collect().forall(_.getString(0).endsWith(".x")))
+      // new data arrives while the pipeline is down, then it restarts from
+      // the checkpoint: nothing lost, the already-committed batch not replayed
+      frames.filter(col("offset") >= 15).coalesce(1).write.mode("append").parquet(frameDir)
+      val q2 = startQuery()
+      q2.processAllAvailable(); q2.stop()
+      val out = spark.read.parquet(outDir)
+      assert(out.count() == 30, "loss or duplication across restart")
+      assert(out.select("remote_addr").collect().forall(_.getString(0).endsWith(".x")))
+    }
   }
 
   test("induced crash between sink write and offset commit: replay overwrites itself") {
@@ -350,42 +352,43 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // idempotent sink makes that replay invisible — byte-identical final
     // totals with zero new data, exactly-once accumulation once new data
     // lands. This pins the mechanism the gated row certifies end-to-end.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_recovery2")
-    val framesDir = s"$tmp/frames"; val ckpt = s"$tmp/ckpt"; val sink = s"$tmp/sink"
-    val frames = KafkaShaped.framesFromPayloads(encodedPayloads(30), "value", "log_id")
-    def writeChunk(lo: Int, hi: Int): Unit =
-      frames.filter(col("offset") >= lo && col("offset") < hi)
-        .coalesce(1).write.mode("append").parquet(framesDir)
-    def snapshot() = Recovery.finalTotals(spark, sink).collect()
-      .map(_.toString).sorted.toSeq
+    withTempDir("graft_recovery2") { tmp =>
+      val framesDir = s"$tmp/frames"; val ckpt = s"$tmp/ckpt"; val sink = s"$tmp/sink"
+      val frames = KafkaShaped.framesFromPayloads(encodedPayloads(30), "value", "log_id")
+      def writeChunk(lo: Int, hi: Int): Unit =
+        frames.filter(col("offset") >= lo && col("offset") < hi)
+          .coalesce(1).write.mode("append").parquet(framesDir)
+      def snapshot() = Recovery.finalTotals(spark, sink).collect()
+        .map(_.toString).sorted.toSeq
 
-    writeChunk(0, 10); writeChunk(10, 20)
-    Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
-    val before = snapshot()
-    assert(before.nonEmpty)
+      writeChunk(0, 10); writeChunk(10, 20)
+      Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      val before = snapshot()
+      assert(before.nonEmpty)
 
-    val replayFrom = Recovery.crashBeforeCommit(ckpt)
-    // the cut must land on a DATA batch — its sink partition exists and
-    // holds rows (a no-data watermark batch would have no partition)
-    def partFiles() = Option(
-      new java.io.File(s"$sink/batch_id=$replayFrom").list()).toSeq.flatten
-      .filter(_.endsWith(".parquet")).sorted
-    val filesBefore = partFiles()
-    assert(filesBefore.nonEmpty, s"crash cut at non-data batch $replayFrom")
-    // restart with NOTHING new: the replayed batch must rewrite exactly
-    // its own partition — any duplication would change the totals, and
-    // an un-executed "replay" would leave the part files untouched
-    Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
-    assert(partFiles().nonEmpty && partFiles() != filesBefore,
-      s"batch $replayFrom not genuinely re-executed: partition untouched")
-    assert(snapshot() == before, s"replay from batch $replayFrom duplicated rows")
+      val replayFrom = Recovery.crashBeforeCommit(ckpt)
+      // the cut must land on a DATA batch — its sink partition exists and
+      // holds rows (a no-data watermark batch would have no partition)
+      def partFiles() = Option(
+        new java.io.File(s"$sink/batch_id=$replayFrom").list()).toSeq.flatten
+        .filter(_.endsWith(".parquet")).sorted
+      val filesBefore = partFiles()
+      assert(filesBefore.nonEmpty, s"crash cut at non-data batch $replayFrom")
+      // restart with NOTHING new: the replayed batch must rewrite exactly
+      // its own partition — any duplication would change the totals, and
+      // an un-executed "replay" would leave the part files untouched
+      Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      assert(partFiles().nonEmpty && partFiles() != filesBefore,
+        s"batch $replayFrom not genuinely re-executed: partition untouched")
+      assert(snapshot() == before, s"replay from batch $replayFrom duplicated rows")
 
-    // new data after recovery accumulates exactly once
-    writeChunk(20, 30)
-    Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
-    val after = Recovery.finalTotals(spark, sink)
-      .agg(sum("requests")).collect().head.getLong(0)
-    assert(after == 30, s"expected 30 total requests, got $after")
+      // new data after recovery accumulates exactly once
+      writeChunk(20, 30)
+      Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      val after = Recovery.finalTotals(spark, sink)
+        .agg(sum("requests")).collect().head.getLong(0)
+      assert(after == 30, s"expected 30 total requests, got $after")
+    }
   }
 
   test("crashBeforeCommit cuts source logs loudly: compacted entries refuse, plain entries must delete") {
@@ -395,60 +398,62 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // ALL history) silently survived, leaving the source log AHEAD of the
     // truncated offset log on restart. The cut must now fail loudly on a
     // compacted entry and require success on a plain one.
-    def scaffold(): java.nio.file.Path = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cut")
-      def put(rel: String, content: String): Unit = {
-        val p = tmp.resolve(rel)
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.writeString(p, content)
+    withTempDir("graft_cut") { root =>
+      def scaffold(): java.nio.file.Path = {
+        val tmp = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(root), "cut")
+        def put(rel: String, content: String): Unit = {
+          val p = tmp.resolve(rel)
+          java.nio.file.Files.createDirectories(p.getParent)
+          java.nio.file.Files.writeString(p, content)
+        }
+        // batch 1 advances the source offset (DATA), batch 2 repeats it
+        // (no-data watermark batch) → the cut lands at 1 and erases 2
+        put("offsets/0", "v1\n{\"watermark\":0}\n{\"logOffset\":0}")
+        put("offsets/1", "v1\n{\"watermark\":1}\n{\"logOffset\":1}")
+        put("offsets/2", "v1\n{\"watermark\":2}\n{\"logOffset\":1}")
+        Seq(0, 1, 2).foreach(i => put(s"commits/$i", "v1\n{}"))
+        tmp
       }
-      // batch 1 advances the source offset (DATA), batch 2 repeats it
-      // (no-data watermark batch) → the cut lands at 1 and erases 2
-      put("offsets/0", "v1\n{\"watermark\":0}\n{\"logOffset\":0}")
-      put("offsets/1", "v1\n{\"watermark\":1}\n{\"logOffset\":1}")
-      put("offsets/2", "v1\n{\"watermark\":2}\n{\"logOffset\":1}")
-      Seq(0, 1, 2).foreach(i => put(s"commits/$i", "v1\n{}"))
-      tmp
-    }
 
-    // RED: the to-be-erased entry was compacted — refuse the half-cut
-    val red = scaffold()
-    java.nio.file.Files.createDirectories(red.resolve("sources/0"))
-    java.nio.file.Files.writeString(red.resolve("sources/0/2.compact"), "v1\n{}")
-    val e = intercept[IllegalArgumentException] {
-      Recovery.crashBeforeCommit(red.toString)
-    }
-    assert(e.getMessage.contains("compacted"), e.getMessage)
-    // r12 ADVICE (medium): the refusal must leave the checkpoint UNTOUCHED —
-    // the pre-r13 shape deleted offsets/commits entries before discovering
-    // the compacted source entry, persisting exactly the half-cut
-    // (offsets truncated, .compact still ahead) the check exists to prevent.
-    // The cut now pre-scans every to-be-erased id for .compact entries
-    // BEFORE deleting anything.
-    Seq("offsets/0", "offsets/1", "offsets/2",
-        "commits/0", "commits/1", "commits/2",
-        "sources/0/2.compact").foreach { rel =>
-      assert(java.nio.file.Files.exists(red.resolve(rel)),
-        s"refusal must not delete $rel — checkpoint left half-cut")
-    }
+      // RED: the to-be-erased entry was compacted — refuse the half-cut
+      val red = scaffold()
+      java.nio.file.Files.createDirectories(red.resolve("sources/0"))
+      java.nio.file.Files.writeString(red.resolve("sources/0/2.compact"), "v1\n{}")
+      val e = intercept[IllegalArgumentException] {
+        Recovery.crashBeforeCommit(red.toString)
+      }
+      assert(e.getMessage.contains("compacted"), e.getMessage)
+      // r12 ADVICE (medium): the refusal must leave the checkpoint UNTOUCHED —
+      // the pre-r13 shape deleted offsets/commits entries before discovering
+      // the compacted source entry, persisting exactly the half-cut
+      // (offsets truncated, .compact still ahead) the check exists to prevent.
+      // The cut now pre-scans every to-be-erased id for .compact entries
+      // BEFORE deleting anything.
+      Seq("offsets/0", "offsets/1", "offsets/2",
+          "commits/0", "commits/1", "commits/2",
+          "sources/0/2.compact").foreach { rel =>
+        assert(java.nio.file.Files.exists(red.resolve(rel)),
+          s"refusal must not delete $rel — checkpoint left half-cut")
+      }
 
-    // GREEN: a plain entry is erased with the offsets entry, and the cut
-    // returns the data batch
-    val green = scaffold()
-    java.nio.file.Files.createDirectories(green.resolve("sources/0"))
-    Seq("0", "1", "2").foreach(i =>
-      java.nio.file.Files.writeString(green.resolve(s"sources/0/$i"), "v1\n{}"))
-    val cutAt = Recovery.crashBeforeCommit(green.toString)
-    assert(cutAt == 1L)
-    assert(!java.nio.file.Files.exists(green.resolve("sources/0/2")),
-      "trailing source-log entry must be erased with its offsets entry")
-    assert(java.nio.file.Files.exists(green.resolve("sources/0/1")) &&
-      java.nio.file.Files.exists(green.resolve("sources/0/0")),
-      "entries at and below the cut must survive")
-    assert(!java.nio.file.Files.exists(green.resolve("offsets/2")) &&
-      java.nio.file.Files.exists(green.resolve("offsets/1")))
-    assert(!java.nio.file.Files.exists(green.resolve("commits/1")),
-      "the data batch's own commit marker must be deleted so it replays")
+      // GREEN: a plain entry is erased with the offsets entry, and the cut
+      // returns the data batch
+      val green = scaffold()
+      java.nio.file.Files.createDirectories(green.resolve("sources/0"))
+      Seq("0", "1", "2").foreach(i =>
+        java.nio.file.Files.writeString(green.resolve(s"sources/0/$i"), "v1\n{}"))
+      val cutAt = Recovery.crashBeforeCommit(green.toString)
+      assert(cutAt == 1L)
+      assert(!java.nio.file.Files.exists(green.resolve("sources/0/2")),
+        "trailing source-log entry must be erased with its offsets entry")
+      assert(java.nio.file.Files.exists(green.resolve("sources/0/1")) &&
+        java.nio.file.Files.exists(green.resolve("sources/0/0")),
+        "entries at and below the cut must survive")
+      assert(!java.nio.file.Files.exists(green.resolve("offsets/2")) &&
+        java.nio.file.Files.exists(green.resolve("offsets/1")))
+      assert(!java.nio.file.Files.exists(green.resolve("commits/1")),
+        "the data batch's own commit marker must be deleted so it replays")
+    }
   }
 
   test("built-in session_window: streaming sessions equal the batch operator") {
@@ -576,32 +581,34 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // snapshot equals the LM trained on the full corpus in one batch
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_lm_inc").toString
-    val b0 = Seq((1L, "the cat sat"), (2L, "the dog sat"))
-    val b1 = Seq((3L, "the cat flew home"))
-    val sink = graft.streaming.LmMaintenance.countsSink(dir, "text")
+    withTempDir("graft_lm_inc") { root =>
+      val dir = s"$root/sink"
+      val b0 = Seq((1L, "the cat sat"), (2L, "the dog sat"))
+      val b1 = Seq((3L, "the cat flew home"))
+      val sink = graft.streaming.LmMaintenance.countsSink(dir, "text")
 
-    val ms = MemoryStream[(Long, String)]
-    val q = ms.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                     id: Long) => sink(df.toDF(), id))
-      .option("checkpointLocation", s"$dir-ckpt").start()
-    try {
-      ms.addData(b0: _*); q.processAllAvailable()
-      ms.addData(b1: _*); q.processAllAvailable()
-    } finally q.stop()
-    // simulate the at-least-once failure: batch 1 is REPLAYED after the fact
-    sink(b1.toDF("doc_id", "text"), 1L)
+      val ms = MemoryStream[(Long, String)]
+      val q = ms.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                       id: Long) => sink(df.toDF(), id))
+        .option("checkpointLocation", s"$root/ckpt").start()
+      try {
+        ms.addData(b0: _*); q.processAllAvailable()
+        ms.addData(b1: _*); q.processAllAvailable()
+      } finally q.stop()
+      // simulate the at-least-once failure: batch 1 is REPLAYED after the fact
+      sink(b1.toDF("doc_id", "text"), 1L)
 
-    val (lm, oov) = graft.streaming.LmMaintenance.currentLm(spark, dir)
-    val (ref, refOov) = graft.streaming.QualityGate.trainLm(
-      (b0 ++ b1).toDF("doc_id", "text"), "text")
-    try {
-      val got = lm.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-      val want = ref.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-      assert(got == want, s"merged snapshot must equal one-shot LM\n$got\n$want")
-      assert(math.abs(oov - refOov) < 1e-12)
-    } finally ref.unpersist(blocking = false)
+      val (lm, oov) = graft.streaming.LmMaintenance.currentLm(spark, dir)
+      val (ref, refOov) = graft.streaming.QualityGate.trainLm(
+        (b0 ++ b1).toDF("doc_id", "text"), "text")
+      try {
+        val got = lm.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
+        val want = ref.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
+        assert(got == want, s"merged snapshot must equal one-shot LM\n$got\n$want")
+        assert(math.abs(oov - refOov) < 1e-12)
+      } finally ref.unpersist(blocking = false)
+    }
   }
 
   test("stateful sessionization closes sessions on gap and on watermark timeout") {

@@ -10,27 +10,28 @@ import graft.telemetry.Observability
 class TotalsTableSpec extends AnyFunSuite with SparkTestBase {
 
   test("monthly-partitioned totals prune partitions on time-range reads") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_totals").toString
-    val hl = HttpLog.view(Tables.events(spark, sfDir))
-    val totals = HttpLogPipeline.windowedTotals(hl)
-      .select(col("window.start").as("ts_hour"), col("resource_id"),
-        col("response_status"), col("cache_status"), col("remote_addr"),
-        col("requests"), col("total_bytes"), col("total_time_milli"))
-    TotalsTable.write(totals, tmp)
+    withTempDir("graft_totals") { tmp =>
+      val hl = HttpLog.view(Tables.events(spark, sfDir))
+      val totals = HttpLogPipeline.windowedTotals(hl)
+        .select(col("window.start").as("ts_hour"), col("resource_id"),
+          col("response_status"), col("cache_status"), col("remote_addr"),
+          col("requests"), col("total_bytes"), col("total_time_milli"))
+      TotalsTable.write(totals, tmp)
 
-    val pruned = TotalsTable.readMonth(spark, tmp, "202401")
-    val plan = pruned.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: [isnotnull(ym"), s"no partition pruning:\n$plan")
-    // events are all Jan 2024, so the pruned read sees everything
-    assert(pruned.count() == totals.count())
-    assert(TotalsTable.readMonth(spark, tmp, "202312").count() == 0)
+      val pruned = TotalsTable.readMonth(spark, tmp, "202401")
+      val plan = pruned.queryExecution.executedPlan.toString()
+      assert(plan.contains("PartitionFilters: [isnotnull(ym"), s"no partition pruning:\n$plan")
+      // events are all Jan 2024, so the pruned read sees everything
+      assert(pruned.count() == totals.count())
+      assert(TotalsTable.readMonth(spark, tmp, "202312").count() == 0)
 
-    // dashboard query on the pre-aggregate: totals for one (resource, month)
-    val one = pruned.filter(col("resource_id") === 7)
-      .groupBy("resource_id").agg(sum("total_bytes").as("b")).collect()
-    val direct = hl.filter(col("resource_id") === 7)
-      .agg(sum("bytes_sent")).collect().head.getLong(0)
-    assert(one.head.getLong(1) == direct, "pre-aggregate must reconcile with raw logs")
+      // dashboard query on the pre-aggregate: totals for one (resource, month)
+      val one = pruned.filter(col("resource_id") === 7)
+        .groupBy("resource_id").agg(sum("total_bytes").as("b")).collect()
+      val direct = hl.filter(col("resource_id") === 7)
+        .agg(sum("bytes_sent")).collect().head.getLong(0)
+      assert(one.head.getLong(1) == direct, "pre-aggregate must reconcile with raw logs")
+    }
   }
 
   test("observed metrics report rows, bytes, server errors in-stream") {

@@ -9,6 +9,7 @@ away everything that varies run-to-run without being a plan-shape change —
 expression ids (#123L), node numbers ((12) at detail-line starts and as the
 tree-line suffix, NOT arbitrary parenthesized integer literals), plan_id=,
 object addresses (@7f3a...), synthetic lambda class names, file: locations,
+RDD call-site line numbers (`at Dedup.scala:459`; the file name stays),
 per-process scratch roots, and Spark log lines — then reports which queries'
 plans genuinely changed. This is the mechanical backing for the PLANS.md
 header claim "shape-diff vs the previous regen: exactly N intended changes";
@@ -69,6 +70,9 @@ def normalize(line: str, numeric_args_op: bool = False) -> str:
     line = re.sub(r"\bSubquery:\d+\b", "Subquery:N", line)
     line = re.sub(r"plan_id=\d+", "", line)
     line = re.sub(r"RDD\[\d+\]", "RDD[N]", line)  # per-session RDD counter
+    # an RDD's call site (`createDataFrame at Dedup.scala:459`) moves with
+    # any edit above it in the source file; the file name stays visible
+    line = re.sub(r"\b(at \w+\.scala):\d+", r"\1:N", line)
     # whole-stage-codegen stage ids renumber with AQE stage scheduling
     # order; the WholeStageCodegen detail block's sole argument IS that id,
     # and a *QueryStage block's sole argument is its AQE stage id. Those are
@@ -275,12 +279,17 @@ Arguments: 25
     # QueryStage's stage id, but a GENUINE literal (r14 ADVICE case)
     limit = base.replace("Arguments: 25", "Arguments: 50")
     drift = base.split("========== q2")[0]
+    # an edit above an RDD's creation site moves only its line number
+    callsite_line = base.replace("at D.scala:1,", "at D.scala:42,")
+    callsite_file = base.replace("at D.scala:1,", "at E.scala:1,")
     cases = [  # (other_content, expected_exit, label)
         (base, 0, "identity"),
         (noise, 0, "renumber/noise-invisible (incl. QueryStage stage id)"),
         (literal, 1, "literal-visible"),
         (limit, 1, "bare-limit-Arguments-visible"),
         (drift, 2, "drift-bit"),
+        (callsite_line, 0, "RDD call-site line-invisible"),
+        (callsite_file, 1, "RDD call-site file-visible"),
     ]
     failures = 0
     with tempfile.TemporaryDirectory() as d:
