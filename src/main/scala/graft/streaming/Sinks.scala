@@ -44,12 +44,18 @@ object Sinks {
     * lib.rs:99-116. Reading `path` discovers `batch_id` as a partition
     * column. The batch id never enters the plan as a literal, so every
     * micro-batch reuses the same generated code.
+    *
+    * The batch is written as one file (one per `partitionBy` value): a
+    * foreachBatch batch runs in the stream's cloned session, where AQE is
+    * off, so without the `coalesce(1)` an aggregated batch writes one file
+    * per shuffle partition, and every later read opens them all. The
+    * reference's sink is the same shape: one batched insert per batch.
     */
   def idempotentParquet(path: String, limiter: Option[RateLimiter] = None,
                         partitionBy: Seq[String] = Nil)
       : (DataFrame, Long) => Unit = { (batch, batchId) =>
     limiter.foreach(_.acquire())
-    batch.write
+    batch.coalesce(1).write
       .mode("overwrite")
       .partitionBy(partitionBy: _*)
       .parquet(s"$path/batch_id=$batchId")

@@ -391,6 +391,65 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** Three frame files of 20 events each in `framesDir`, one per
+    * micro-batch under [[Recovery.runUntilDrained]].
+    */
+  private def writeThreeFrameFiles(framesDir: String): Unit = {
+    val frames = KafkaShaped.framesFromPayloads(encodedPayloads(60), "value", "log_id")
+    Seq((0, 20), (20, 40), (40, 60)).foreach { case (lo, hi) =>
+      frames.filter(col("offset") >= lo && col("offset") < hi)
+        .coalesce(1).write.mode("append").parquet(framesDir)
+    }
+  }
+
+  test("totals sink on a real stream: one parquet file per committed batch") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    withTempDir("graft_sink_files") { tmp =>
+      val framesDir = s"$tmp/frames"; val ckpt = s"$tmp/ckpt"; val sink = s"$tmp/sink"
+      writeThreeFrameFiles(framesDir)
+      Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      val committed = new java.io.File(s"$ckpt/commits").list()
+        .filter(_.forall(_.isDigit)).map(_.toLong).sorted.toSeq
+      val batchDirs = new java.io.File(sink).listFiles()
+        .filter(_.getName.startsWith("batch_id=")).sortBy(_.getName)
+      assert(committed.size >= 3, s"expected one batch per frame file: $committed")
+      assert(batchDirs.map(_.getName.stripPrefix("batch_id=").toLong).sorted.toSeq == committed)
+      batchDirs.foreach { d =>
+        val parts = d.list().filter(_.endsWith(".parquet")).toSeq
+        assert(parts.size == 1, s"${d.getName} holds ${parts.size} parquet files")
+      }
+      assert(Recovery.finalTotals(spark, sink).agg(sum("requests")).head().getLong(0) == 60)
+    }
+  }
+
+  test("a drained stream starts no Hadoop shell process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import scala.jdk.CollectionConverters._
+    val local = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
+    assert(local.isInstanceOf[graft.io.ForkFreeLocalFileSystem], local.getClass)
+    withTempDir("graft_forks") { tmp =>
+      val framesDir = s"$tmp/frames"; val ckpt = s"$tmp/ckpt"; val sink = s"$tmp/sink"
+      writeThreeFrameFiles(framesDir)
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try Recovery.runUntilDrained(spark, framesDir, ckpt, sink)
+      finally rec.stop()
+      val jfr = java.nio.file.Paths.get(s"$tmp/forks.jfr")
+      rec.dump(jfr)
+      rec.close()
+      val shell = RecordingFile.readAllEvents(jfr).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
+      assert(shell.size == 0, "Hadoop shell processes, e.g. " +
+        shell.map(_.getString("command")).distinct.take(3).mkString("; "))
+      assert(Recovery.finalTotals(spark, sink).agg(sum("requests")).head().getLong(0) == 60)
+    }
+  }
+
   test("crashBeforeCommit cuts source logs loudly: compacted entries refuse, plain entries must delete") {
     // r12 ADVICE: erased trailing batches' per-source file-log entries used
     // a discarded del(...) that matched only plain numeric names — a
