@@ -17,6 +17,14 @@ import org.apache.spark.sql.SparkSession
   * | SPARK_GRAFT_CPUS                | 32         | local[N] + shuffle.partitions |
   * | SPARK_GRAFT_OBJ_AGG_FALLBACK    | 1048576    | ObjectHashAggregate sort-fallback keys |
   *
+  * These settings are fixed when the session is built. Operators do not
+  * set and restore session confs around their work: a window on a shared
+  * session leaks into every plan built concurrently with it. An operator
+  * that needs a plan property gets it from the plan itself, as Graph's
+  * numbered edge repartition keeps its cache partitioning under
+  * `canChangeCachedPlanOutputPartitioning=true`. PlanGlobalsSpec pins the
+  * few places that write the session conf.
+  *
   * Two fixed Hadoop defaults, `spark.hadoop.fs.file.impl` and
   * `spark.hadoop.fs.AbstractFileSystem.file.impl`, swap the `file:`
   * filesystem for [[graft.io.ForkFreeLocalFileSystem]] and
@@ -87,37 +95,16 @@ object GraftSession {
     // stages cannot coalesce — ProfileBench measured 32-task stages moving
     // ~200 KB (c06 stage: 910 ms of task time for 230 ms of CPU, pure
     // launch overhead; the same pattern in every materializedPairs call).
-    // Scale-adaptive by construction (AQE sizes from runtime bytes); no
-    // consumer here relies on a cache's physical partitioning (the pair
-    // caches are joined/aggregated through their own exchanges).
+    // Scale-adaptive by construction (AQE sizes from runtime bytes). The
+    // pair caches are joined/aggregated through their own exchanges; the
+    // one cache whose partitioning IS the optimization (Graph's edge list)
+    // uses a numbered repartition, which AQE never coalesces, so it keeps
+    // its partitioning under this setting without a conf change.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
       classOf[graft.io.ForkFreeLocalFs].getName)
-
-  /** Run `body` with cached-plan AQE re-partitioning OFF, so frames
-    * persisted inside keep their exchange-established output partitioning
-    * (the upstream default). The session default above is `true` — caches
-    * whose consumers run their own exchanges coalesce their tiny reduce
-    * partitions adaptively — but a cache whose PARTITIONING is the
-    * optimization (Graph.pageRank's src-partitioned edge list, where every
-    * iteration join must be exchange-free above the cache scan) must opt
-    * out, or AQE's coalesced final stage degrades the cache's reported
-    * partitioning and the consumer re-shuffles the cached rows. The conf is
-    * read when the plan is cached (persist call), so the scope must cover
-    * the persist itself; covering the first materialization too is safe.
-    */
-  def withStableCachePartitioning[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
 
   /** Local session: `local[cpus]` with `cpus` shuffle partitions, sized by
     * SPARK_GRAFT_CPUS unless the caller passes a count. The harness mains

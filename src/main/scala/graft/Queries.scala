@@ -2573,11 +2573,10 @@ object Queries {
       // 1473 groups at sf0.001)
       val lineCents = expr(
         "CAST(round(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)")
-      def joinAgg() = operators.Bucketing
-        .colocatedJoin(s, "b50_lineitem", "b50_orders", Seq("okey"))
-        .groupBy(col("okey"), col("o_orderpriority"))
+      def agg(j: DataFrame) = j.groupBy(col("okey"), col("o_orderpriority"))
         .agg(sum(lineCents).as("revenue_cents"))
-      val joined = joinAgg()
+      val joined = agg(operators.Bucketing
+        .colocatedJoin(s, "b50_lineitem", "b50_orders", Seq("okey")))
       import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeLike}
       val shuffles = physicalNodes(joined.queryExecution.executedPlan)
         .collect { case e: ShuffleExchangeLike => e }
@@ -2590,12 +2589,11 @@ object Queries {
       // plan: with broadcast priced out, zero exchanges of ANY kind —
       // the buckets are the partitions on both sides, and the bucket-key
       // aggregate rides the same partitioning. Plan-only check; the
-      // returned frame keeps the cost-based plan.
-      val prevThreshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val strictPlan = try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joinAgg().queryExecution.executedPlan
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      // returned frame keeps the cost-based plan. A merge hint prices the
+      // broadcast out for this one join, leaving the shared session's
+      // conf alone.
+      val strictPlan = agg(s.table("b50_lineitem").hint("merge")
+        .join(s.table("b50_orders"), Seq("okey"))).queryExecution.executedPlan
       val exchanges = physicalNodes(strictPlan).collect { case e: Exchange => e }
       require(exchanges.isEmpty,
         s"co-located plan must be exchange-free with broadcast off:\n$strictPlan")

@@ -25,15 +25,21 @@ import org.apache.spark.storage.StorageLevel
   * so a lost cached block recomputes instead of stranding the job.
   *
   * Partitioning discipline: the edge list is hash-partitioned by `src`
-  * BEFORE it is persisted, so the cached `InMemoryRelation` reports
-  * `hashpartitioning(src)` as its output partitioning and every
-  * iteration's `edges ⋈ ranks ON src = node` (and the `deg` groupBy and
-  * the initial-rank distinct, both keyed on src) satisfies its required
-  * distribution from the cache — once the rank vector outgrows broadcast
-  * (the 100 TB regime), each iteration shuffles ONLY the |nodes|-row rank
-  * vector, never the edge list. GraphSpec asserts the plan shape: with
-  * broadcast disabled, no Exchange sits above the edge-side
-  * InMemoryTableScan in the iteration join.
+  * BEFORE it is persisted, into the session's `spark.sql.shuffle.partitions`
+  * buckets. The NUMBERED repartition is what keeps that partitioning in the
+  * cache: AQE never coalesces a repartition with an explicit count, so even
+  * under the session's `canChangeCachedPlanOutputPartitioning=true` (which
+  * lets AQE re-plan inside cached plans) the cached `InMemoryRelation`
+  * reports `hashpartitioning(src, N)` as its output partitioning. A bare
+  * `repartition(col)` would be coalesced, and the cache would then report a
+  * partitioning no join can reuse. Every iteration's
+  * `edges ⋈ ranks ON src = node` (and the `deg` groupBy, keyed on src)
+  * satisfies its required distribution from the cache — once the rank
+  * vector outgrows broadcast (the 100 TB regime), each iteration shuffles
+  * ONLY the |nodes|-row rank vector, never the edge list. GraphSpec
+  * asserts the plan shape: with broadcast disabled, no Exchange reads the
+  * edge-side InMemoryTableScan directly, in one iteration join or in any
+  * round of either entry point.
   *
   * Returns a PERSISTED frame (the Bm25.search hand-back contract): every
   * internal cache is released before return; the caller (or Verify/Bench's
@@ -47,65 +53,12 @@ object Graph {
     * every node has out-degree ≥ 1 — no dangling-mass correction term.
     */
   def pageRank(spark: SparkSession, lineitem: DataFrame, orders: DataFrame,
-               iterations: Int = 3): DataFrame = {
-    // r22: the edge/deg caches are the one place whose PARTITIONING is the
-    // optimization (every iteration join must be exchange-free above the
-    // cache scan — the scaladoc's partitioning discipline), so their persist
-    // opts out of the session's cached-plan AQE default, which would let a
-    // coalesced final stage degrade the cache's reported partitioning and
-    // re-shuffle the cached edges every iteration. GraphSpec pins the shape.
-    val (edges, deg, n) = graft.GraftSession.withStableCachePartitioning(spark) {
-      val e = edgeFrame(lineitem, orders).persist(StorageLevel.MEMORY_AND_DISK)
-      // deg is computed ONCE and persisted (|nodes| rows, 16 B each): without
-      // this, every iteration's `.join(deg, "src")` re-aggregated the full
-      // cached edge list — 2 edge scans per iteration instead of 1 (measured
-      // at the 100× graph probe; see SURVEY §6). Its hash partitioning (by
-      // src, inherited from the edge cache's, exchange-free — GraphSpec)
-      // survives into its own InMemoryRelation, so iteration joins still
-      // need no deg-side exchange. deg.count() doubles as the node count
-      // (every node has out-degree ≥ 1 by symmetric construction) and
-      // materializes both caches.
-      val d = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      (e, d, d.count())
-    }
-    if (n == 0) { // empty input: no nodes to rank (and nothing to divide by)
-      deg.unpersist(blocking = false)
-      edges.unpersist(blocking = false)
-      return spark.range(0).select(
-        lit("customer").as("kind"), col("id").as("key"), col("id").as("rank_e12"))
-    }
-    val scale = 1000000000000L
-    val teleport = (15L * scale / 100) / n
-
-    def iterate(ranks: DataFrame): DataFrame = step(edges, deg, teleport)(ranks)
-
-    // deg already holds one row per node — the initial uniform rank vector
-    // derives from it instead of a third distinct-scan of the edge cache
-    var ranks = deg.select(col("src").as("node")).withColumn("r", lit(scale / n))
-    var prevCache: Option[DataFrame] = None
-    for (_ <- 1 until iterations) {
-      val p = iterate(ranks).persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize so the previous round can release
-      prevCache.foreach(_.unpersist(blocking = false))
-      prevCache = Some(p)
-      ranks = spark.createDataFrame(p.rdd, p.schema) // truncate plan lineage
-    }
-    val out = iterate(ranks).select(
-      when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
-      expr("node div 2").as("key"), col("r").as("rank_e12"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before the inputs it reads are released
-    prevCache.foreach(_.unpersist(blocking = false))
-    deg.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    out
-  }
+               iterations: Int = 3): DataFrame =
+    rank(spark, lineitem, orders, iterations, tolE12 = None)._1
 
   /** [[pageRank]] with a CONVERGENCE stopping criterion instead of a fixed
     * round count — the production mode (real runs iterate until the rank
-    * vector stops moving, not for a magic constant). Same exact-integer
-    * arithmetic, same persist/truncate/partition-once discipline, same
+    * vector stops moving, not for a magic constant). Same loop, same
     * [[step]]; the only addition is the per-round convergence probe:
     * `max |r_k − r_{k−1}|`, ONE join of two |nodes|-row persisted rank
     * vectors that are both hash-partitioned by `node` (inherited from the
@@ -126,47 +79,76 @@ object Graph {
                     tolE12: Long = 1000000L, maxIterations: Int = 20)
       : (DataFrame, Int) = {
     require(tolE12 >= 0 && maxIterations >= 1, "pageRankUntil bounds")
+    rank(spark, lineitem, orders, maxIterations, Some(tolE12))
+  }
+
+  /** The one rank loop behind [[pageRank]] and [[pageRankUntil]]: at most
+    * `maxRounds` rounds (at least one), stopping early once a round moves
+    * no rank by more than `tolE12`. Without a tolerance no probe runs and
+    * the last round is not persisted on its own: the output persist runs
+    * it, so a fixed-round call spends no extra job.
+    */
+  private def rank(spark: SparkSession, lineitem: DataFrame, orders: DataFrame,
+                   maxRounds: Int, tolE12: Option[Long]): (DataFrame, Int) = {
     val edges = edgeFrame(lineitem, orders).persist(StorageLevel.MEMORY_AND_DISK)
+    // deg is computed ONCE and persisted (|nodes| rows, 16 B each): without
+    // this, every iteration's `.join(deg, "src")` re-aggregated the full
+    // cached edge list — 2 edge scans per iteration instead of 1 (measured
+    // at the 100× graph probe; see SURVEY §6). Its hash partitioning (by
+    // src, inherited from the edge cache's, exchange-free — GraphSpec)
+    // survives into its own InMemoryRelation, so iteration joins still
+    // need no deg-side exchange. deg.count() doubles as the node count
+    // (every node has out-degree ≥ 1 by symmetric construction) and
+    // materializes both caches.
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = deg.count()
-    if (n == 0) {
+    def release(): Unit = {
       deg.unpersist(blocking = false)
       edges.unpersist(blocking = false)
+    }
+    if (n == 0) { // empty input: no nodes to rank (and nothing to divide by)
+      release()
       return (spark.range(0).select(
         lit("customer").as("kind"), col("id").as("key"), col("id").as("rank_e12")), 0)
     }
     val scale = 1000000000000L
     val teleport = (15L * scale / 100) / n
+    val iterate = step(edges, deg, teleport) _
+    // deg already holds one row per node — the initial uniform rank vector
+    // derives from it instead of a third distinct-scan of the edge cache
     var ranks = deg.select(col("src").as("node")).withColumn("r", lit(scale / n))
     var prevCache: Option[DataFrame] = None
-    var iters = 0
+    var rounds = 0
     var delta = Long.MaxValue
-    while (iters < maxIterations && delta > tolE12) {
-      val next = step(edges, deg, teleport)(ranks).persist(StorageLevel.MEMORY_AND_DISK)
+    val persistedRounds = if (tolE12.isEmpty) maxRounds - 1 else maxRounds
+    while (rounds < persistedRounds && tolE12.forall(delta > _)) {
+      val next = iterate(ranks).persist(StorageLevel.MEMORY_AND_DISK)
       next.count() // materialize so the previous round can release
-      delta = next.join(ranks.withColumnRenamed("r", "r0"), "node")
-        .agg(max(abs(col("r") - col("r0")))).collect().head.getLong(0)
+      if (tolE12.isDefined)
+        delta = next.join(ranks.withColumnRenamed("r", "r0"), "node")
+          .agg(max(abs(col("r") - col("r0")))).collect().head.getLong(0)
       prevCache.foreach(_.unpersist(blocking = false))
       prevCache = Some(next)
-      ranks = spark.createDataFrame(next.rdd, next.schema) // truncate lineage
-      iters += 1
+      ranks = spark.createDataFrame(next.rdd, next.schema) // truncate plan lineage
+      rounds += 1
     }
+    if (tolE12.isEmpty) { ranks = iterate(ranks); rounds += 1 }
     val out = ranks.select(
       when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
       expr("node div 2").as("key"), col("r").as("rank_e12"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     out.count() // materialize before the inputs it reads are released
     prevCache.foreach(_.unpersist(blocking = false))
-    deg.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    (out, iters)
+    release()
+    (out, rounds)
   }
 
   /** Symmetric edge list (both directions of every distinct trading pair),
-    * hash-partitioned by `src` so the caller's persist captures that
-    * partitioning — NOT persisted here (pageRank persists it; GraphSpec
-    * persists its own copy to assert the plan shape).
+    * hash-partitioned by `src` into `spark.sql.shuffle.partitions` buckets
+    * so the caller's persist captures that partitioning — NOT persisted
+    * here (the rank loop persists it; GraphSpec persists its own copy to
+    * assert the plan shape).
     */
   private[graft] def edgeFrame(lineitem: DataFrame, orders: DataFrame): DataFrame = {
     val base = lineitem
@@ -175,7 +157,10 @@ object Graph {
       .distinct()
     base.select(col("cn").as("src"), col("sn").as("dst"))
       .unionByName(base.select(col("sn").as("src"), col("cn").as("dst")))
-      .repartition(col("src")) // partition ONCE; every iteration reuses it
+      // partition ONCE; every iteration reuses it. Numbered, so AQE never
+      // coalesces it (the scaladoc's partitioning discipline)
+      .repartition(lineitem.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("src"))
   }
 
   /** One PageRank iteration: edges ⋈ ranks on src=node, per-edge

@@ -68,6 +68,13 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Graph.pageRankUntil releases every internal cache") {
+    checkContract("pageRankUntil") {
+      graft.operators.Graph.pageRankUntil(spark,
+        Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir), maxIterations = 3)._1
+    }
+  }
+
   test("Similarity.sparseCosineTopK is cache-neutral (lazy by measurement)") {
     // persist-materialize-release was tried and reverted here (49.2 s lazy
     // vs 53.7 s persisted at the 100× probe — AQE exchange reuse already

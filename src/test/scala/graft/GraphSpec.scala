@@ -42,15 +42,13 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("iteration join reuses the cached edge partitioning: no shuffle above the edge-side cache scan") {
-    // same cache discipline as pageRank's internals (r22): the edge cache is
-    // persisted with stable output partitioning — the session default lets
-    // AQE coalesce cached plans, which would degrade the cache's reported
-    // partitioning and defeat exactly the reuse this test pins
-    val edges = GraftSession.withStableCachePartitioning(spark) {
-      graft.operators.Graph
-        .edgeFrame(Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    // persisted exactly as pageRank persists it, under the session default
+    // that lets AQE re-plan cached plans: edgeFrame's numbered repartition
+    // is what keeps the cache's reported partitioning, so the reuse this
+    // test pins needs no conf change around the persist
+    val edges = graft.operators.Graph
+      .edgeFrame(Tables.lineitem(spark, sfDir), Tables.orders(spark, sfDir))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       edges.count()
       val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
@@ -106,6 +104,83 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       assert(!hasShuffle(plan),
         s"groupBy(src) over src-partitioned cache must not exchange:\n$plan")
     } finally edges.unpersist(blocking = true)
+  }
+
+  test("no round of pageRank or pageRankUntil shuffles the raw cached edge list") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter,
+      ProjectExec, QueryExecution, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    // every node an action ran, cached plans included: a round's step plan
+    // runs inside its own cache's materialization
+    def deep(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
+      case q: QueryStageExec => deep(q.plan)
+      case m: InMemoryTableScanExec => deep(m.relation.cachedPlan)
+      case other => other.children.flatMap(deep)
+    })
+    def source(p: SparkPlan): SparkPlan = p match {
+      case w: WholeStageCodegenExec => source(w.child)
+      case i: InputAdapter => source(i.child)
+      case pr: ProjectExec => source(pr.child)
+      case f: FilterExec => source(f.child)
+      case c: ColumnarToRowExec => source(c.child)
+      case t: TableCacheQueryStageExec => source(t.plan)
+      case other => other
+    }
+    def rawEdgeExchanges(p: SparkPlan): Int = deep(p).count {
+      case e: ShuffleExchangeLike => source(e.child) match {
+        case m: InMemoryTableScanExec => m.relation.output.map(_.name) == Seq("src", "dst")
+        case _ => false
+      }
+      case _ => false
+    }
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.add(rawEdgeExchanges(qe.executedPlan))
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    /** (result, raw-edge exchanges per action the body ran) */
+    def traced[A](body: => A): (A, Seq[Int]) = {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      actions.clear()
+      spark.listenerManager.register(listener)
+      try {
+        val a = body
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+        (a, actions.asScala.toList)
+      } finally spark.listenerManager.unregister(listener)
+    }
+    spark.sharedState.cacheManager.clearCache()
+    val li = Tables.lineitem(spark, sfDir)
+    val ord = Tables.orders(spark, sfDir)
+    // the shuffle-join regime: the rank vector never broadcasts, so any
+    // exchange the iteration join needs is planned, and an edge-side one
+    // would move the whole cached edge list every round
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (fixed, fixedActions) = traced(graft.operators.Graph.pageRank(spark, li, ord))
+      val ((until, rounds), untilActions) = traced(graft.operators.Graph.pageRankUntil(
+        spark, li, ord, tolE12 = 10000000000L, maxIterations = 25))
+      try {
+        assert(fixedActions.sum == 0 && untilActions.sum == 0,
+          s"raw-edge exchanges per action: pageRank $fixedActions, " +
+            s"pageRankUntil $untilActions")
+        // one loop, no extra job: 3 fixed rounds, 14 probed rounds
+        assert(rounds == 14)
+        assert(fixedActions.size == 6, s"pageRank ran ${fixedActions.size} actions")
+        assert(untilActions.size == 44, s"pageRankUntil ran ${untilActions.size} actions")
+        val same = graft.operators.Graph.pageRank(spark, li, ord, iterations = rounds)
+        try assert(until.orderBy("kind", "key").collect().toSeq ==
+          same.orderBy("kind", "key").collect().toSeq)
+        finally same.unpersist(blocking = true)
+      } finally {
+        fixed.unpersist(blocking = true)
+        until.unpersist(blocking = true)
+      }
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "a rank loop leaked a cache")
   }
 
   test("pageRank on empty input returns an empty frame without dividing by zero, and leaks no cache") {

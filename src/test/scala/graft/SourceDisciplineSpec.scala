@@ -30,9 +30,10 @@ class SourceDisciplineSpec extends AnyFunSuite {
     "NearDupScreen.scala" -> 1, // pb routing set (|batch|·bands ints)
     "Multimodal.scala" -> 1,   // pb routing set (|batch|·nBands ints)
     "Bpe.scala" -> 1,          // per-round 1-row argmax (the documented seam)
-    "Graph.scala" -> 1)        // pageRankUntil convergence scalar: ONE row
-                               // (max |Δr| reduced distributedly; only the
-                               // Long crosses to the driver per round)
+    "Graph.scala" -> 1)        // the shared rank loop's convergence scalar,
+                               // run only with pageRankUntil's tolerance:
+                               // ONE row (max |Δr| reduced distributedly;
+                               // only the Long crosses to the driver per round)
 
   test("operator code collects only at the documented bounded-routing sites") {
     val root = Paths.get("src/main/scala")
