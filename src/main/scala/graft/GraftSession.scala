@@ -100,6 +100,11 @@ object GraftSession {
     // one cache whose partitioning IS the optimization (Graph's edge list)
     // uses a numbered repartition, which AQE never coalesces, so it keeps
     // its partitioning under this setting without a conf change.
+    // The same 1 MiB coalescing floor would also fold each ~1 MB exchange
+    // in front of the dedup family's CPU-bound stages (shingle + MinHash,
+    // band buckets, pair dedup) into ONE task on a multi-core box; those
+    // three exchanges are numbered too (Dedup.spread), so they keep
+    // shuffle.partitions tasks while every other exchange still coalesces.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)

@@ -49,7 +49,7 @@ object Dedup {
     // candidates that only the downstream null-metric filter discards).
     // Output is unchanged on any input; candidate volume stops blowing up
     // on dirty corpora (e.g. null-text docs under simhashPairs).
-    val emitted = banded.filter(col("key").isNotNull)
+    val emitted = spread(banded.filter(col("key").isNotNull), col("band"), col("key"))
       .groupBy("band", "key")
       .agg(graft.functions.collect_capped(col("id"), maxBucket).as("ids"))
       .filter(col("ids").isNotNull && size(col("ids")) >= 2)
@@ -65,11 +65,22 @@ object Dedup {
     // instead of two. Shuffled bytes are unchanged (a pair's cross-band
     // duplicates originate in different (band, key) partitions either way,
     // so the old map-side partial dedup could not collapse them before the
-    // exchange). Locally the joins broadcast, so this is plan-neutral at
-    // bench SF; the 100× probe is the measurement. A hot id_a is bounded by
-    // cap·bands pairs per doc.
-    emitted.repartition(col("id_a")).dropDuplicates("id_a", "id_b")
+    // exchange). A hot id_a is bounded by cap·bands pairs per doc.
+    spread(emitted, col("id_a")).dropDuplicates("id_a", "id_b")
   }
+
+  /** Hash-repartition into the session's `spark.sql.shuffle.partitions`.
+    * Numbered, so AQE never coalesces it (origin `REPARTITION_BY_NUM`):
+    * the dedup family's exchanges carry ~1 MB at bench scale, and AQE's
+    * 1 MiB coalescing floor would merge each into ONE task, leaving the
+    * shingle/MinHash, bucket and verify stages behind them on one core.
+    * At scale AQE keeps about that many partitions anyway, so this only
+    * changes the small case. Same idiom as Graph's edge frame. A group-by
+    * on the same keys needs no further exchange, so its partial aggregate
+    * runs after this one (no map-side combine).
+    */
+  private def spread(df: DataFrame, keys: Column*): DataFrame =
+    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, keys: _*)
 
   /** Exact dedup by content hash: keeper = min id per hash. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -171,8 +182,8 @@ object Dedup {
     // Token-less docs are excluded: their constant densified signature would
     // collide all blank docs on every band, then 0/0 the Jaccard verify
     // (ANSI divide error) — the exact-Jaccard oracle excludes them too.
-    // NOT eagerly materialized (r22 probe): AQE's leaf query stages (band
-    // map + the two broadcast builds) race this cache's block locks on
+    // NOT eagerly materialized (r22 probe): AQE's three TableCacheQueryStages
+    // over it (band map, `sa`, `sb`) race this cache's block locks on
     // first run, but the waiters overlap the winner's compute — forcing the
     // cache with its own action first measured a ~5% LOSS on interleaved
     // mins (c02 0.955, c07 0.946, lazy/eager) for one extra job.
@@ -216,6 +227,14 @@ object Dedup {
     // 4× SLOWER at the 100× probe — and letting AQE broadcast the "pruned"
     // arrays OOMs (its size estimate is compressed bytes; the deserialized
     // arrays are many× larger).
+    // The two attach sides can never share one broadcast: Spark 4.1 AQE
+    // gives each InMemoryTableScan of a cache its own TableCacheQueryStage,
+    // and unlike shuffle/broadcast stages that stage does not canonicalize:
+    // its canonical form keeps its stage id and its scan's own expression
+    // ids, so the BroadcastExchanges above `sa` and `sb` never match in
+    // AQE's exchange reuse (their scans alone canonicalize equal). At bench
+    // scale AQE broadcasts the candidate pairs into the first join and
+    // streams `sa`, so only `sb` broadcasts.
     val sh = sigs.select(col("id"), col("sh"))
     // verification by sorted merge over the ascending shingle arrays
     // (wordShingles emits them sorted): i / (|A| + |B| − i) — no per-pair
@@ -383,8 +402,8 @@ object Dedup {
     *  - length floor, then exact dedup as a single md5 group-by whose
     *    `keep_latest(-id, struct(id, text))` yields the min id and its text
     *    (every row of an fp group has the same text, so no join back to the
-    *    corpus is needed; ObjectHashAggregate with map-side combine, like
-    *    [[exactKeepBest]]). Ids must be integral.
+    *    corpus is needed; ObjectHashAggregate, like [[exactKeepBest]], but
+    *    behind a [[spread]] exchange on fp). Ids must be integral.
     *  - [[signatures]] over the keepers. Token-less keepers (≥ minTokens
     *    tokens but no word shingle) stay in the frame with an empty `sh`:
     *    they are kept docs, so the final anti-join must see them, and only
@@ -397,8 +416,10 @@ object Dedup {
     */
   private def keeperSignatures(df: DataFrame, idCol: String, textCol: String,
                                minTokens: Int): DataFrame = {
-    val keepers = df.filter(size(split(trim(col(textCol)), "\\s+")) >= minTokens)
+    val fingerprinted = df.filter(size(split(trim(col(textCol)), "\\s+")) >= minTokens)
       .withColumn("fp", md5(col(textCol).cast("binary")))
+    // shingling, MinHash and the cache fill run behind this exchange
+    val keepers = spread(fingerprinted, col("fp"))
       .groupBy("fp")
       .agg(
         graft.functions.keep_latest(-col(idCol).cast("long"),

@@ -267,6 +267,60 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a warm cleanCorpus reads its fp, (band, key) and id_a exchanges in shuffle.partitions tasks") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
+      QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every node the action ran: the signature cache fills inside it
+    def deep(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
+      case q: QueryStageExec => deep(q.plan)
+      case m: InMemoryTableScanExec => deep(m.relation.cachedPlan)
+      case other => other.children.flatMap(deep)
+    })
+    // (hash keys, tasks of the stage reading the exchange) per hash exchange
+    def readers(p: SparkPlan): Seq[(Seq[String], Int)] = {
+      val nodes = deep(p)
+      val reads = nodes.collect {
+        case r: AQEShuffleReadExec => r.child match {
+          case s: ShuffleQueryStageExec => (s.shuffle, r.partitionSpecs.size)
+        }
+      }
+      nodes.collect { case e: ShuffleExchangeLike => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name } ->
+            reads.collectFirst { case (s, n) if s eq e => n }.getOrElse(e.numPartitions)
+        case _ => Nil -> e.numPartitions
+      }}
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    Dedup.cleanCorpus(corpus, "doc_id", "text").unpersist(blocking = true) // warm-up
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val out = Dedup.cleanCorpus(corpus, "doc_id", "text")
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      out.unpersist(blocking = true)
+      assert(plans.size == 1)
+      val cpuBound = Seq(Seq("fp"), Seq("band", "key"), Seq("id_a"))
+      val seen = readers(plans.peek()).filter { case (keys, _) => cpuBound.contains(keys) }
+      assert(seen.map(_._1).distinct.sortBy(_.mkString) == cpuBound.sortBy(_.mkString),
+        s"exchanges found: $seen")
+      assert(seen.forall(_._2 == n), s"stage tasks per exchange (want $n): $seen")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("weighted minhash finds every planted exact dup at weighted jaccard 1.0") {
     val pairs = Dedup.weightedMinhashPairs(corpus, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap

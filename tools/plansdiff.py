@@ -29,8 +29,11 @@ Two grains:
   (sort orders, join keys, hashpartitioning args — see
   order_significant_diff); annotation only — exit code unchanged.
 - --tree: compares only each plan's operator-tree section (the lines
-  before the first `(n) NodeName` detail block). Immune to attribute-order
-  permutation; a --tree diff IS a structural plan change. Read the pair:
+  before the first `(n) NodeName` detail block), with each `Exchange` tree
+  line carrying the shuffle origin from its detail block
+  (REPARTITION_BY_NUM vs REPARTITION_BY_COL decides whether AQE may
+  coalesce it). Immune to attribute-order permutation; a --tree diff IS a
+  structural plan change. Read the pair:
   --tree names the real changes, the default run's extras minus the --tree
   set are the permutation-only rows to spot-check with --show.
 
@@ -217,8 +220,35 @@ def buildside_canonical(lines: list) -> list:
     return out
 
 
+# An Exchange's Arguments line ends with its shuffle origin
+# (`hashpartitioning(x, 4), REPARTITION_BY_NUM, [plan_id=7]`); the origin
+# decides whether AQE may coalesce the exchange, so it is plan shape.
+_EXCHANGE_ORIGIN = re.compile(r", ([A-Z][A-Z_]+)(?:, \[plan_id=\d+\])?$")
+_TREE_EXCHANGE = re.compile(r"\bExchange \((\d+)\)$")
+
+
+def with_exchange_origins(lines: list) -> list:
+    """One query's raw lines with each `Exchange (n)` tree line carrying the
+    shuffle origin of its `(n) Exchange` detail block, so the tree grain,
+    which drops detail blocks, still sees an origin-only change (e.g.
+    REPARTITION_BY_COL -> REPARTITION_BY_NUM, which AQE stops coalescing)."""
+    origins, node = {}, None
+    for l in lines:
+        d = re.match(r"^\((\d+)\) (\S+)", l)
+        if d:
+            node = d.group(1) if d.group(2) == "Exchange" else None
+        elif node and l.startswith("Arguments:"):
+            m = _EXCHANGE_ORIGIN.search(l)
+            if m:
+                origins[node] = m.group(1)
+    return [_TREE_EXCHANGE.sub(
+                lambda m: f"Exchange {origins[m.group(1)]} ({m.group(1)})"
+                if m.group(1) in origins else m.group(0), l)
+            for l in lines]
+
+
 def blocks(path: str, tree_only: bool = False) -> dict:
-    cur, out, in_detail, cur_op = None, {}, False, None
+    cur, raw = None, {}
     marker = re.compile(r"^========== ([a-z0-9_]+) ==========$")
     # timestamped Spark log lines, the sbt run footer, and the
     # indentation-only `file:/...` continuation of multi-line WARNs
@@ -227,22 +257,26 @@ def blocks(path: str, tree_only: bool = False) -> dict:
         r"^\d{2}/\d{2}/\d{2} \d{2}:\d{2}:\d{2} (WARN|INFO|ERROR) "
         r"|^\[success\] Total time:"
         r"|^\s+file:/\S*$")
-    detail_start = re.compile(r"^\(\d+\) ([A-Z]\S*)")
-    for raw in open(path):
-        line = raw.removeprefix("[info] ").rstrip("\n")
+    for line in open(path):
+        line = line.removeprefix("[info] ").rstrip("\n")
         m = marker.match(line)
         if m:
             cur = m.group(1)
-            out[cur] = []
-            in_detail, cur_op = False, None
+            raw[cur] = []
         elif cur is not None and not loglike.match(line):
+            raw[cur].append(line)
+    detail_start = re.compile(r"^\(\d+\) ([A-Z]\S*)")
+    out = {}
+    for q, lines in raw.items():
+        out[q], in_detail, cur_op = [], False, None
+        for line in with_exchange_origins(lines):
             d = detail_start.match(line)
             if d:
                 in_detail, cur_op = True, d.group(1)
             if not (tree_only and in_detail):
                 numeric_args_op = cur_op is not None and (
                     cur_op == "WholeStageCodegen" or cur_op.endswith("QueryStage"))
-                out[cur].append(normalize(line, numeric_args_op))
+                out[q].append(normalize(line, numeric_args_op))
     return out
 
 
@@ -260,7 +294,7 @@ def selftest() -> int:
 Output [2]: [u, v]
 Arguments: 3
 (4) Exchange [codegen id : 2]
-Arguments: hashpartitioning(x#12L, 32)
+Arguments: hashpartitioning(x#12L, 32), ENSURE_REQUIREMENTS, [plan_id=44]
 (5) Scan ExistingRDD [codegen id : 3]
 Arguments: [u, v], MapPartitionsRDD[1923] at createDataFrame at D.scala:1, ExistingRDD, UnknownPartitioning(0)
 Functions: [approx(x, (5))]
@@ -291,17 +325,27 @@ Arguments: 25
         (callsite_line, 0, "RDD call-site line-invisible"),
         (callsite_file, 1, "RDD call-site file-visible"),
     ]
+    # an Exchange's shuffle origin decides whether AQE may coalesce it: an
+    # origin-only change is plan shape at BOTH grains (the tree grain reads
+    # it off the detail block); its plan_id is per-session noise at both
+    origin = base.replace("ENSURE_REQUIREMENTS", "REPARTITION_BY_NUM")
+    plan_id = base.replace("plan_id=44", "plan_id=45")
+    cases = [(content, want, label, []) for content, want, label in cases] + [
+        (content, want, f"{label} ({grain[0] if grain else 'full'} grain)", grain)
+        for content, want, label in [(origin, 1, "Exchange origin-visible"),
+                                     (plan_id, 0, "Exchange plan_id-invisible")]
+        for grain in ([], ["--tree"])]
     failures = 0
     with tempfile.TemporaryDirectory() as d:
         a = os.path.join(d, "a.txt")
         open(a, "w").write(base)
-        for i, (content, want, label) in enumerate(cases):
+        for i, (content, want, label, grain) in enumerate(cases):
             b = os.path.join(d, f"b{i}.txt")
             open(b, "w").write(content)
             import io, contextlib
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
-                got = main([a, b])
+                got = main([a, b] + grain)
             ok = got == want
             failures += not ok
             print(f"{'OK  ' if ok else 'FAIL'} {label}: exit {got} (want {want})")
