@@ -271,21 +271,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
-      QueryStageExec, ShuffleQueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
-    // every node the action ran: the signature cache fills inside it
-    def deep(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: QueryStageExec => deep(q.plan)
-      case m: InMemoryTableScanExec => deep(m.relation.cachedPlan)
-      case other => other.children.flatMap(deep)
-    })
-    // (hash keys, tasks of the stage reading the exchange) per hash exchange
+    // (hash keys, tasks of the stage reading the exchange) per hash exchange;
+    // the signature cache fills inside the action
     def readers(p: SparkPlan): Seq[(Seq[String], Int)] = {
-      val nodes = deep(p)
+      val nodes = executedNodes(p)
       val reads = nodes.collect {
         case r: AQEShuffleReadExec => r.child match {
           case s: ShuffleQueryStageExec => (s.shuffle, r.partitionSpecs.size)

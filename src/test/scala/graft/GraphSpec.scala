@@ -112,14 +112,6 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
     import org.apache.spark.sql.util.QueryExecutionListener
     import scala.jdk.CollectionConverters._
-    // every node an action ran, cached plans included: a round's step plan
-    // runs inside its own cache's materialization
-    def deep(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => deep(a.executedPlan)
-      case q: QueryStageExec => deep(q.plan)
-      case m: InMemoryTableScanExec => deep(m.relation.cachedPlan)
-      case other => other.children.flatMap(deep)
-    })
     def source(p: SparkPlan): SparkPlan = p match {
       case w: WholeStageCodegenExec => source(w.child)
       case i: InputAdapter => source(i.child)
@@ -129,7 +121,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       case t: TableCacheQueryStageExec => source(t.plan)
       case other => other
     }
-    def rawEdgeExchanges(p: SparkPlan): Int = deep(p).count {
+    // a round's step plan runs inside its own cache's materialization
+    def rawEdgeExchanges(p: SparkPlan): Int = executedNodes(p).count {
       case e: ShuffleExchangeLike => source(e.child) match {
         case m: InMemoryTableScanExec => m.relation.output.map(_.name) == Seq("src", "dst")
         case _ => false
