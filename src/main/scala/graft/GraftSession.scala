@@ -100,12 +100,20 @@ object GraftSession {
     // one cache whose partitioning IS the optimization (Graph's edge list)
     // uses a numbered repartition, which AQE never coalesces, so it keeps
     // its partitioning under this setting without a conf change.
-    // The same 1 MiB coalescing floor would also fold each ~1 MB exchange
-    // in front of the dedup family's CPU-bound stages (shingle + MinHash,
-    // band buckets, pair dedup) into ONE task on a multi-core box; those
-    // three exchanges are numbered too (Dedup.spread), so they keep
-    // shuffle.partitions tasks while every other exchange still coalesces.
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // AQE's coalescing floor. AQE aims for one partition per core
+    // (parallelismFirst) but never cuts a partition below this floor, so
+    // Spark's 1 MiB default runs every exchange smaller than cores × 1 MiB
+    // in fewer tasks than cores: the ~1 MB exchanges in front of the dedup
+    // family's CPU-bound stages (exact aggregate + shingle + MinHash cache
+    // fill, the (band, key) bucket aggregate, the cross-band pair dedup)
+    // each ran in ONE task on a 4-core box. At 64 KiB they run on every
+    // core, and their group-bys keep the map-side partial aggregate on
+    // their own exchange (a hot bucket's capped buffer crosses it as ~1
+    // byte), which a numbered repartition in front of them would remove.
+    // Above cores × 1 MiB the target is total / cores under either floor,
+    // so large exchanges split as before.
+    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
     .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

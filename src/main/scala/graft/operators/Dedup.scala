@@ -49,7 +49,7 @@ object Dedup {
     // candidates that only the downstream null-metric filter discards).
     // Output is unchanged on any input; candidate volume stops blowing up
     // on dirty corpora (e.g. null-text docs under simhashPairs).
-    val emitted = spread(banded.filter(col("key").isNotNull), col("band"), col("key"))
+    val emitted = banded.filter(col("key").isNotNull)
       .groupBy("band", "key")
       .agg(graft.functions.collect_capped(col("id"), maxBucket).as("ids"))
       .filter(col("ids").isNotNull && size(col("ids")) >= 2)
@@ -66,21 +66,11 @@ object Dedup {
     // duplicates originate in different (band, key) partitions either way,
     // so the old map-side partial dedup could not collapse them before the
     // exchange). A hot id_a is bounded by cap·bands pairs per doc.
-    spread(emitted, col("id_a")).dropDuplicates("id_a", "id_b")
+    // Numbered: at bench scale the pair set is a few hundred KB, which
+    // AQE's coalescing floor packs into fewer tasks than cores, and the
+    // pair dedup and Jaccard verify behind it are CPU-bound.
+    numberedRepartition(emitted, col("id_a")).dropDuplicates("id_a", "id_b")
   }
-
-  /** Hash-repartition into the session's `spark.sql.shuffle.partitions`.
-    * Numbered, so AQE never coalesces it (origin `REPARTITION_BY_NUM`):
-    * the dedup family's exchanges carry ~1 MB at bench scale, and AQE's
-    * 1 MiB coalescing floor would merge each into ONE task, leaving the
-    * shingle/MinHash, bucket and verify stages behind them on one core.
-    * At scale AQE keeps about that many partitions anyway, so this only
-    * changes the small case. Same idiom as Graph's edge frame. A group-by
-    * on the same keys needs no further exchange, so its partial aggregate
-    * runs after this one (no map-side combine).
-    */
-  private def spread(df: DataFrame, keys: Column*): DataFrame =
-    df.repartition(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, keys: _*)
 
   /** Exact dedup by content hash: keeper = min id per hash. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -402,8 +392,8 @@ object Dedup {
     *  - length floor, then exact dedup as a single md5 group-by whose
     *    `keep_latest(-id, struct(id, text))` yields the min id and its text
     *    (every row of an fp group has the same text, so no join back to the
-    *    corpus is needed; ObjectHashAggregate, like [[exactKeepBest]], but
-    *    behind a [[spread]] exchange on fp). Ids must be integral.
+    *    corpus is needed; ObjectHashAggregate with map-side combine, like
+    *    [[exactKeepBest]]). Ids must be integral.
     *  - [[signatures]] over the keepers. Token-less keepers (≥ minTokens
     *    tokens but no word shingle) stay in the frame with an empty `sh`:
     *    they are kept docs, so the final anti-join must see them, and only
@@ -416,10 +406,8 @@ object Dedup {
     */
   private def keeperSignatures(df: DataFrame, idCol: String, textCol: String,
                                minTokens: Int): DataFrame = {
-    val fingerprinted = df.filter(size(split(trim(col(textCol)), "\\s+")) >= minTokens)
+    val keepers = df.filter(size(split(trim(col(textCol)), "\\s+")) >= minTokens)
       .withColumn("fp", md5(col(textCol).cast("binary")))
-    // shingling, MinHash and the cache fill run behind this exchange
-    val keepers = spread(fingerprinted, col("fp"))
       .groupBy("fp")
       .agg(
         graft.functions.keep_latest(-col(idCol).cast("long"),

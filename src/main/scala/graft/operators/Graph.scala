@@ -155,12 +155,10 @@ object Graph {
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("cn"), (col("l_suppkey") * 2 + 1).as("sn"))
       .distinct()
-    base.select(col("cn").as("src"), col("sn").as("dst"))
-      .unionByName(base.select(col("sn").as("src"), col("cn").as("dst")))
-      // partition ONCE; every iteration reuses it. Numbered, so AQE never
-      // coalesces it (the scaladoc's partitioning discipline)
-      .repartition(lineitem.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
+    // partition ONCE; every iteration reuses it. Numbered, so AQE never
+    // coalesces it (the scaladoc's partitioning discipline)
+    numberedRepartition(base.select(col("cn").as("src"), col("sn").as("dst"))
+      .unionByName(base.select(col("sn").as("src"), col("cn").as("dst"))), col("src"))
   }
 
   /** One PageRank iteration: edges ⋈ ranks on src=node, per-edge

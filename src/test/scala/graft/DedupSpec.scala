@@ -267,16 +267,46 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a warm cleanCorpus reads its fp, (band, key) and id_a exchanges in shuffle.partitions tasks") {
+  /** ~0.9 MB of text in 2 150 docs, the size of a bench pass: 320 docs
+    * share a 50-word run (a hot LSH bucket), 150 are near copies (two words
+    * changed) and 200 are exact copies. Its
+    * dedup exchanges carry ~1 MB, where AQE's coalescing floor decides how
+    * many tasks read them; the spec corpus' exchanges are far below it.
+    */
+  private lazy val mbCorpus: DataFrame = {
+    val r = new scala.util.Random(11)
+    val vocab = Vector.fill(4000)(Vector.fill(3 + r.nextInt(4))(('a' + r.nextInt(26)).toChar).mkString)
+    def words(n: Int) = Vector.fill(n)(vocab(r.nextInt(vocab.size)))
+    val boilerplate = words(50)
+    val unique = Vector.tabulate(1800)(i => words(50 + r.nextInt(61)) ++ (if (i < 320) boilerplate else Nil))
+    val near = Vector.tabulate(150) { i =>
+      val base = unique(320 + i)
+      base.updated(r.nextInt(base.size), "graft").updated(r.nextInt(base.size), "dup")
+    }
+    val texts = unique ++ near ++ Vector.fill(200)(unique(r.nextInt(unique.size)))
+    spark.createDataFrame(texts.zipWithIndex.map { case (t, i) => (i.toLong, t.mkString(" ")) })
+      .toDF("doc_id", "text")
+  }
+
+  test("a warm cleanCorpus over ~1 MB keeps its map-side partial aggregates and reads its fp, (band, key) and id_a exchanges in shuffle.partitions tasks") {
     import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.util.QueryExecutionListener
-    // (hash keys, tasks of the stage reading the exchange) per hash exchange;
-    // the signature cache fills inside the action
-    def readers(p: SparkPlan): Seq[(Seq[String], Int)] = {
+    // one exchange's map side: the nodes down to the previous stage boundary
+    def mapSide(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: ShuffleExchangeLike | _: QueryStageExec | _: InMemoryTableScanExec => Nil
+      case other => other.children.flatMap(mapSide)
+    })
+    // per hash exchange: (hash keys, partial aggregate on its map side,
+    // tasks of the stage reading it); the signature cache fills inside the
+    // action
+    def exchanges(p: SparkPlan): Seq[(Seq[String], Boolean, Int)] = {
       val nodes = executedNodes(p)
       val reads = nodes.collect {
         case r: AQEShuffleReadExec => r.child match {
@@ -285,9 +315,13 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       }
       nodes.collect { case e: ShuffleExchangeLike => e.outputPartitioning match {
         case h: HashPartitioning =>
-          h.expressions.collect { case a: Attribute => a.name } ->
-            reads.collectFirst { case (s, n) if s eq e => n }.getOrElse(e.numPartitions)
-        case _ => Nil -> e.numPartitions
+          val partial = mapSide(e.child).exists {
+            case a: BaseAggregateExec => a.aggregateExpressions.exists(_.mode == Partial)
+            case _ => false
+          }
+          (h.expressions.collect { case a: Attribute => a.name }, partial,
+            reads.collectFirst { case (s, n) if s eq e => n }.getOrElse(e.numPartitions))
+        case _ => (Nil, false, e.numPartitions)
       }}
     }
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -297,19 +331,24 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    Dedup.cleanCorpus(corpus, "doc_id", "text").unpersist(blocking = true) // warm-up
+    Dedup.cleanCorpus(mbCorpus, "doc_id", "text").unpersist(blocking = true) // warm-up
     org.apache.spark.TestBus.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
-      val out = Dedup.cleanCorpus(corpus, "doc_id", "text")
+      val out = Dedup.cleanCorpus(mbCorpus, "doc_id", "text")
       org.apache.spark.TestBus.drain(spark.sparkContext)
       out.unpersist(blocking = true)
       assert(plans.size == 1)
-      val cpuBound = Seq(Seq("fp"), Seq("band", "key"), Seq("id_a"))
-      val seen = readers(plans.peek()).filter { case (keys, _) => cpuBound.contains(keys) }
-      assert(seen.map(_._1).distinct.sortBy(_.mkString) == cpuBound.sortBy(_.mkString),
-        s"exchanges found: $seen")
-      assert(seen.forall(_._2 == n), s"stage tasks per exchange (want $n): $seen")
+      val all = exchanges(plans.peek())
+      val seen = all.filter { case (keys, _, _) =>
+        Seq(Seq("fp"), Seq("band", "key"), Seq("id_a")).contains(keys) }
+      assert(seen.map(_._1).toSet == Set(Seq("fp"), Seq("band", "key"), Seq("id_a")),
+        s"exchanges found: $all")
+      // a hot bucket's capped buffer and an exact-copy group collapse
+      // before their exchange, not after it
+      assert(seen.filter(_._1 != Seq("id_a")).forall(_._2),
+        s"group-by exchanges without a map-side partial aggregate: $seen")
+      assert(seen.forall(_._3 == n), s"stage tasks per exchange (want $n): $seen")
     } finally spark.listenerManager.unregister(listener)
   }
 
