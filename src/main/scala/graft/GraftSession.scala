@@ -112,7 +112,8 @@ object GraftSession {
     // their own exchange (a hot bucket's capped buffer crosses it as ~1
     // byte), which a numbered repartition in front of them would remove.
     // Above cores × 1 MiB the target is total / cores under either floor,
-    // so large exchanges split as before.
+    // so large exchanges split as before (save that a partition between
+    // 64 KiB and 1 MiB is no longer force-merged into a neighbour).
     .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     .config("spark.ui.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)

@@ -222,9 +222,8 @@ object Dedup {
     // and unlike shuffle/broadcast stages that stage does not canonicalize:
     // its canonical form keeps its stage id and its scan's own expression
     // ids, so the BroadcastExchanges above `sa` and `sb` never match in
-    // AQE's exchange reuse (their scans alone canonicalize equal). At bench
-    // scale AQE broadcasts the candidate pairs into the first join and
-    // streams `sa`, so only `sb` broadcasts.
+    // AQE's exchange reuse (their scans alone canonicalize equal), and at
+    // bench scale both sides broadcast the signatures.
     val sh = sigs.select(col("id"), col("sh"))
     // verification by sorted merge over the ascending shingle arrays
     // (wordShingles emits them sorted): i / (|A| + |B| − i) — no per-pair
