@@ -1,75 +1,50 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
+
+import graft.telemetry.{ActionTrace, StageRow}
 
 /** Headline benchmark: runs the `bench = true` queries from [[Queries]] on
-  * SPARK_GRAFT_SF_DIR and prints one JSON line for the driver.
+  * SPARK_GRAFT_SF_DIR and prints one JSON metric line. Results go
+  * through the `noop` sink (every output column materialized), not
+  * `count()`, which would let Catalyst prune the aggregates away.
   *
-  * Results are forced through the `noop` sink (full materialization of every
-  * output column) rather than `count()`, which would let Catalyst prune the
-  * aggregates away and under-report.
+  * Every timed pass runs under [[ActionTrace]]; for each query the record of
+  * the pass whose time is reported goes to [[recordFile]], so a regression
+  * can be attributed from that file alone.
   *
-  * A/B guard rail (r11, after two rounds of box-speed drift made raw
-  * round-over-round totals uninterpretable): when `bench_ab.ref` exists at
-  * the repo root (or SPARK_GRAFT_AB_REF is set to a git ref; "off"
-  * disables), the PREVIOUS round's tree is checked out into a throwaway
-  * git worktree, compiled once, and benched in subprocesses in the SAME
-  * wall-clock window — and the result is emitted as its OWN self-contained
-  * `{"metric":"ab",...}` JSON line immediately BEFORE the primary
-  * `{"metric":"total",...}` line, which stays in exactly the r10 shape
-  * and is always the LAST line printed. (r11 spliced the A/B fragment
-  * into the middle of the single metric line; that pushed the line head
-  * past the driver's bounded tail-capture window and BENCH_r11 came back
-  * `parsed: null` — the primary line must be terminal and short, per the
-  * r11 verdict task #2 / ADVICE high finding.)
-  *
-  * INTERLEAVED WINDOWS (r17, verdict task #3): r16 measured the sequential
-  * prev-block-then-current-block A/B's noise floor and it was wide — two
-  * trees with byte-identical `src/main` read 0.79×–0.92× apart, because
-  * each tree's entire suite sat in its own multi-minute wall-clock window
-  * and the box drifted between them. The fix is the same instrument that
-  * closed the r15 c07 watch: interleave. The total rep budget (default 5)
-  * is split across SPARK_GRAFT_AB_WINDOWS windows (default 3 → reps
-  * 2/2/1; since r18 the 1-rep tail window — which has no in-window noise
-  * rejection and produced the off-scale ratio in every recorded r17 run —
-  * stays visible in `w` but is excluded from the headline median; the
-  * budget could not simply grow to 6 → 2/2/2 because a 6th per-query
-  * sample overflows the driver's 2000-char tail capture, see
-  * BenchLineSpec); each window runs the prev tree FIRST (a fresh subprocess doing
-  * its own warm pass + that window's reps), then the SAME number of
-  * current-tree passes in-process, so box drift lands on both trees of a
-  * window instead of on one whole block. The ab line then carries the
-  * per-window current/prev ratios (`"w":[...]`) and their median
-  * (`"ratio"`) next to the best-prev total — a real regression moves ALL
-  * windows' ratios; box drift moves them in both directions. Per-window
-  * prev-first ordering keeps the old conservative bias (prev benefits
-  * from any box warm-up within a window). One asymmetry is accepted and
-  * documented rather than hidden: the current tree keeps one JVM across
-  * windows while prev gets a fresh JVM (with its own warm pass) per
-  * window, so later windows' ratios can flatter the current tree by
-  * residual JIT warmth — window 0 is the most warmth-symmetric reading,
-  * and the per-window spread makes the effect visible instead of baked
-  * into a single number. Every A/B step is failure-isolated: a missing
-  * ref, failed compile, or timed-out window records an `error` field on
-  * the ab line (or a -1 window ratio) and never blocks the primary
-  * benchmark.
+  * Same-box A/B: when `bench_ab.ref` exists at the repo root (or
+  * SPARK_GRAFT_AB_REF names a git ref; "off" disables), the previous tree is
+  * compiled once in a throwaway git worktree and benched in subprocesses
+  * INTERLEAVED with this tree: the rep budget is split across
+  * SPARK_GRAFT_AB_WINDOWS windows (default 3 → reps 2/2/1), each running the
+  * prev tree first (a fresh JVM with its own warm pass) and then as many
+  * in-process passes, so box drift lands on both trees of a window. The
+  * `{"metric":"ab",...}` line carries the per-window current/prev ratios
+  * (`w`) and their median (`ratio`), and is printed just before the primary
+  * `{"metric":"total",...}` line, which is always LAST: its reader parses a
+  * bounded 2000-char log tail. The current tree keeps one JVM across
+  * windows, so later windows can flatter it by JIT warmth; window 0 is the
+  * most symmetric reading. A missing ref, failed compile or timed-out
+  * window records an `error` field (or a -1 ratio) and never blocks the
+  * primary benchmark.
   */
 object Bench {
 
-  /** Default per-query rep budget (SPARK_GRAFT_BENCH_REPS) — and a CEILING,
-    * not just a default: the r18 session measured that a 6th per-query
-    * sample pushes the worst-case tail pair to 2044 chars > the driver's
-    * 2000-char capture. BenchLineSpec derives its worst-case sample arrays
-    * from THIS constant (r18 ADVICE: a hardcoded 5 in the spec would let
-    * the default drift to 6 while the pin kept passing), so raising the
-    * default without shrinking the line fails the budget pin instead of
-    * silently zeroing a round's benchmark artifact.
+  /** Default per-query rep budget (SPARK_GRAFT_BENCH_REPS), and a ceiling: a
+    * 6th per-query sample pushes the worst-case tail pair to 2044 chars, past
+    * the 2000-char tail capture. BenchLineSpec derives its worst-case
+    * sample arrays from this constant, so raising it without shrinking the
+    * line fails the budget pin.
     */
   private[graft] val defaultBenchReps = 5
 
-  /** Clamp-max A/B window count in [[distributeReps]] — also the worst-case
-    * width of the ab line's `w` ratio array that BenchLineSpec pins against
-    * the tail budget.
+  /** Clamp-max A/B window count: the worst-case width of the ab line's `w`
+    * ratio array, which BenchLineSpec pins against the tail budget.
     */
   private[graft] val maxAbWindows = 5
 
@@ -88,9 +63,40 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** Run `cmd` in `cwd`, stdout captured, stderr inherited; kills on
-    * timeout. Returns (exitCode, stdout) with exitCode −1 on timeout.
+  /** One query's operator record: its executions (tracker phase ms and the
+    * executed plan), its SQL executions, jobs, stages and tasks, and the
+    * stage rows those totals sum.
     */
+  private[graft] final case class QueryRecord(
+      query: String, seconds: Double, sqlExecutions: Int, jobs: Int, stages: Int,
+      tasks: Int, executions: Seq[ExecutionRecord], stageRows: Seq[StageRow])
+  private[graft] final case class ExecutionRecord(phasesMs: Map[String, Long], plan: String)
+
+  /** The operator record's fixed place, relative to the repo root. */
+  private[graft] val recordFile = "target/bench_record.json"
+
+  /** One [[timedPass]] of `q` under [[ActionTrace]], whose bus drains sit
+    * outside the timed window. The pass's record replaces the query's entry
+    * in `best` when its time is the query's lowest so far, so `best` ends
+    * holding the record of the reported (minimum) pass.
+    */
+  private[graft] def recordedPass(spark: SparkSession, sfDir: String, q: Q,
+                                  best: collection.mutable.Map[String, QueryRecord]): Double = {
+    val (sec, t) = ActionTrace.during(spark)(timedPass(spark)(q.fn(spark, sfDir)))
+    if (best.get(q.name).forall(sec < _.seconds))
+      best(q.name) = QueryRecord(q.name, sec, t.sqlExecutions, t.jobs, t.stages.size,
+        t.stages.map(_.tasks).sum, t.executions.map(qe => ExecutionRecord(
+          qe.tracker.phases.map { case (k, p) => k -> p.durationMs }, qe.executedPlan.toString)),
+        t.stages)
+    sec
+  }
+
+  private[graft] def writeRecord(path: Path, sfDir: String, records: Seq[QueryRecord]): Unit = {
+    Files.createDirectories(path.toAbsolutePath.getParent)
+    Files.writeString(path, Serialization.write(Map("sf" -> sfDir, "queries" -> records))(DefaultFormats))
+  }
+
+  /** Run `cmd` in `cwd`: (exit code, or −1 on timeout; captured stdout). */
   private def runCmd(cmd: Seq[String], cwd: java.io.File,
                      env: Map[String, String], timeoutSec: Long): (Int, String) = {
     val pb = new ProcessBuilder(cmd: _*)
@@ -102,7 +108,7 @@ object Bench {
     val p = pb.start()
     val done = p.waitFor(timeoutSec, java.util.concurrent.TimeUnit.SECONDS)
     if (!done) { p.destroyForcibly(); p.waitFor() }
-    val out = new String(java.nio.file.Files.readAllBytes(outF.toPath), "UTF-8")
+    val out = new String(Files.readAllBytes(outF.toPath), "UTF-8")
     outF.delete()
     (if (done) p.exitValue() else -1, out)
   }
@@ -149,8 +155,7 @@ object Bench {
     val ref = sys.env.get("SPARK_GRAFT_AB_REF")
       .orElse {
         val f = new java.io.File(repoRoot, "bench_ab.ref")
-        if (f.exists)
-          Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim)
+        if (f.exists) Some(new String(Files.readAllBytes(f.toPath), "UTF-8").trim)
         else None
       }
       .filter(r => r.nonEmpty && r != "off" && r != "none")
@@ -205,13 +210,8 @@ object Bench {
     Right((total, qMap))
   }
 
-  /** Split the total rep budget across A/B windows, front-loaded (the
-    * defaults 5 over 3 → 2/2/1). Window count is clamped to
-    * [1, min(5, reps)] — at least one rep per window, and at most 5 windows
-    * so the ab line's per-window ratio array stays inside the tail budget
-    * BenchLineSpec pins. The default split's 1-rep tail window is
-    * structurally degenerate as a ratio source; [[abFragmentFields]] keeps
-    * sub-2-rep windows out of the headline median (r18, verdict task #3).
+  /** Split the total rep budget across A/B windows, front-loaded (5 over 3
+    * → 2/2/1), with the window count clamped to [1, min(maxAbWindows, reps)].
     */
   private[graft] def distributeReps(reps: Int, windows: Int): Seq[Int] = {
     val w = math.max(1, math.min(windows, math.min(maxAbWindows, reps)))
@@ -229,21 +229,11 @@ object Bench {
   }
 
   /** The compact ab SUCCESS fragment: 12-char sha, best-prev total (sum of
-    * per-query minima across all prev windows — the same semantics the
-    * pre-r17 single-block `prev_tree_same_box` had), the per-window
-    * current/prev ratio array, and the median ratio. BenchLineSpec pins the
-    * worst-case width against the tail window.
-    *
-    * r18 (verdict task #3): a 1-rep window's "per-query min" is a single
-    * sample with no noise rejection, and it produced the off-scale ratio in
-    * every recorded r17 run (0.4444 / 0.4645 / 0.8303). Such windows stay
-    * VISIBLE in `w` (a silent drop would hide that the run was degenerate)
-    * but are excluded from the headline `ratio` median whenever at least
-    * one ≥2-rep window succeeded; if none did, the median falls back to all
-    * windows rather than reporting -1 on a run that has usable data. Which
-    * windows were median-eligible is reconstructible from the artifact: the
-    * ab_detail line records the per-window rep plan (r18 ADVICE — see
-    * [[abDetailLine]]).
+    * per-query minima across all prev windows), the per-window current/prev
+    * ratios, and their median. A 1-rep window's "min" has no noise rejection
+    * (it produced the off-scale ratio in every recorded 2/2/1 run), so such
+    * windows stay visible in `w` but leave the median whenever a ≥2-rep
+    * window succeeded. BenchLineSpec pins the worst-case width.
     */
   private[graft] def abFragmentFields(sha: String, prevTotal: Double,
                                       ratios: Seq[Double],
@@ -257,14 +247,9 @@ object Bench {
   }
 
   /** The ab_detail line: per-window prev/current suite totals, the per-query
-    * best-prev map — and, since r19 (r18 ADVICE), the per-window rep plan
-    * (`"rep_plan"`). Without it a consumer of the JSON could not tell the
-    * headline `ratio` (a median over the ≥2-rep windows) apart from the
-    * all-1-rep degenerate fallback when env vars override the 2/2/1 default:
-    * `w` alone shows the ratios, but only the rep plan shows which windows
-    * were ELIGIBLE for the median. This line is emitted early (not
-    * tail-adjacent), so the extra field costs no tail budget — the compact
-    * ab line stays untouched.
+    * best-prev map, and the per-window rep plan (`"rep_plan"`), which shows
+    * which windows were eligible for the headline median. It is printed
+    * early, not tail-adjacent, so it costs no tail budget.
     */
   private[graft] def abDetailLine(sha: String, prevTotals: Seq[Double],
                                   curTotals: Seq[Double], repPlan: Seq[Int],
@@ -294,30 +279,19 @@ object Bench {
 
       val headline = Queries.all.filter(_.bench)
       // warm each query once (codegen compile, JIT, file index), then time
-      // rotated full passes and keep the per-query min — one slow run from
-      // CI-machine contention (GC, other tenants, writeback) otherwise
-      // dominates the reported number (observed swings up to 3×). The passes
-      // are INTERLEAVED: each pass runs the whole suite in a rotated order, so
-      // a single contended wall-clock window degrades at most one of a query's
-      // samples instead of all of them back-to-back. A failing query
-      // reports -1, never a flattering near-zero timing.
-      def timed(q: Q): Double =
-        try timedPass(spark)(q.fn(spark, sfDir))
+      // rotated full passes and keep the per-query min: one contended
+      // wall-clock window (GC, other tenants, writeback) then degrades at
+      // most one of a query's samples instead of all of them back-to-back.
+      // A failing query reports -1, never a flattering near-zero timing.
+      def timed(q: Q)(pass: => Double): Double =
+        try pass
         catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: $e"); -1.0 }
-      val warmed = headline.filter(timed(_) >= 0)
-      // 5 passes (r8, was 3): the r7 driver session showed a single contended
-      // wall-clock window can poison 2 of 3 samples (sum-of-medians 43.5 s vs
-      // sum-of-mins 24.8 on identical code); two more rotated passes cost
-      // ~1 min and make the per-query min far more robust to box noise.
-      // The budget stays 5 in r18: raising it to 6 (for a 2/2/2 A/B split)
-      // would add a 6th entry to every per-query samples array and push the
-      // worst-case tail pair to 2044 chars > the driver's 2000-char capture
-      // (BenchLineSpec measured it) — the r17 1-rep-tail-window problem is
-      // fixed in abFragmentFields instead (>=2-rep windows feed the median).
+      val warmed = headline.filter(q => timed(q)(timedPass(spark)(q.fn(spark, sfDir))) >= 0)
+      val best = collection.mutable.Map.empty[String, QueryRecord]
       val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", defaultBenchReps.toString).toInt
       val nWin = sys.env.getOrElse("SPARK_GRAFT_AB_WINDOWS", "3").toInt
       // with A/B live the rep budget is split across interleaved windows
-      // (see the object scaladoc); without it, one block exactly as before
+      // (see the object scaladoc); without it, one block
       val plan: Seq[Int] = prep match {
         case AbReady(_, _) => distributeReps(reps, nWin)
         case _             => Seq(math.max(reps, 0))
@@ -338,7 +312,7 @@ object Bench {
           val shift   = if (warmed.isEmpty) 0 else rep * warmed.length / math.max(reps, 1)
           val rotated = warmed.drop(shift) ++ warmed.take(shift)
           rotated.foreach { q =>
-            val t = timed(q)
+            val t = timed(q)(recordedPass(spark, sfDir, q, best))
             samples(q.name) = t :: samples(q.name)
             winSamples(q.name) = t :: winSamples(q.name)
           }
@@ -361,8 +335,7 @@ object Bench {
             val detail = prevWins.collectFirst { case Left(d) => d }.getOrElse("no windows ran")
             Some(failFragment(sha.take(12), "bench", detail))
           } else {
-            // per-query min across all prev windows → the best-prev total,
-            // same semantics as the pre-r17 single-block field
+            // per-query min across all prev windows → the best-prev total
             val perQ = oks.flatMap(_._2.toSeq)
               .groupMapReduce(_._1)(_._2)((a, b) =>
                 if (a < 0) b else if (b < 0) a else math.min(a, b))
@@ -371,10 +344,8 @@ object Bench {
               case (Right((p, _)), c) if p > 0 && c > 0 => c / p
               case _                                    => -1.0
             }
-            // the full per-window detail goes out IMMEDIATELY on its own line
-            // — it is too long to share the driver's 2000-char tail window
-            // with the primary line, so the tail-adjacent ab line (emitted
-            // later, just before the primary) stays compact
+            // the full per-window detail goes out now on its own line; it is
+            // too long to share the 2000-char tail window with the primary line
             val prevTotals = prevWins.map {
               case Right((p, _)) => p
               case Left(_)       => -1.0
@@ -385,18 +356,18 @@ object Bench {
       }
 
       // headline number per query = min of the samples (the least-contended
-      // run). The JSON also carries ALL per-pass samples (in run order) and
-      // the median, so a driver-box regression is adjudicable from the
-      // artifact alone: min ≈ median → the query really got slower;
-      // min ≪ median → one or two passes hit machine contention, the min is
-      // the honest number. Without the samples, a 1.8× swing with zero code
-      // change (r5's c02) is unfalsifiable.
+      // run). The line also carries every per-pass sample (in run order) and
+      // the median, so a regression is adjudicable from the artifact alone:
+      // min ≈ median → the query got slower; min ≪ median → contention.
       val results = headline.map { q =>
         val ts = samples(q.name).reverse // prepended during runs → reverse to run order
         val t  = if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else ts.min
         (q.name, t, ts)
       }
       tailLines(results, ab, sfDir).foreach(println)
+      try writeRecord(new java.io.File(repoRoot, recordFile).toPath, sfDir,
+        results.collect { case (n, t, _) if t >= 0 => best(n) })
+      catch { case e: Throwable => System.err.println(s"[bench] $recordFile not written: $e") }
       spark.stop()
     } finally {
       prep match {
@@ -409,11 +380,9 @@ object Bench {
   }
 
   /** Adaptive number rendering, ≤7 chars up to 27 h: 0.1 ms resolution below
-    * 100 s, 0.1 s above — a benchmark doesn't need 17 significant digits,
-    * and the bound is what lets BenchLineSpec prove the tail pair always
-    * fits the driver's window even with 4-integer-digit contended timings.
-    * Locale.ROOT everywhere (r12 ADVICE): the default-locale f-interpolator
-    * would emit `1,2345` on a comma-decimal locale and break the JSON.
+    * 100 s, 0.1 s above. The bound is what lets BenchLineSpec prove the tail
+    * pair always fits the tail window. Locale.ROOT: a comma-decimal
+    * default locale would emit `1,2345` and break the JSON.
     */
   private[graft] def fmt(d: Double): String =
     if (d < 0) "-1"
@@ -421,16 +390,12 @@ object Bench {
     else String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
 
   /** The driver-facing tail lines: the compact A/B line first, the primary
-    * line LAST and in exactly the r10 shape — the driver parses a bounded
-    * 2000-char log tail (r11 verdict task #2 after BENCH_r11 came back
-    * unparseable), and the PAIR must fit it together: the primary measured
-    * 1804 chars worst-case on the 14-query set, so the ab line here stays
-    * ref+total+window-ratios only (~115 chars; the full per-window detail
-    * went out earlier on its own ab_detail line) and error details are
-    * capped at 120 chars. BenchLineSpec pins the ≤2000 budget against the
-    * CURRENT headline set with worst-case numeric widths, so growing the
-    * `bench = true` set past what the tail window holds fails a spec
-    * instead of silently zeroing the round's benchmark artifact.
+    * line LAST. The reader parses a bounded 2000-char log tail and the PAIR
+    * must fit it together: the primary measured 1804 chars worst-case on the
+    * 14-query set, so the ab line stays ref+total+window ratios (~115 chars)
+    * and error details are capped at 120 chars. BenchLineSpec pins the ≤2000
+    * budget against the current headline set with worst-case numeric widths,
+    * so growing the `bench = true` set past the window fails a spec.
     */
   private[graft] def tailLines(results: Seq[(String, Double, List[Double])],
                                ab: Option[String], sfDir: String): Seq[String] = {

@@ -92,7 +92,8 @@ object GraftSession {
     // upstream so a cache's output partitioning stays stable for consumers
     // that reuse it). The dedup family materializes every persist under
     // shuffle.partitions-wide exchanges, and with this off those reduce
-    // stages cannot coalesce — ProfileBench measured 32-task stages moving
+    // stages cannot coalesce — a per-stage profile (the stage rows Bench now
+    // writes to target/bench_record.json) measured 32-task stages moving
     // ~200 KB (c06 stage: 910 ms of task time for 230 ms of CPU, pure
     // launch overhead; the same pattern in every materializedPairs call).
     // Scale-adaptive by construction (AQE sizes from runtime bytes). The

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Bpe, Dedup, HttpLog, Multimodal, Overlap, SemDedup, Similarity, Skew, TextLm}
+import graft.plans.PlanAudit.physicalNodes
 
 /** One registered query of the engine.
   *
@@ -739,17 +740,6 @@ object Queries {
       |       CAST(32 AS INT) AS files_rewritten,
       |       count(*) AS rows_after, CAST(sum(requests) AS BIGINT) AS requests_total
       |FROM agg""".stripMargin))
-
-  /** Physical nodes of a plan, descending through AQE wrappers. */
-  private def physicalNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    p +: (p match {
-      case a: AdaptiveSparkPlanExec => physicalNodes(a.executedPlan)
-      case q: QueryStageExec => physicalNodes(q.plan)
-      case other => other.children.flatMap(physicalNodes)
-    })
-  }
 
   private val a23 = Q(
     "a23_totals_partitioned",

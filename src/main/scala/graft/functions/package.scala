@@ -55,14 +55,7 @@ package object functions {
   /** Distinct hashes of word k-gram shingles of normalized text. */
   def word_shingles(c: Column, k: Int = 3): Column = column(WordShingles(expression(c), k))
 
-  /** n-element MinHash signature over word k-gram shingles. */
-  def minhash_sig(c: Column, k: Int = 3, n: Int = 128): Column =
-    column(MinHashSig(expression(c), k, n))
-
-  /** MinHash signature over an already-shingled hash array — bit-identical
-    * to [[minhash_sig]] on the source text; use when the shingle array is
-    * materialized anyway so the text isn't tokenized twice.
-    */
+  /** n-element MinHash signature over a [[word_shingles]] hash array. */
   def minhash_sig_arr(sh: Column, n: Int = 128): Column =
     column(MinHashSigFromShingles(expression(sh), n))
 

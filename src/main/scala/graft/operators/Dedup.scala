@@ -139,7 +139,7 @@ object Dedup {
     * smaller than the corpus; callers holding the frame long-term can
     * `unpersist()` it when done.
     */
-  private def materializedPairs(pairs: DataFrame, caches: DataFrame*): DataFrame = {
+  private[graft] def materializedPairs(pairs: DataFrame, caches: DataFrame*): DataFrame = {
     val out = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     materialize(out) // force the pair cache so the big inputs can be released now
     caches.foreach(_.unpersist(blocking = false))
@@ -188,14 +188,14 @@ object Dedup {
     * CollapseProject (into the keys projection) nor PushDownPredicates (into
     * a caller's size filter) duplicates the tokenize+hash pass, and the
     * signature derives from the materialized shingle array (bit-identical to
-    * minhash_sig on the text — OPH is a per-bucket min, order-free). The
-    * unfenced shape evaluated word_shingles up to 3× per doc: once in the
-    * pushed-down filter, once for `sh`, once inside minhash_sig's internal
-    * re-shingling. Token-less docs get an empty `sh`; callers filter them
-    * off the band/verify side.
+    * `TextHash.minhashSig` on the text — OPH is a per-bucket min,
+    * order-free). The unfenced shape evaluated word_shingles up to 3× per
+    * doc: once in the pushed-down filter, once for `sh`, once inside a
+    * text-level MinHash's internal re-shingling. Token-less docs get an
+    * empty `sh`; callers filter them off the band/verify side.
     */
-  private def signatures(df: DataFrame, idCol: String, textCol: String,
-                         carry: Seq[String], k: Int, n: Int, bands: Int): DataFrame = {
+  private[graft] def signatures(df: DataFrame, idCol: String, textCol: String,
+                                carry: Seq[String], k: Int, n: Int, bands: Int): DataFrame = {
     val carried = carry.map(col)
     df.select(col(idCol).as("id") +: carried :+
         opt_fence(word_shingles(col(textCol), k)).as("sh"): _*)

@@ -35,7 +35,8 @@ object Similarity {
     * inside a `transform` + `array_max` per row — NO shuffle, no aggregation,
     * no corpus re-join (the previous `max_by` groupBy form cost a corpus-wide
     * shuffle + SortAggregate + an SMJ join to re-attach the embedding).
-    * Tie-break: max (cosine, cid) — identical to [[assignStateless]].
+    * Tie-break: max (cosine, cid); [[assignStateless]] is its (vec_id, cell)
+    * form.
     * Public so cluster-then-pair consumers ([[SemDedup]]) reuse the exact
     * same quantizer semantics as the ANN family.
     */
@@ -111,11 +112,6 @@ object Similarity {
     if (routeGroups > 1) assignedRouted(corpus, centroids, routeGroups)
     else assigned(corpus, centroids)
 
-  /** (vec_id, cell) nearest-centroid assignment. */
-  private def assign(corpus: DataFrame, centroids: DataFrame): DataFrame =
-    assigned(corpus.select(col("vec_id"), col("embedding")), centroids)
-      .select(col("vec_id"), col("cell"))
-
   /** One Lloyd iteration in pure DataFrame ops: new centroid = elementwise
     * mean of the vectors assigned to the cell (posexplode → per-(cell, dim)
     * mean → reassembled array). Cells that lose all members keep their id
@@ -143,14 +139,6 @@ object Similarity {
         expr("transform(array_sort(pm), x -> CAST(x.m AS FLOAT))").as("cv"))
   }
 
-  /** IVF-style ANN: deterministic seed centroids (the `nCells` lowest-id
-    * corpus vectors) refined by `refineIters` Lloyd iterations, then every
-    * vector is assigned to its nearest cell; queries probe their `nProbe`
-    * nearest cells and rank candidates by exact cosine.
-    * At scale the corpus is write-once partitioned by `cell`, so a probe
-    * reads `nProbe/nCells` of the data (partition pruning), and both
-    * assignment and refinement are embarrassingly parallel.
-    */
   /** Deterministic IVF centroids: the `nCells` lowest-id corpus vectors as
     * seeds, refined by `refineIters` Lloyd iterations. Public so an index
     * build and later probes share the exact same quantizer.
@@ -192,7 +180,7 @@ object Similarity {
   }
 
   /** Each query's `nProbe` cosine-nearest cells: (qid, qv, cell).
-    * cid DESC on cosine ties — the same tie-break as assign/assignStateless's
+    * cid DESC on cosine ties — the same tie-break as assigned/assignStateless's
     * argmax, so a query's own cell can never be cut off by the probe bound.
     */
   private def probeCells(queries: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame = {
@@ -204,6 +192,14 @@ object Similarity {
       .select(col("qid"), col("qv"), col("cid").as("cell"))
   }
 
+  /** IVF-style ANN: deterministic seed centroids (the `nCells` lowest-id
+    * corpus vectors) refined by `refineIters` Lloyd iterations, then every
+    * vector is assigned to its nearest cell; queries probe their `nProbe`
+    * nearest cells and rank candidates by exact cosine.
+    * At scale the corpus is write-once partitioned by `cell`, so a probe
+    * reads `nProbe/nCells` of the data (partition pruning), and both
+    * assignment and refinement are embarrassingly parallel.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4, refineIters: Int = 1): DataFrame = {
     val centroids = ivfCentroids(corpus, nCells, refineIters)
@@ -321,11 +317,11 @@ object Similarity {
                       nCells: Int = 16, coverage: Double = 0.25,
                       maxProbe: Int = 8, refineIters: Int = 1): DataFrame = {
     val centroids = ivfCentroids(corpus, nCells, refineIters)
-    val assignments = assign(corpus, centroids)
+    val assignments = assignStateless(corpus, centroids)
     val cellSizes = assignments.groupBy(col("cell").as("cid"))
       .agg(count(lit(1)).as("cell_n"))
     val tot = cellSizes.agg(sum("cell_n").as("tot"))
-    // tie-break matches assign (see ivfTopK)
+    // tie-break matches assignStateless (see probeCells)
     val probeW = Window.partitionBy("qid").orderBy(col("cos_c").desc, col("cid").desc)
     val probes = queries.join(broadcast(centroids))
       .withColumn("cos_c", vec_cosine(col("qv"), col("cv")))
@@ -344,21 +340,13 @@ object Similarity {
     rankTopK(cand, k)
   }
 
-  /** Nearest-centroid assignment as a stateless per-row map: centroids are
-    * folded into a single broadcast array row and the argmax runs inside one
-    * `transform` + `array_max` over it — no shuffle, no aggregation state.
-    * Identical tie-break to [[assign]] (max (cosine, cid)), so the two are
-    * interchangeable; this form is legal inside a Structured Streaming plan,
-    * which is what incremental IVF index maintenance needs.
+  /** (vec_id, cell): [[assigned]]'s per-row argmax (max (cosine, cid))
+    * without the carried columns — no shuffle, no aggregation state, so it
+    * is legal inside a Structured Streaming plan, which is what incremental
+    * IVF index maintenance needs.
     */
-  def assignStateless(vectors: DataFrame, centroids: DataFrame): DataFrame = {
-    val packed = centroids.agg(collect_list(struct(col("cid"), col("cv"))).as("cs"))
-    vectors.crossJoin(broadcast(packed))
-      .withColumn("scored", transform(col("cs"), c =>
-        struct(vec_cosine(col("embedding"), c.getField("cv")).as("sc"),
-          c.getField("cid").as("cid"))))
-      .select(col("vec_id"), array_max(col("scored")).getField("cid").as("cell"))
-  }
+  def assignStateless(vectors: DataFrame, centroids: DataFrame): DataFrame =
+    assigned(vectors, centroids).select(col("vec_id"), col("cell"))
 
   // ------------------------------------------------------- product quantization
 
@@ -557,17 +545,6 @@ object Similarity {
         .filter(col("vec_id") =!= col("qid")), k)
   }
 
-  /** LSH-bucketed ANN (the scale path): both sides key by random-hyperplane
-    * sketches (`tables` independent tables of `bits` sign-bits), candidates
-    * come from an equi-join on (table, key), then exact cosine ranks them.
-    * Planes are re-derived from hashes on every executor — nothing broadcast.
-    *
-    * `multiProbe` additionally probes every hamming-1 neighbor of each query
-    * key (bits+1 keys per table instead of 1): near-miss sign bits — the
-    * dominant LSH failure for vectors close to a hyperplane — stop costing
-    * recall, for `bits`× more (tiny, broadcast) probe rows and the same
-    * corpus-side plan.
-    */
   /** Exact late-interaction (ColBERT MaxSim) scorer — the multi-vector
     * complement to [[bruteForceTopK]] (Queries d14 documents the scheme):
     * score(q, d) = Σ_{query tokens} max_{doc vectors} cos. Determinism:
@@ -674,6 +651,17 @@ object Similarity {
         round(col("score"), 6).as("cosine"))
   }
 
+  /** LSH-bucketed ANN (the scale path): both sides key by random-hyperplane
+    * sketches (`tables` independent tables of `bits` sign-bits), candidates
+    * come from an equi-join on (table, key), then exact cosine ranks them.
+    * Planes are re-derived from hashes on every executor — nothing broadcast.
+    *
+    * `multiProbe` additionally probes every hamming-1 neighbor of each query
+    * key (bits+1 keys per table instead of 1): near-miss sign bits — the
+    * dominant LSH failure for vectors close to a hyperplane — stop costing
+    * recall, for `bits`× more (tiny, broadcast) probe rows and the same
+    * corpus-side plan.
+    */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               tables: Int = 4, bits: Int = 8, multiProbe: Boolean = false,
               maxBucket: Int = 100000): DataFrame = {

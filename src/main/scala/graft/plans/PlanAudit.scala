@@ -89,6 +89,17 @@ object PlanAudit {
   def audit(df: DataFrame): Seq[Finding] =
     auditPlan(df.queryExecution.executedPlan)
 
+  /** Every physical node of a plan, descending through AQE's wrappers
+    * (`AdaptiveSparkPlanExec`, query stages), which hide live subtrees
+    * behind accessors rather than `children`. Cached plans under in-memory
+    * scans are not entered.
+    */
+  def physicalNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => physicalNodes(a.executedPlan)
+    case q: QueryStageExec => physicalNodes(q.plan)
+    case other => other.children.flatMap(physicalNodes)
+  })
+
   def auditPlan(root: SparkPlan): Seq[Finding] = {
     // ≤1 output row per input partition — the benign global-scalar shape.
     // Codegen wrappers (WholeStageCodegen/InputAdapter) sit between an
@@ -102,13 +113,6 @@ object PlanAudit {
       case b: BaseAggregateExec => b.groupingExpressions.isEmpty
       case _ => false
     }
-    // AdaptiveSparkPlanExec / query stages hide live subtrees behind
-    // accessors, not `children` — descend through both
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case other => other.children.flatMap(walk)
-    })
     def collectsUnbounded(b: BaseAggregateExec): Boolean =
       b.aggregateExpressions.exists(_.aggregateFunction match {
         case _: org.apache.spark.sql.catalyst.expressions.aggregate.CollectList => true
@@ -125,7 +129,7 @@ object PlanAudit {
       case _ => None
     }
     def hasBroadcastPruneOn(p: SparkPlan, names: Set[String]): Boolean =
-      walk(p).exists {
+      physicalNodes(p).exists {
         case b: BroadcastHashJoinExec =>
           keyNames(b.leftKeys ++ b.rightKeys).exists(names)
         case _ => false
@@ -149,7 +153,7 @@ object PlanAudit {
     }
     // a node can exhibit more than one hazard (a keyed SortAggregate that
     // also collects) — emit every match, not the first
-    walk(root).flatMap { p =>
+    physicalNodes(root).flatMap { p =>
       val structural: Seq[Finding] = p match {
         case c: CartesianProductExec =>
           Seq(Finding("cartesian", "error", c.simpleStringWithNodeId()))

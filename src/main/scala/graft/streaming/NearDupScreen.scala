@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions._
+import graft.operators.Dedup
 
 /** Stream-vs-static near-duplicate screen: incoming documents are checked
   * against an indexed static corpus — the admission-control step of a
@@ -23,32 +24,16 @@ import graft.functions._
   */
 object NearDupScreen {
 
-  /** Banded index + shingle sets of the static corpus — persisted, so
-    * "build once, reuse for every micro-batch" is real and not a full
-    * corpus re-shingle per batch; long-lived callers `unpersist()` it when
-    * the stream stops. (corpus_id, band, key, csh).
-    *
-    * Token-less corpus docs are excluded (an empty shingle set has the
-    * constant densified signature — every blank doc would collide with
-    * every other on all bands, then 0/0 the Jaccard verify), and
-    * `maxBucket` drops degenerate buckets exactly like the batch family's
-    * [[graft.operators.Dedup]] band-join guard: a boilerplate bucket of N
-    * corpus docs would otherwise cost every matching incoming doc N verify
-    * rows per micro-batch.
-    */
   /** (id, shingles, band, key) of one side — blank (token-less) docs
-    * excluded; shared by the corpus index, the screen, and the disk probe so
-    * signatures are computed in exactly one place.
+    * excluded; shared by the corpus index, the screen, and the disk probe.
+    * Built on [[Dedup.signatures]], which shingles each document once.
     */
   private def bandedSide(df: DataFrame, idCol: String, textCol: String,
                          outId: String, shCol: String,
                          k: Int, n: Int, bands: Int): DataFrame =
-    df.select(
-      col(idCol).as(outId),
-      word_shingles(col(textCol), k).as(shCol),
-      lsh_band_keys(minhash_sig(col(textCol), k, n), bands).as("keys"))
-      .filter(size(col(shCol)) > 0)
-      .select(col(outId), col(shCol),
+    Dedup.signatures(df, idCol, textCol, Nil, k, n, bands)
+      .filter(size(col("sh")) > 0)
+      .select(col("id").as(outId), col("sh").as(shCol),
         posexplode(col("keys")).as(Seq("band", "key")))
 
   /** Band-collision join + exact sorted-merge Jaccard verify of a banded
@@ -65,6 +50,19 @@ object NearDupScreen {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_id"), col("corpus_id"), round(col("jaccard"), 4).as("jaccard"))
 
+  /** Banded index + shingle sets of the static corpus — persisted, so
+    * "build once, reuse for every micro-batch" is real and not a full
+    * corpus re-shingle per batch; long-lived callers `unpersist()` it when
+    * the stream stops. (corpus_id, band, key, csh).
+    *
+    * Token-less corpus docs are excluded (an empty shingle set has the
+    * constant densified signature — every blank doc would collide with
+    * every other on all bands, then 0/0 the Jaccard verify), and
+    * `maxBucket` drops degenerate buckets exactly like the batch family's
+    * [[graft.operators.Dedup]] band-join guard: a boilerplate bucket of N
+    * corpus docs would otherwise cost every matching incoming doc N verify
+    * rows per micro-batch.
+    */
   def corpusIndex(corpus: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, n: Int = 128, bands: Int = 32,
                   maxBucket: Int = 100000): DataFrame = {
@@ -87,18 +85,14 @@ object NearDupScreen {
       index, threshold)
 
   /** Batch form: distinct verified (doc, corpus) flags, materialized so the
-    * internally-built index cache is released before returning (same
-    * lifecycle as the Dedup family's pair materialization).
+    * internally-built index cache is released before returning (the Dedup
+    * family's [[Dedup.materializedPairs]]).
     */
   def screen(incoming: DataFrame, corpus: DataFrame, idCol: String,
              textCol: String, threshold: Double = 0.5): DataFrame = {
     val index = corpusIndex(corpus, idCol, textCol)
-    val out = screenRaw(incoming, index, idCol, textCol, threshold = threshold)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    index.unpersist(blocking = false)
-    out
+    Dedup.materializedPairs(
+      screenRaw(incoming, index, idCol, textCol, threshold = threshold).distinct(), index)
   }
 
   /** Disk-served band index — the LSH analogue of
@@ -143,10 +137,6 @@ object NearDupScreen {
         + pmod(col("key"), lit(nBuckets.toLong))).cast("int")).as("pb"))
       .distinct().collect().map(_.getInt(0))
     val index = spark.read.parquet(path).filter(col("pb").isin(pbs.map(Integer.valueOf): _*))
-    val out = verifyJoin(banded, index, threshold).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    banded.unpersist(blocking = false)
-    out
+    Dedup.materializedPairs(verifyJoin(banded, index, threshold).distinct(), banded)
   }
 }

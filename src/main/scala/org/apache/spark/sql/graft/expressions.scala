@@ -252,26 +252,9 @@ case class WordShingles(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** `minhash_sig(text, k, n)` — n-element MinHash signature over word
-  * k-gram shingles.
-  */
-case class MinHashSig(child: Expression, k: Int, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    graft.functions.TextHash.minhashSig(input.asInstanceOf[UTF8String], k, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextHash.minhashSig($c, $k, $n)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 /** `minhash_sig_arr(shingles, n)` — MinHash signature over a pre-hashed
-  * shingle array; bit-identical to `minhash_sig` on the text the shingles
-  * came from (see [[graft.functions.TextHash.minhashSigFromShingles]]).
+  * shingle array; bit-identical to `TextHash.minhashSig` on the text the
+  * shingles came from (see [[graft.functions.TextHash.minhashSigFromShingles]]).
   */
 case class MinHashSigFromShingles(child: Expression, n: Int)
     extends UnaryExpression with ImplicitCastInputTypes {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.telemetry.ActionTrace
 
 /** Known-answer tests for the dedup family over the planted-duplicate corpus
   * (see Queries.corpus): doc_id%20==0 → exact copy at id+100000,
@@ -247,24 +248,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a warm cleanCorpus call starts exactly one SQL execution") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val starts = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case _: SparkListenerSQLExecutionStart => starts.incrementAndGet()
-        case _ =>
-      }
-    }
     Dedup.cleanCorpus(corpus, "doc_id", "text").unpersist(blocking = true) // warm-up
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = Dedup.cleanCorpus(corpus, "doc_id", "text")
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      assert(starts.get == 1, s"${starts.get} SQL executions for one cleanCorpus call")
-      out.unpersist(blocking = true)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (out, trace) = ActionTrace.during(spark)(Dedup.cleanCorpus(corpus, "doc_id", "text"))
+    assert(trace.sqlExecutions == 1, s"${trace.sqlExecutions} SQL executions for one cleanCorpus call")
+    out.unpersist(blocking = true)
   }
 
   /** ~0.9 MB of text in 2 150 docs, the size of a bench pass: 320 docs
@@ -292,12 +279,11 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec, ShuffleQueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    import org.apache.spark.sql.util.QueryExecutionListener
     // one exchange's map side: the nodes down to the previous stage boundary
     def mapSide(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
       case _: ShuffleExchangeLike | _: QueryStageExec | _: InMemoryTableScanExec => Nil
@@ -324,32 +310,22 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
         case _ => (Nil, false, e.numPartitions)
       }}
     }
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     Dedup.cleanCorpus(mbCorpus, "doc_id", "text").unpersist(blocking = true) // warm-up
-    org.apache.spark.TestBus.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      val out = Dedup.cleanCorpus(mbCorpus, "doc_id", "text")
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      out.unpersist(blocking = true)
-      assert(plans.size == 1)
-      val all = exchanges(plans.peek())
-      val seen = all.filter { case (keys, _, _) =>
-        Seq(Seq("fp"), Seq("band", "key"), Seq("id_a")).contains(keys) }
-      assert(seen.map(_._1).toSet == Set(Seq("fp"), Seq("band", "key"), Seq("id_a")),
-        s"exchanges found: $all")
-      // a hot bucket's capped buffer and an exact-copy group collapse
-      // before their exchange, not after it
-      assert(seen.filter(_._1 != Seq("id_a")).forall(_._2),
-        s"group-by exchanges without a map-side partial aggregate: $seen")
-      assert(seen.forall(_._3 == n), s"stage tasks per exchange (want $n): $seen")
-    } finally spark.listenerManager.unregister(listener)
+    val (out, trace) = ActionTrace.during(spark)(Dedup.cleanCorpus(mbCorpus, "doc_id", "text"))
+    out.unpersist(blocking = true)
+    val plans = trace.executions.map(_.executedPlan)
+    assert(plans.size == 1)
+    val all = exchanges(plans.head)
+    val seen = all.filter { case (keys, _, _) =>
+      Seq(Seq("fp"), Seq("band", "key"), Seq("id_a")).contains(keys) }
+    assert(seen.map(_._1).toSet == Set(Seq("fp"), Seq("band", "key"), Seq("id_a")),
+      s"exchanges found: $all")
+    // a hot bucket's capped buffer and an exact-copy group collapse
+    // before their exchange, not after it
+    assert(seen.filter(_._1 != Seq("id_a")).forall(_._2),
+      s"group-by exchanges without a map-side partial aggregate: $seen")
+    assert(seen.forall(_._3 == n), s"stage tasks per exchange (want $n): $seen")
   }
 
   test("weighted minhash finds every planted exact dup at weighted jaccard 1.0") {

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.plans.PlanAudit.physicalNodes
+import graft.telemetry.ActionTrace
 
 /** Plan-shape contract for Graph.pageRank's iteration join (SURVEY §2 b43,
   * §4): the edge list is hash-partitioned by `src` BEFORE persist, so in
@@ -20,16 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GraphSpec extends AnyFunSuite with SparkTestBase {
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-    case q: QueryStageExec => walk(q.plan)
-    case other => other.children.flatMap(walk)
-  })
-
   private def hasCacheScan(p: SparkPlan): Boolean =
-    walk(p).exists(_.isInstanceOf[InMemoryTableScanExec])
+    physicalNodes(p).exists(_.isInstanceOf[InMemoryTableScanExec])
   private def hasShuffle(p: SparkPlan): Boolean =
-    walk(p).exists(_.isInstanceOf[ShuffleExchangeLike])
+    physicalNodes(p).exists(_.isInstanceOf[ShuffleExchangeLike])
 
   private def withConf[A](pairs: (String, String)*)(body: => A): A = {
     val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -60,7 +56,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
         val it = graft.operators.Graph.step(edges, deg, 1L)(ranks)
         it.write.format("noop").mode("overwrite").save() // finalize AQE stages
         val plan = it.queryExecution.executedPlan
-        val joins = walk(plan).collect {
+        val joins = physicalNodes(plan).collect {
           case j: SortMergeJoinExec => (j.leftKeys ++ j.rightKeys, j.left, j.right)
           case j: ShuffledHashJoinExec => (j.leftKeys ++ j.rightKeys, j.left, j.right)
         }
@@ -76,7 +72,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
           case i: org.apache.spark.sql.execution.InputAdapter => unwrap(i.child)
           case other => other
         }
-        walk(plan).collect { case s: ShuffleExchangeLike => s }.foreach { s =>
+        physicalNodes(plan).collect { case s: ShuffleExchangeLike => s }.foreach { s =>
           if (hasCacheScan(s)) {
             val aggregated = unwrap(s.child)
               .isInstanceOf[org.apache.spark.sql.execution.aggregate.BaseAggregateExec]
@@ -86,7 +82,7 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
         }
         // the rank vector is the side that moves: at least one shuffle in
         // the plan overall (ranks exchange and/or the dst aggregation)
-        assert(walk(plan).exists(_.isInstanceOf[ShuffleExchangeLike]))
+        assert(physicalNodes(plan).exists(_.isInstanceOf[ShuffleExchangeLike]))
       }
     } finally edges.unpersist(blocking = true)
   }
@@ -108,10 +104,8 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
 
   test("no round of pageRank or pageRankUntil shuffles the raw cached edge list") {
     import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter,
-      ProjectExec, QueryExecution, WholeStageCodegenExec}
+      ProjectExec, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.TableCacheQueryStageExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    import scala.jdk.CollectionConverters._
     def source(p: SparkPlan): SparkPlan = p match {
       case w: WholeStageCodegenExec => source(w.child)
       case i: InputAdapter => source(i.child)
@@ -129,22 +123,10 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
       }
       case _ => false
     }
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        actions.add(rawEdgeExchanges(qe.executedPlan))
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
     /** (result, raw-edge exchanges per action the body ran) */
     def traced[A](body: => A): (A, Seq[Int]) = {
-      org.apache.spark.TestBus.drain(spark.sparkContext)
-      actions.clear()
-      spark.listenerManager.register(listener)
-      try {
-        val a = body
-        org.apache.spark.TestBus.drain(spark.sparkContext)
-        (a, actions.asScala.toList)
-      } finally spark.listenerManager.unregister(listener)
+      val (a, trace) = ActionTrace.during(spark)(body)
+      (a, trace.executions.map(qe => rawEdgeExchanges(qe.executedPlan)))
     }
     spark.sharedState.cacheManager.clearCache()
     val li = Tables.lineitem(spark, sfDir)

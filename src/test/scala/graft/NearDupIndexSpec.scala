@@ -60,7 +60,7 @@ class NearDupIndexSpec extends AnyFunSuite with SparkTestBase {
       // one doc touches ≤ bands (=32) pb partitions out of the corpus's spread
       val touched = one
         .select(posexplode(graft.functions.lsh_band_keys(
-          graft.functions.minhash_sig(col("text")), 32)).as(Seq("band", "key")))
+          graft.functions.minhash_sig_arr(graft.functions.word_shingles(col("text"))), 32)).as(Seq("band", "key")))
         .select((col("band") * 64 + pmod(col("key"), lit(64L))).cast("int").as("pb"))
         .distinct().count()
       assert(touched <= 32 && touched < total,

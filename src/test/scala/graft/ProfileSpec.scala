@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Profile
+import graft.plans.PlanAudit.physicalNodes
 
 /** Single-scan table profiling (SURVEY §2 b48): the whole profile must be
   * ONE pass — one file scan, one ungrouped aggregate, a one-row shuffle —
@@ -19,16 +19,10 @@ class ProfileSpec extends AnyFunSuite with SparkTestBase {
     ("o_orderkey", "int"), ("o_custkey", "int"), ("o_orderstatus", "str"),
     ("o_totalprice", "num"), ("o_orderdate", "ts"), ("o_orderpriority", "str"))
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-    case q: QueryStageExec => walk(q.plan)
-    case other => other.children.flatMap(walk)
-  })
-
   test("one scan, ungrouped aggregate, one-row exchange — regardless of table width") {
     val df = Profile.profile(Tables.orders(spark, sfDir), cols)
     df.write.format("noop").mode("overwrite").save()
-    val plan = walk(df.queryExecution.executedPlan)
+    val plan = physicalNodes(df.queryExecution.executedPlan)
     val scans = plan.collect { case s: FileSourceScanExec => s }
     assert(scans.length == 1, s"profile must read the table once, saw ${scans.length} scans")
     val shuffles = plan.collect { case s: ShuffleExchangeLike => s }

@@ -74,17 +74,11 @@ class QueriesRound8bSpec extends AnyFunSuite with SparkTestBase {
     // by broadcast, and every ShuffleExchange in the plan carries only
     // scalar (aggregated-score) columns — an array-typed attribute crossing
     // a shuffle would mean corpus embeddings on the wire
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import graft.plans.PlanAudit.physicalNodes
     val df = Queries.all.find(_.name == "d14_maxsim").get.fn(spark, sfDir)
     df.write.format("noop").mode("overwrite").save()
-    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case other => other.children.flatMap(walk)
-    })
-    val shuffles = walk(df.queryExecution.executedPlan)
+    val shuffles = physicalNodes(df.queryExecution.executedPlan)
       .collect { case s: ShuffleExchangeLike => s }
     assert(shuffles.nonEmpty, "expected the keyed score aggregation to shuffle")
     shuffles.foreach { s =>

@@ -65,8 +65,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   test("stateless centroid assignment equals the aggregate form") {
     val centroids = emb.orderBy("vec_id").limit(8)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    // private assign() drives ivfTopK; reproduce its contract via the public
-    // maintenance surface and compare against a direct argmax recomputation
+    // assignStateless drives ivfTopKAdaptive and IVF maintenance; compare it
+    // against a direct argmax recomputation
     val stateless = Similarity.assignStateless(emb, centroids)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val direct = emb.join(broadcast(centroids))

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.{HttpLogPipeline, RateLimiter, Recovery, Sinks}
 import graft.sources.KafkaShaped
+import graft.telemetry.ActionTrace
 
 case class StreamLog(ts: Timestamp, resource_id: Long, response_status: Int,
                      cache_status: String, remote_addr: String,
@@ -191,39 +192,25 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("totals sink: a warm micro-batch compiles no code and shuffles once") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.command.DataWritingCommandExec
     import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.util.QueryExecutionListener
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case other => other.children.flatMap(nodes)
-    })
-    val writes = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        nodes(qe.executedPlan).collectFirst { case w: DataWritingCommandExec => w }
-          .foreach(writes.add)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
+    import graft.plans.PlanAudit.physicalNodes
     val batches = sinkInput(60, parts = 3)
     withTempDir("graft_sink_warm") { dir =>
       val sink = Recovery.totalsBatchSink(s"$dir/sink")
       sink(batches(0), 0L)
       sink(batches(1), 1L)
-      spark.listenerManager.register(listener)
-      try {
+      val (_, trace) = ActionTrace.during(spark) {
         val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         sink(batches(2), 2L)
         assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
           "a new batch id must reuse the warm batches' generated code")
-        val write = Option(writes.poll(10, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(fail("the sink's write was not reported"))
-        val exchanges = nodes(write).count(_.isInstanceOf[Exchange])
-        assert(exchanges == 1, s"expected the aggregation's exchange only:\n$write")
-      } finally spark.listenerManager.unregister(listener)
+      }
+      val write = trace.executions.flatMap(qe => physicalNodes(qe.executedPlan))
+        .collectFirst { case w: DataWritingCommandExec => w }
+        .getOrElse(fail("the sink's write was not reported"))
+      val exchanges = physicalNodes(write).count(_.isInstanceOf[Exchange])
+      assert(exchanges == 1, s"expected the aggregation's exchange only:\n$write")
       assert(Recovery.finalTotals(spark, s"$dir/sink").agg(sum("requests"))
         .head().getLong(0) == batches.map(_.count()).sum)
     }
