@@ -59,6 +59,14 @@ object Queries {
       emb.filter(col("vec_id") % 25 === 0).withColumn("vec_id", col("vec_id") + 100000))
   }
 
+  /** [[augEmbeddings]] in SQL as CTE `aug`(vec_id, e DOUBLE[]). */
+  private val augEmbeddingsCte: String =
+    """aug AS (
+      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
+      |  UNION ALL
+      |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
+      |  FROM embeddings WHERE vec_id % 25 = 0)""".stripMargin
+
   /** DuckDB equivalent of anonymize_ip over the view's IPv4 addresses. */
   private val anonV4Sql = """regexp_replace(remote_addr, '\.[0-9]+$', '.x')"""
 
@@ -86,11 +94,7 @@ object Queries {
     val dot8 = (1 to 8).map(j => s"q.nv[b.sub * 8 + $j] * b.cv[$j]").mkString(" + ")
     val adcSum = (0 until 8)
       .map(s => s"max(CASE WHEN l.sub = $s THEN l.v END)").mkString(" + ")
-    s"""WITH aug AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-      |  FROM embeddings WHERE vec_id % 25 = 0),
+    s"""WITH $augEmbeddingsCte,
       |nrm AS (
       |  SELECT vec_id, e, list_transform(e, x -> x / sqrt($normSq)) AS nv
       |  FROM aug),
@@ -2082,19 +2086,12 @@ object Queries {
       |       n_keys, p50_rows, p99_rows
       |FROM c CROSS JOIN s ORDER BY cnt DESC, user_id LIMIT 10""".stripMargin))
 
-  private val b38 = Q(
-    "b38_funnel",
-    // Earliest-anchor funnel (stricter than ClickHouse windowFunnel — see
-    // b40 for CH re-anchoring parity): how far down view→click→purchase
-    // does each user get within 24 h of their FIRST view? One shuffle into
-    // a k-bounded aggregate (skew-safe: per-user state capped, non-step
-    // events absorbed map-side); oracle states the cascading-min
-    // definition, which the greedy fold provably equals.
-    (s, dir) => operators.Funnel.windowFunnel(
-        Tables.events(s, dir), "user_id", "ts", "event_type",
-        Seq("view", "click", "purchase"), 86400000000L)
-      .groupBy("level").agg(count(lit(1)).as("n_users")),
-    Some("""WITH t1 AS (
+  /** b38's cascading-min funnel oracle: each user's level on view → click
+    * → purchase, each step strictly after the previous one and within 24 h
+    * of the user's first view; g06 pins its streaming fold to the same SQL.
+    */
+  private val funnelOracleSql: String =
+    """WITH t1 AS (
       |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
       |  WHERE event_type = 'view' GROUP BY 1),
       |t2 AS (
@@ -2116,7 +2113,21 @@ object Queries {
       |  LEFT JOIN t1 USING (user_id) LEFT JOIN t2 USING (user_id)
       |  LEFT JOIN t3 USING (user_id))
       |SELECT CAST(level AS INT) AS level, count(*) AS n_users
-      |FROM lv GROUP BY level""".stripMargin))
+      |FROM lv GROUP BY level""".stripMargin
+
+  private val b38 = Q(
+    "b38_funnel",
+    // Earliest-anchor funnel (stricter than ClickHouse windowFunnel — see
+    // b40 for CH re-anchoring parity): how far down view→click→purchase
+    // does each user get within 24 h of their FIRST view? One shuffle into
+    // a k-bounded aggregate (skew-safe: per-user state capped, non-step
+    // events absorbed map-side); oracle states the cascading-min
+    // definition, which the greedy fold provably equals.
+    (s, dir) => operators.Funnel.windowFunnel(
+        Tables.events(s, dir), "user_id", "ts", "event_type",
+        Seq("view", "click", "purchase"), 86400000000L)
+      .groupBy("level").agg(count(lit(1)).as("n_users")),
+    Some(funnelOracleSql))
 
   private val b40 = Q(
     "b40_funnel_reanchor",
@@ -2257,6 +2268,36 @@ object Queries {
       |FROM http_log
       |GROUP BY 1, 2""".stripMargin))
 
+  /** b39's weekly cohort matrix oracle: users cohorted by first-active
+    * week, each (cohort, week_offset) cell's active users and their share
+    * of the cohort; g07 pins its streaming fold to the same SQL.
+    */
+  private val retentionOracleSql: String =
+    """WITH weeks AS (
+      |  SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events),
+      |firsts AS (SELECT user_id, min(wk) AS cohort FROM weeks GROUP BY 1),
+      |cells AS (
+      |  SELECT cohort, CAST(date_diff('day', cohort, wk) / 7 AS INT) AS week_offset,
+      |         count(*) AS active_users
+      |  FROM weeks JOIN firsts USING (user_id) GROUP BY 1, 2),
+      |sizes AS (SELECT cohort, active_users AS cohort_size FROM cells
+      |          WHERE week_offset = 0)
+      |SELECT CAST(cohort AS TIMESTAMP) AS cohort, week_offset, active_users,
+      |       round(CAST(active_users AS DOUBLE) / cohort_size, 4) AS retention
+      |FROM cells JOIN sizes USING (cohort)""".stripMargin
+
+  /** Each retention cell's share of its cohort (the week-0 cell), the small
+    * cohort-size side broadcast.
+    */
+  private def retentionShares(cells: DataFrame): DataFrame = {
+    val sizes = cells.filter(col("week_offset") === 0)
+      .select(col("cohort"), col("active_users").as("cohort_size"))
+    cells.join(broadcast(sizes), "cohort")
+      .select(col("cohort"), col("week_offset"), col("active_users"),
+        round(col("active_users").cast("double") / col("cohort_size"), 4)
+          .as("retention"))
+  }
+
   private val b39 = Q(
     "b39_retention",
     // weekly cohort retention (the other signature dashboard matrix): users
@@ -2274,25 +2315,9 @@ object Queries {
           (datediff(col("wk"), col("cohort")) / 7).cast("int"))
         .groupBy("cohort", "week_offset")
         .agg(count(lit(1)).as("active_users"))
-      val sizes = cells.filter(col("week_offset") === 0)
-        .select(col("cohort"), col("active_users").as("cohort_size"))
-      cells.join(broadcast(sizes), "cohort")
-        .select(col("cohort"), col("week_offset"), col("active_users"),
-          round(col("active_users").cast("double") / col("cohort_size"), 4)
-            .as("retention"))
+      retentionShares(cells)
     },
-    Some("""WITH weeks AS (
-      |  SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events),
-      |firsts AS (SELECT user_id, min(wk) AS cohort FROM weeks GROUP BY 1),
-      |cells AS (
-      |  SELECT cohort, CAST(date_diff('day', cohort, wk) / 7 AS INT) AS week_offset,
-      |         count(*) AS active_users
-      |  FROM weeks JOIN firsts USING (user_id) GROUP BY 1, 2),
-      |sizes AS (SELECT cohort, active_users AS cohort_size FROM cells
-      |          WHERE week_offset = 0)
-      |SELECT CAST(cohort AS TIMESTAMP) AS cohort, week_offset, active_users,
-      |       round(CAST(active_users AS DOUBLE) / cohort_size, 4) AS retention
-      |FROM cells JOIN sizes USING (cohort)""".stripMargin))
+    Some(retentionOracleSql))
 
   private val b43 = Q(
     "b43_pagerank",
@@ -2449,28 +2474,33 @@ object Queries {
     Some("WITH " + profileSqlBlocks("orders", "x").mkString(",\n") + "\n" +
       profileUnion("x")))
 
+  /** A profiled column's canonical integer repr (doubles → e4 fixed point,
+    * timestamps → epoch micros; NULL for strings) and its KMV hash input.
+    */
+  private def profileRepr(c: String, kind: String): String = kind match {
+    case "int" => s"CAST($c AS BIGINT)"
+    case "num" => s"CAST(floor($c * 10000) AS BIGINT)"
+    case "ts"  => s"epoch_us($c)"
+    case _     => "CAST(NULL AS BIGINT)"
+  }
+
+  private def profileHash(c: String, kind: String): String =
+    if (kind == "str") s"md5($c)" else s"md5(CAST(${profileRepr(c, kind)} AS VARCHAR))"
+
   /** The b48 profile replayed in SQL over source `src`, CTE names prefixed
     * with `tag` so two profiles compose in one statement (b49 drift).
     */
   private def profileSqlBlocks(src: String, tag: String,
                                cols: Seq[(String, String)] = profileCols): Seq[String] = {
-    def repr(c: String, kind: String): String = kind match {
-      case "int" => s"CAST($c AS BIGINT)"
-      case "num" => s"CAST(floor($c * 10000) AS BIGINT)"
-      case "ts"  => s"epoch_us($c)"
-      case _     => "CAST(NULL AS BIGINT)"
-    }
-    def hashSql(c: String, kind: String): String =
-      if (kind == "str") s"md5($c)" else s"md5(CAST(${repr(c, kind)} AS VARCHAR))"
     cols.map { case (c, kind) =>
       val (minN, maxN) =
         if (kind == "str") ("CAST(NULL AS BIGINT)", "CAST(NULL AS BIGINT)")
-        else (s"(SELECT min(${repr(c, kind)}) FROM $src)",
-              s"(SELECT max(${repr(c, kind)}) FROM $src)")
+        else (s"(SELECT min(${profileRepr(c, kind)}) FROM $src)",
+              s"(SELECT max(${profileRepr(c, kind)}) FROM $src)")
       val (minS, maxS) =
         if (kind == "str") (s"(SELECT min($c) FROM $src)", s"(SELECT max($c) FROM $src)")
         else ("CAST(NULL AS VARCHAR)", "CAST(NULL AS VARCHAR)")
-      s"""dh_${tag}_$c AS (SELECT DISTINCT ${hashSql(c, kind)} AS h FROM $src WHERE $c IS NOT NULL),
+      s"""dh_${tag}_$c AS (SELECT DISTINCT ${profileHash(c, kind)} AS h FROM $src WHERE $c IS NOT NULL),
          |k_${tag}_$c AS (SELECT count(*) AS nd,
          |         (SELECT h FROM dh_${tag}_$c ORDER BY h LIMIT 1 OFFSET 63) AS kth_hash
          |         FROM dh_${tag}_$c),
@@ -2490,6 +2520,19 @@ object Queries {
                            cols: Seq[(String, String)] = profileCols): String =
     cols.map { case (c, _) => s"SELECT * FROM p_${tag}_$c" }
       .mkString("\nUNION ALL\n")
+
+  /** Profile.drift's integer metrics of current profile `c` against
+    * baseline `p`: ppm null-rate delta, ppm distinct ratio, range escape.
+    */
+  private val driftColumnsSql: String =
+    """  CAST(floor(c.n_nulls * 1000000 / c.n_rows)
+      |       - floor(p.n_nulls * 1000000 / p.n_rows) AS BIGINT) AS null_rate_delta_e6,
+      |  CAST(floor(c.n_distinct_est * 1000000
+      |             / greatest(p.n_distinct_est, 1)) AS BIGINT) AS distinct_ratio_e6,
+      |  (coalesce(c.min_num < p.min_num, FALSE)
+      |   OR coalesce(c.max_num > p.max_num, FALSE)
+      |   OR coalesce(c.min_str < p.min_str, FALSE)
+      |   OR coalesce(c.max_str > p.max_str, FALSE)) AS range_widened""".stripMargin
 
   private val b49 = Q(
     "b49_profile_drift",
@@ -2521,14 +2564,7 @@ object Queries {
            |profp AS (${profileUnion("p")})
            |SELECT c."column", c.kind,
            |  c.n_rows AS n_rows_cur, p.n_rows AS n_rows_prev,
-           |  CAST(floor(c.n_nulls * 1000000 / c.n_rows)
-           |       - floor(p.n_nulls * 1000000 / p.n_rows) AS BIGINT) AS null_rate_delta_e6,
-           |  CAST(floor(c.n_distinct_est * 1000000
-           |             / greatest(p.n_distinct_est, 1)) AS BIGINT) AS distinct_ratio_e6,
-           |  (coalesce(c.min_num < p.min_num, FALSE)
-           |   OR coalesce(c.max_num > p.max_num, FALSE)
-           |   OR coalesce(c.min_str < p.min_str, FALSE)
-           |   OR coalesce(c.max_str > p.max_str, FALSE)) AS range_widened
+           |$driftColumnsSql
            |FROM profc c JOIN profp p ON c."column" = p."column"""".stripMargin
     })
 
@@ -2825,29 +2861,90 @@ object Queries {
       |FROM corpus GROUP BY 1""".stripMargin),
     bench = true)
 
-  /** Shared oracle CTE chain: distinct word-3-gram sets of normalized text
-    * (c04's template), then pair intersection sizes via a gram equi-join —
-    * the DuckDB mirror of what [[graft.functions.TextHash.wordShingles]]
-    * hashes (collision-free at this cardinality, so counts match exactly).
-    * Token-less docs are excluded on both sides (see ngramJaccardPairs).
+  /** Distinct word-3-gram sets of normalized text, as CTEs `<p>toks` and
+    * `<p>grams` (columns `cols` + gram set `g`) over the rows of `src` that
+    * pass `where` and have a token — c04's template, the DuckDB mirror of
+    * what [[graft.functions.TextHash.wordShingles]] hashes (collision-free
+    * at this cardinality, so counts match exactly). Token-less docs are
+    * excluded on both sides (see ngramJaccardPairs).
     */
-  private def gramCtes(src: String): String =
-    s"""toks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-      |  FROM $src
-      |  WHERE len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
+  private def gramSets(p: String, src: String, where: String = "",
+                       cols: String = "doc_id"): String = {
+    val filter = if (where.isEmpty) "\n  WHERE" else s" WHERE $where\n    AND"
+    s"""${p}toks AS (
+      |  SELECT $cols, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
+      |  FROM $src$filter len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
       |                        x -> x <> '')) > 0),
-      |grams AS (
-      |  SELECT doc_id,
+      |${p}grams AS (
+      |  SELECT $cols,
       |         list_distinct(CASE WHEN len(t) >= 3
       |           THEN list_transform(range(1, len(t) - 1),
       |                               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
       |           ELSE t END) AS g
-      |  FROM toks),
+      |  FROM ${p}toks)""".stripMargin
+  }
+
+  /** Shared oracle CTE chain: [[gramSets]] over `src`, then pair
+    * intersection sizes via a gram equi-join.
+    */
+  private def gramCtes(src: String): String =
+    s"""${gramSets("", src)},
       |ex AS (SELECT doc_id, unnest(g) AS gram FROM grams),
       |pair_inter AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.gram
       |  FROM ex a JOIN ex b ON a.gram = b.gram AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** Per-pair shared-gram counts `inter` and per-doc set sizes `sizes` over
+    * [[gramCtes]] — the inputs of the exact gram Jaccard.
+    */
+  private val pairSizeCtes: String =
+    """inter AS (
+      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
+      |sizes AS (SELECT doc_id, len(g) AS n FROM grams)""".stripMargin
+
+  /** Joins `inter` to both docs' `sizes` and keeps gram Jaccard ≥ 0.5. */
+  private val jaccardAtLeastHalf: String =
+    """  JOIN sizes sa ON sa.doc_id = id_a
+      |  JOIN sizes sb ON sb.doc_id = id_b
+      |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5""".stripMargin
+
+  /** Recursive min-label closure over the pair graph `pj`(id_a, id_b) (needs
+    * `WITH RECURSIVE`): `reach`(id, r) pairs each node with every node
+    * label that reaches it, so a node's component rep is its min(r).
+    */
+  private val closureCtes: String =
+    """nodes AS (SELECT id_a AS id FROM pj UNION SELECT id_b FROM pj),
+      |edges AS (SELECT id_a AS u, id_b AS v FROM pj
+      |          UNION ALL SELECT id_b, id_a FROM pj),
+      |reach(id, r) AS (
+      |  SELECT id, id AS r FROM nodes
+      |  UNION
+      |  SELECT e.v AS id, reach.r FROM reach JOIN edges e ON e.u = reach.id)""".stripMargin
+
+  /** [[pairSizeCtes]], the Jaccard ≥ 0.5 pairs `pj`, and their [[closureCtes]]. */
+  private val pairClosureCtes: String =
+    s"""$pairSizeCtes,
+      |pj AS (
+      |  SELECT id_a, id_b FROM inter
+      |$jaccardAtLeastHalf),
+      |$closureCtes""".stripMargin
+
+  /** c06's keeper stage over `corpus` — length floor (≥ 5 tokens), exact
+    * dedup keeping the min id: `kept`(doc_id, fp, exact_copies, text) —
+    * then [[gramCtes]] over the keepers.
+    */
+  private val keeperCtes: String =
+    s"""longe AS (
+      |  SELECT doc_id, text FROM corpus
+      |  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5),
+      |exd AS (
+      |  SELECT md5(text) AS fp, CAST(min(doc_id) AS BIGINT) AS keeper_id,
+      |         count(*) AS exact_copies
+      |  FROM longe GROUP BY 1),
+      |kept AS (
+      |  SELECT keeper_id AS doc_id, fp, exact_copies, text
+      |  FROM exd JOIN longe ON doc_id = keeper_id),
+      |${gramCtes("kept")}""".stripMargin
 
   private val c17 = Q(
     "c17_fuzzy_contamination",
@@ -2867,17 +2964,7 @@ object Queries {
       .withColumnRenamed("corpus_id", "bench_id"),
     Some(s"""WITH $corpusCte,
       |${gramCtes("corpus")},
-      |btoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-      |  FROM documents WHERE doc_id % 17 = 0
-      |    AND len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-      |                        x -> x <> '')) > 0),
-      |bgrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM btoks),
+      |${gramSets("b", "documents", "doc_id % 17 = 0")},
       |bex AS (SELECT doc_id AS bench_id, unnest(g) AS gram FROM bgrams),
       |inter AS (
       |  SELECT ex.doc_id, bench_id, count(*) AS i
@@ -2898,9 +2985,7 @@ object Queries {
     // pair set equals the exact 3-gram-Jaccard threshold pairs.
     Some(s"""WITH $corpusCte,
       |${gramCtes("corpus")},
-      |inter AS (
-      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, len(g) AS n FROM grams)
+      |$pairSizeCtes
       |SELECT id_a, id_b,
       |       round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 4) AS jaccard
       |FROM inter
@@ -3100,6 +3185,14 @@ object Queries {
       |       CAST(0 AS INT) AS hamming
       |FROM documents WHERE doc_id % 20 = 0""".stripMargin))
 
+  /** e02's quality score in SQL (c14's keeper, e16's rank order). */
+  private val qualitySql: String =
+    s"""round(
+      |      least(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) / 100.0, 1.0) * 0.3 +
+      |      (1.0 - CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE) / length(text)) * 0.3 +
+      |      least(CAST(len(regexp_extract_all(text, '\\b(the|a|and|of|to|in|is|it|for|on)\\b')) AS DOUBLE)
+      |            / len(regexp_split_to_array(trim(text), '\\s+')) * 4.0, 1.0) * 0.4, 4)""".stripMargin
+
   private val c14 = Q(
     "c14_exact_dedup_keep_best",
     // c01 with the RefinedWeb-style keeper policy: among exact copies keep
@@ -3107,27 +3200,12 @@ object Queries {
     // crawl wins). One shuffle via keep_latest (ObjectHashAggregate) with
     // the (score, id) order packed into a long — max(struct) would demote
     // to SortAggregate on both sides (struct agg buffers aren't hash-able).
-    (s, dir) => {
-      val chars = length(col("text"))
-      val toks = size(split(trim(col("text")), "\\s+"))
-      val punct = size(expr("regexp_extract_all(text, '[^a-z0-9 ]', 0)"))
-      val stops = size(expr(
-        "regexp_extract_all(text, '\\\\b(the|a|and|of|to|in|is|it|for|on)\\\\b', 0)"))
-      val quality = round(
-        least(toks.cast("double") / 100.0, lit(1.0)) * 0.3 +
-          (lit(1.0) - punct.cast("double") / chars) * 0.3 +
-          least(stops.cast("double") / toks * 4.0, lit(1.0)) * 0.4, 4)
-      Dedup.exactKeepBest(
-        corpus(s, dir).withColumn("q", quality), "doc_id", "text", "q")
-    },
+    (s, dir) => Dedup.exactKeepBest(
+      corpus(s, dir).withColumn("q", qualityScore), "doc_id", "text", "q"),
     Some(s"""WITH $corpusCte,
       |q AS (
       |  SELECT doc_id, text,
-      |    round(
-      |      least(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) / 100.0, 1.0) * 0.3 +
-      |      (1.0 - CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE) / length(text)) * 0.3 +
-      |      least(CAST(len(regexp_extract_all(text, '\\b(the|a|and|of|to|in|is|it|for|on)\\b')) AS DOUBLE)
-      |            / len(regexp_split_to_array(trim(text), '\\s+')) * 4.0, 1.0) * 0.4, 4) AS q
+      |    $qualitySql AS q
       |  FROM corpus),
       |r AS (
       |  SELECT md5(text) AS fp, doc_id, q,
@@ -3213,18 +3291,7 @@ object Queries {
     // the same 3-gram sets as strings (hashing is collision-free at this
     // cardinality), so values must match exactly.
     Some(s"""WITH $corpusCte,
-      |toks AS (
-      |  SELECT doc_id, source, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-      |  FROM corpus
-      |  WHERE len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-      |                        x -> x <> '')) > 0),
-      |grams AS (
-      |  SELECT doc_id, source,
-      |         list_distinct(CASE WHEN len(t) >= 3
-      |           THEN list_transform(range(1, len(t) - 1),
-      |                               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |           ELSE t END) AS g
-      |  FROM toks),
+      |${gramSets("", "corpus", cols = "doc_id, source")},
       |pairs AS (
       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
       |         CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
@@ -3274,17 +3341,7 @@ object Queries {
       "doc_id", "text"),
     Some(s"""WITH $corpusCte,
       |${gramCtes("corpus")},
-      |btoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS t
-      |  FROM documents WHERE doc_id % 17 = 0
-      |    AND len(list_filter(regexp_split_to_array(trim(lower(text)), '\\s+'),
-      |                        x -> x <> '')) > 0),
-      |bgrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM btoks),
+      |${gramSets("b", "documents", "doc_id % 17 = 0")},
       |bex AS (SELECT doc_id AS bench_id, unnest(g) AS gram FROM bgrams),
       |hot AS (SELECT gram FROM ex GROUP BY gram HAVING count(*) > 10000)
       |SELECT d.doc_id, bench_id, count(*) AS shared_grams
@@ -3303,21 +3360,7 @@ object Queries {
     (s, dir) => Dedup.nearDupClusters(corpus(s, dir), "doc_id", "text"),
     Some(s"""WITH RECURSIVE $corpusCte,
       |${gramCtes("corpus")},
-      |inter AS (
-      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, len(g) AS n FROM grams),
-      |pj AS (
-      |  SELECT id_a, id_b FROM inter
-      |  JOIN sizes sa ON sa.doc_id = id_a
-      |  JOIN sizes sb ON sb.doc_id = id_b
-      |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5),
-      |nodes AS (SELECT id_a AS id FROM pj UNION SELECT id_b FROM pj),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pj
-      |          UNION ALL SELECT id_b, id_a FROM pj),
-      |reach(id, r) AS (
-      |  SELECT id, id AS r FROM nodes
-      |  UNION
-      |  SELECT e.v AS id, reach.r FROM reach JOIN edges e ON e.u = reach.id),
+      |$pairClosureCtes,
       |cc AS (SELECT id AS doc_id, min(r) AS rep FROM reach GROUP BY id),
       |sz AS (SELECT rep, count(*) AS cluster_size FROM cc GROUP BY rep)
       |SELECT doc_id, cc.rep, cluster_size FROM cc JOIN sz USING (rep)""".stripMargin))
@@ -3341,26 +3384,12 @@ object Queries {
     // drop the higher id of every exact-Jaccard ≥ 0.5 pair among keepers
     // (LSH recall is 1 on this corpus — same argument as c02's oracle).
     Some(s"""WITH $corpusCte,
-      |longe AS (
-      |  SELECT doc_id, text FROM corpus
-      |  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5),
-      |exd AS (
-      |  SELECT md5(text) AS fp, CAST(min(doc_id) AS BIGINT) AS keeper_id,
-      |         count(*) AS exact_copies
-      |  FROM longe GROUP BY 1),
-      |kept AS (
-      |  SELECT keeper_id AS doc_id, fp, exact_copies, text
-      |  FROM exd JOIN longe ON doc_id = keeper_id),
-      |${gramCtes("kept")},
-      |inter AS (
-      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, len(g) AS n FROM grams),
+      |$keeperCtes,
+      |$pairSizeCtes,
       |drops AS (
       |  SELECT DISTINCT id_b AS doc_id
       |  FROM inter
-      |  JOIN sizes sa ON sa.doc_id = id_a
-      |  JOIN sizes sb ON sb.doc_id = id_b
-      |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5)
+      |$jaccardAtLeastHalf)
       |SELECT doc_id, fp, exact_copies
       |FROM kept
       |WHERE doc_id NOT IN (SELECT doc_id FROM drops)""".stripMargin),
@@ -3373,32 +3402,8 @@ object Queries {
     // min-label closure over the keeper pair graph.
     (s, dir) => Dedup.cleanCorpusCC(corpus(s, dir), "doc_id", "text"),
     Some(s"""WITH RECURSIVE $corpusCte,
-      |longe AS (
-      |  SELECT doc_id, text FROM corpus
-      |  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5),
-      |exd AS (
-      |  SELECT md5(text) AS fp, CAST(min(doc_id) AS BIGINT) AS keeper_id,
-      |         count(*) AS exact_copies
-      |  FROM longe GROUP BY 1),
-      |kept AS (
-      |  SELECT keeper_id AS doc_id, fp, exact_copies, text
-      |  FROM exd JOIN longe ON doc_id = keeper_id),
-      |${gramCtes("kept")},
-      |inter AS (
-      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, len(g) AS n FROM grams),
-      |pj AS (
-      |  SELECT id_a, id_b FROM inter
-      |  JOIN sizes sa ON sa.doc_id = id_a
-      |  JOIN sizes sb ON sb.doc_id = id_b
-      |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5),
-      |nodes AS (SELECT id_a AS id FROM pj UNION SELECT id_b FROM pj),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pj
-      |          UNION ALL SELECT id_b, id_a FROM pj),
-      |reach(id, r) AS (
-      |  SELECT id, id AS r FROM nodes
-      |  UNION
-      |  SELECT e.v AS id, reach.r FROM reach JOIN edges e ON e.u = reach.id),
+      |$keeperCtes,
+      |$pairClosureCtes,
       |nonreps AS (
       |  SELECT id AS doc_id FROM reach GROUP BY id HAVING id <> min(r))
       |SELECT doc_id, fp, exact_copies
@@ -3481,6 +3486,44 @@ object Queries {
     },
     None)
 
+  /** d03/d04's IVF replay up to the cell assignment: the twin-augmented
+    * corpus `aug`, seed centroids `c0` (vec_id < 16), one Lloyd iteration
+    * `c1` (per-dim double mean, FLOAT cast to kill summation-order ulps),
+    * and each vector's argmax cell in `assigned`(vec_id, cell, e).
+    */
+  private val ivfCellsCtes: String =
+    s"""$augEmbeddingsCte,
+      |c0 AS (SELECT vec_id AS cid, e AS cv FROM aug WHERE vec_id < 16),
+      |r0 AS (SELECT a.vec_id, c.cid,
+      |         row_number() OVER (PARTITION BY a.vec_id
+      |           ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
+      |       FROM aug a CROSS JOIN c0 c),
+      |a0 AS (SELECT vec_id, cid AS cell FROM r0 WHERE rn = 1),
+      |m1 AS (SELECT a0.cell, s.i, CAST(CAST(avg(round(a.e[s.i] * 1048576) / 1048576) AS REAL) AS DOUBLE) AS v
+      |       FROM a0 JOIN aug a USING (vec_id), generate_series(1, 64) s(i)
+      |       GROUP BY a0.cell, s.i),
+      |c1 AS (SELECT cell AS cid, list(v ORDER BY i) AS cv FROM m1 GROUP BY cell),
+      |asg AS (SELECT a.vec_id, c.cid AS cell, a.e,
+      |          row_number() OVER (PARTITION BY a.vec_id
+      |            ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
+      |        FROM aug a CROSS JOIN c1 c),
+      |assigned AS (SELECT vec_id, cell, e FROM asg WHERE rn = 1)""".stripMargin
+
+  /** Exact-cosine top-5 over the vectors of each query's `probes` cells. */
+  private val ivfTopKTail: String =
+    """cand AS (
+      |  SELECT p.qid, p.qv, s.vec_id, s.e
+      |  FROM probes p JOIN assigned s USING (cell)
+      |  WHERE s.vec_id <> p.qid),
+      |ranked AS (
+      |  SELECT qid, vec_id AS neighbor,
+      |         list_cosine_similarity(e, qv) AS c,
+      |         row_number() OVER (PARTITION BY qid
+      |           ORDER BY list_cosine_similarity(e, qv) DESC, vec_id) AS rank
+      |  FROM cand)
+      |SELECT qid, neighbor, round(c, 4) AS cos_sim, CAST(rank AS INT) AS rank
+      |FROM ranked WHERE rank <= 5""".stripMargin
+
   private val d03 = Q(
     "d03_ann_ivf",
     (s, dir) => {
@@ -3495,44 +3538,14 @@ object Queries {
     // assignment, per-query top-4 cell probe, candidate join, exact-cosine
     // top-5 — so the hash now certifies the coarse quantizer itself, not
     // just twin recall (d06 stays as the planted-recall companion).
-    Some("""WITH aug AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-      |  FROM embeddings WHERE vec_id % 25 = 0),
-      |c0 AS (SELECT vec_id AS cid, e AS cv FROM aug WHERE vec_id < 16),
-      |r0 AS (SELECT a.vec_id, c.cid,
-      |         row_number() OVER (PARTITION BY a.vec_id
-      |           ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
-      |       FROM aug a CROSS JOIN c0 c),
-      |a0 AS (SELECT vec_id, cid AS cell FROM r0 WHERE rn = 1),
-      |m1 AS (SELECT a0.cell, s.i, CAST(CAST(avg(round(a.e[s.i] * 1048576) / 1048576) AS REAL) AS DOUBLE) AS v
-      |       FROM a0 JOIN aug a USING (vec_id), generate_series(1, 64) s(i)
-      |       GROUP BY a0.cell, s.i),
-      |c1 AS (SELECT cell AS cid, list(v ORDER BY i) AS cv FROM m1 GROUP BY cell),
-      |asg AS (SELECT a.vec_id, c.cid AS cell, a.e,
-      |          row_number() OVER (PARTITION BY a.vec_id
-      |            ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
-      |        FROM aug a CROSS JOIN c1 c),
-      |assigned AS (SELECT vec_id, cell, e FROM asg WHERE rn = 1),
+    Some(s"""WITH $ivfCellsCtes,
       |q AS (SELECT vec_id AS qid, e AS qv FROM aug WHERE vec_id >= 100000),
       |pc AS (SELECT q.qid, q.qv, c.cid AS cell,
       |         row_number() OVER (PARTITION BY q.qid
       |           ORDER BY list_cosine_similarity(q.qv, c.cv) DESC, c.cid DESC) AS rn
       |       FROM q CROSS JOIN c1 c),
       |probes AS (SELECT qid, qv, cell FROM pc WHERE rn <= 4),
-      |cand AS (
-      |  SELECT p.qid, p.qv, s.vec_id, s.e
-      |  FROM probes p JOIN assigned s USING (cell)
-      |  WHERE s.vec_id <> p.qid),
-      |ranked AS (
-      |  SELECT qid, vec_id AS neighbor,
-      |         list_cosine_similarity(e, qv) AS c,
-      |         row_number() OVER (PARTITION BY qid
-      |           ORDER BY list_cosine_similarity(e, qv) DESC, vec_id) AS rank
-      |  FROM cand)
-      |SELECT qid, neighbor, round(c, 4) AS cos_sim, CAST(rank AS INT) AS rank
-      |FROM ranked WHERE rank <= 5""".stripMargin))
+      |$ivfTopKTail""".stripMargin))
 
   private val d04 = Q(
     "d04_ann_ivf_adaptive",
@@ -3547,26 +3560,7 @@ object Queries {
     // PRECEDING cells already cover 25% of the corpus (max 8) — equal
     // work per query, not equal probe count. The hash certifies quantizer,
     // cell sizes, and the coverage cutoff together.
-    Some("""WITH aug AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
-      |  FROM embeddings WHERE vec_id % 25 = 0),
-      |c0 AS (SELECT vec_id AS cid, e AS cv FROM aug WHERE vec_id < 16),
-      |r0 AS (SELECT a.vec_id, c.cid,
-      |         row_number() OVER (PARTITION BY a.vec_id
-      |           ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
-      |       FROM aug a CROSS JOIN c0 c),
-      |a0 AS (SELECT vec_id, cid AS cell FROM r0 WHERE rn = 1),
-      |m1 AS (SELECT a0.cell, s.i, CAST(CAST(avg(round(a.e[s.i] * 1048576) / 1048576) AS REAL) AS DOUBLE) AS v
-      |       FROM a0 JOIN aug a USING (vec_id), generate_series(1, 64) s(i)
-      |       GROUP BY a0.cell, s.i),
-      |c1 AS (SELECT cell AS cid, list(v ORDER BY i) AS cv FROM m1 GROUP BY cell),
-      |asg AS (SELECT a.vec_id, c.cid AS cell, a.e,
-      |          row_number() OVER (PARTITION BY a.vec_id
-      |            ORDER BY list_cosine_similarity(a.e, c.cv) DESC, c.cid DESC) AS rn
-      |        FROM aug a CROSS JOIN c1 c),
-      |assigned AS (SELECT vec_id, cell, e FROM asg WHERE rn = 1),
+    Some(s"""WITH $ivfCellsCtes,
       |cs AS (SELECT cell AS cid, count(*) AS cell_n FROM assigned GROUP BY 1),
       |tot AS (SELECT CAST(sum(cell_n) AS DOUBLE) AS tot FROM cs),
       |q AS (SELECT vec_id AS qid, e AS qv FROM aug WHERE vec_id >= 100000),
@@ -3579,18 +3573,7 @@ object Queries {
       |       FROM q CROSS JOIN c1 c JOIN cs ON cs.cid = c.cid),
       |probes AS (SELECT qid, qv, cid AS cell FROM pc CROSS JOIN tot
       |           WHERE rn <= 8 AND (rn = 1 OR coalesce(cum_before, 0) < tot.tot * 0.25)),
-      |cand AS (
-      |  SELECT p.qid, p.qv, s.vec_id, s.e
-      |  FROM probes p JOIN assigned s USING (cell)
-      |  WHERE s.vec_id <> p.qid),
-      |ranked AS (
-      |  SELECT qid, vec_id AS neighbor,
-      |         list_cosine_similarity(e, qv) AS c,
-      |         row_number() OVER (PARTITION BY qid
-      |           ORDER BY list_cosine_similarity(e, qv) DESC, vec_id) AS rank
-      |  FROM cand)
-      |SELECT qid, neighbor, round(c, 4) AS cos_sim, CAST(rank AS INT) AS rank
-      |FROM ranked WHERE rank <= 5""".stripMargin))
+      |$ivfTopKTail""".stripMargin))
 
   /** Known-answer oracle for the ANN family: every planted query's rank-1
     * neighbor MUST be its exact twin at cosine 1.0. The full top-k set is
@@ -4066,27 +4049,32 @@ object Queries {
       |       CAST(length(text) AS INT) AS char_cnt
       |FROM documents""".stripMargin))
 
+  /** e02's text-quality signals over `text`: whitespace token count,
+    * punctuation share of the characters, stopword hits per token.
+    */
+  private def textToks = size(split(trim(col("text")), "\\s+"))
+  private def punctRatio =
+    size(expr("regexp_extract_all(text, '[^a-z0-9 ]', 0)")).cast("double") / length(col("text"))
+  private def stopRatio = size(expr(
+    "regexp_extract_all(text, '\\\\b(the|a|and|of|to|in|is|it|for|on)\\\\b', 0)"))
+    .cast("double") / textToks
+
+  /** e02's quality score, rounded to 4 dp (c14's keeper and e16's rank order). */
+  private def qualityScore = round(
+    least(textToks.cast("double") / 100.0, lit(1.0)) * 0.3 +
+      (lit(1.0) - punctRatio) * 0.3 +
+      least(stopRatio * 4.0, lit(1.0)) * 0.4, 4)
+
   private val e02 = Q(
     "e02_quality_score",
-    (s, dir) => {
-      val chars = length(col("text"))
-      val toks = size(split(trim(col("text")), "\\s+"))
-      val punct = size(expr("regexp_extract_all(text, '[^a-z0-9 ]', 0)"))
-      val stops = size(expr(
-        "regexp_extract_all(text, '\\\\b(the|a|and|of|to|in|is|it|for|on)\\\\b', 0)"))
-      val punctRatio = punct.cast("double") / chars
-      val stopRatio = stops.cast("double") / toks
+    (s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
-        chars.as("chars"),
-        toks.as("toks"),
+        length(col("text")).as("chars"),
+        textToks.as("toks"),
         round(punctRatio, 4).as("punct_ratio"),
         round(stopRatio, 4).as("stop_ratio"),
-        round(
-          least(toks.cast("double") / 100.0, lit(1.0)) * 0.3 +
-            (lit(1.0) - punctRatio) * 0.3 +
-            least(stopRatio * 4.0, lit(1.0)) * 0.4, 4).as("quality"))
-    },
+        qualityScore.as("quality")),
     Some("""SELECT doc_id,
       |  CAST(length(text) AS INT) AS chars,
       |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS INT) AS toks,
@@ -4439,6 +4427,24 @@ object Queries {
       |             unnest(range(0, greatest(len(text) - 50, 1), 150)) AS off
       |      FROM documents WHERE len(text) > 0)""".stripMargin))
 
+  /** Chunking.pack's 512-token bins over `t`(doc_id, tok_count), docs laid
+    * end to end in id order. Window SUM over BIGINT is HUGEINT in DuckDB →
+    * cast; `//` is exact integer division like Spark's `div`.
+    */
+  private val packTailSql: String =
+    """p AS (
+      |  SELECT doc_id, tok_count,
+      |         CAST(COALESCE(SUM(tok_count) OVER (ORDER BY doc_id
+      |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      |              AS BIGINT) AS start_off
+      |  FROM t WHERE tok_count > 0)
+      |SELECT doc_id, tok_count, start_off,
+      |       start_off // 512 AS bin_first,
+      |       (start_off + tok_count - 1) // 512 AS bin_last,
+      |       CAST((start_off + tok_count - 1) // 512 - start_off // 512 + 1
+      |            AS INT) AS bins_spanned
+      |FROM p""".stripMargin
+
   private val e13 = Q(
     "e13_seq_packing",
     (s, dir) =>
@@ -4450,26 +4456,13 @@ object Queries {
         Tables.documents(s, dir).select(
           col("doc_id"), bpeTokenCount.as("tok_count")),
         "doc_id", "tok_count", seqLen = 512, groupSize = 64),
-    // window SUM over BIGINT is HUGEINT in DuckDB → cast; `//` is exact
-    // integer division like Spark's `div`
     Some(s"""WITH t AS (
       |  SELECT doc_id,
       |         CAST(len(regexp_extract_all(text,
       |              '$BpeTokenPattern')) AS BIGINT)
       |           AS tok_count
       |  FROM documents),
-      |p AS (
-      |  SELECT doc_id, tok_count,
-      |         CAST(COALESCE(SUM(tok_count) OVER (ORDER BY doc_id
-      |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |              AS BIGINT) AS start_off
-      |  FROM t WHERE tok_count > 0)
-      |SELECT doc_id, tok_count, start_off,
-      |       start_off // 512 AS bin_first,
-      |       (start_off + tok_count - 1) // 512 AS bin_last,
-      |       CAST((start_off + tok_count - 1) // 512 - start_off // 512 + 1
-      |            AS INT) AS bins_spanned
-      |FROM p""".stripMargin))
+      |$packTailSql""".stripMargin))
 
   private val e14 = Q(
     "e14_gopher_rules",
@@ -4572,32 +4565,8 @@ object Queries {
         "doc_id", "tok_count", seqLen = 512, groupSize = 64)
     },
     Some(s"""WITH RECURSIVE $corpusCte,
-      |longe AS (
-      |  SELECT doc_id, text FROM corpus
-      |  WHERE len(regexp_split_to_array(trim(text), '\\s+')) >= 5),
-      |exd AS (
-      |  SELECT md5(text) AS fp, CAST(min(doc_id) AS BIGINT) AS keeper_id,
-      |         count(*) AS exact_copies
-      |  FROM longe GROUP BY 1),
-      |kept AS (
-      |  SELECT keeper_id AS doc_id, fp, exact_copies, text
-      |  FROM exd JOIN longe ON doc_id = keeper_id),
-      |${gramCtes("kept")},
-      |inter AS (
-      |  SELECT id_a, id_b, count(*) AS i FROM pair_inter GROUP BY 1, 2),
-      |sizes AS (SELECT doc_id, len(g) AS n FROM grams),
-      |pj AS (
-      |  SELECT id_a, id_b FROM inter
-      |  JOIN sizes sa ON sa.doc_id = id_a
-      |  JOIN sizes sb ON sb.doc_id = id_b
-      |  WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.5),
-      |nodes AS (SELECT id_a AS id FROM pj UNION SELECT id_b FROM pj),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pj
-      |          UNION ALL SELECT id_b, id_a FROM pj),
-      |reach(id, r) AS (
-      |  SELECT id, id AS r FROM nodes
-      |  UNION
-      |  SELECT e.v AS id, reach.r FROM reach JOIN edges e ON e.u = reach.id),
+      |$keeperCtes,
+      |$pairClosureCtes,
       |nonreps AS (
       |  SELECT id AS doc_id FROM reach GROUP BY id HAVING id <> min(r)),
       |clean AS (
@@ -4615,18 +4584,7 @@ object Queries {
       |         CAST(len(regexp_extract_all(text, '$BpeTokenPattern'))
       |              AS BIGINT) AS tok_count
       |  FROM gated),
-      |p AS (
-      |  SELECT doc_id, tok_count,
-      |         CAST(COALESCE(SUM(tok_count) OVER (ORDER BY doc_id
-      |              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |              AS BIGINT) AS start_off
-      |  FROM t WHERE tok_count > 0)
-      |SELECT doc_id, tok_count, start_off,
-      |       start_off // 512 AS bin_first,
-      |       (start_off + tok_count - 1) // 512 AS bin_last,
-      |       CAST((start_off + tok_count - 1) // 512 - start_off // 512 + 1
-      |            AS INT) AS bins_spanned
-      |FROM p""".stripMargin))
+      |$packTailSql""".stripMargin))
 
   private val e16 = Q(
     "e16_budget_select",
@@ -4636,30 +4594,16 @@ object Queries {
     // order exactly); the rank-order cumsum is two-level per Selection's
     // value-range bucketing — never a corpus-wide single-partition window.
     (s, dir) => {
-      val chars = length(col("text"))
-      val toks = size(split(trim(col("text")), "\\s+"))
-      val punct = size(expr("regexp_extract_all(text, '[^a-z0-9 ]', 0)"))
-      val stops = size(expr(
-        "regexp_extract_all(text, '\\\\b(the|a|and|of|to|in|is|it|for|on)\\\\b', 0)"))
-      val punctRatio = punct.cast("double") / chars
-      val stopRatio = stops.cast("double") / toks
       val scored = Tables.documents(s, dir).select(
         col("doc_id"),
-        round(
-          least(toks.cast("double") / 100.0, lit(1.0)) * 0.3 +
-            (lit(1.0) - punctRatio) * 0.3 +
-            least(stopRatio * 4.0, lit(1.0)) * 0.4, 4).as("quality"),
+        qualityScore.as("quality"),
         bpeTokenCount.cast("long").as("tok_count"))
       operators.Selection.budgetSelect(
         scored, "doc_id", "quality", "tok_count", budget = 20000L)
     },
     Some(s"""WITH q AS (
       |  SELECT doc_id,
-      |    round(
-      |      least(CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS DOUBLE) / 100.0, 1.0) * 0.3 +
-      |      (1.0 - CAST(len(regexp_extract_all(text, '[^a-z0-9 ]')) AS DOUBLE) / length(text)) * 0.3 +
-      |      least(CAST(len(regexp_extract_all(text, '\\b(the|a|and|of|to|in|is|it|for|on)\\b')) AS DOUBLE)
-      |            / len(regexp_split_to_array(trim(text), '\\s+')) * 4.0, 1.0) * 0.4, 4) AS quality,
+      |    $qualitySql AS quality,
       |    CAST(len(regexp_extract_all(text, '$BpeTokenPattern')) AS BIGINT) AS tok_count
       |  FROM documents),
       |p AS (
@@ -5448,6 +5392,22 @@ object Queries {
       |  CAST(sum(r + g + b) AS BIGINT) AS checksum
       |FROM ch GROUP BY doc_id, f""".stripMargin))
 
+  /** The planted variants of document `id`'s PGM `orig`, ids offset by
+    * `base`: exact twin (%20==0, +100000), +16 on the first plane byte
+    * (%20==10, +200000), truncated to 5 bytes (%20==15, +300000).
+    */
+  private def pgmPlants(id: Long, orig: Array[Byte], base: Long): Seq[(Long, Array[Byte])] = {
+    val twin = if (id % 20 == 0) Seq((id + base + 100000, orig)) else Seq.empty
+    val pert = if (id % 20 == 10) {
+      val p = orig.clone()
+      val plane = p.length - ((8 + id % 9) * (8 + id % 7)).toInt
+      p(plane) = (((p(plane) & 0xff) + 16) % 256).toByte
+      Seq((id + base + 200000, p))
+    } else Seq.empty
+    val dead = if (id % 20 == 15) Seq((id + base + 300000, orig.take(5))) else Seq.empty
+    twin ++ pert ++ dead
+  }
+
   /** f11/f13's planted media corpus (originals + exact twins %20==0 +
     * single-pixel perturbations %20==10 + truncated dead-letters %20==15)
     * hashed and COLLAPSED: one (keeper, dhash, n_copies) row per distinct
@@ -5458,39 +5418,90 @@ object Queries {
     val rows = Tables.documents(s, dir).select(col("doc_id")).as[Long]
       .flatMap { id =>
         val orig = operators.Multimodal.syntheticPgm(id)
-        val twin = if (id % 20 == 0) Seq((id + 100000, orig)) else Seq.empty
-        val pert = if (id % 20 == 10) {
-          val p = orig.clone()
-          val plane = p.length - ((8 + id % 9) * (8 + id % 7)).toInt
-          p(plane) = (((p(plane) & 0xff) + 16) % 256).toByte
-          Seq((id + 200000, p))
-        } else Seq.empty
-        val dead = if (id % 20 == 15) Seq((id + 300000, orig.take(5))) else Seq.empty
-        Seq((id, orig)) ++ twin ++ pert ++ dead
+        Seq((id, orig)) ++ pgmPlants(id, orig, 0)
       }.toDF("row_id", "payload")
     operators.Multimodal.extractDhash(s, rows, "row_id", "payload")
       .groupBy("dhash")
       .agg(min("row_id").as("keeper"), count(lit(1)).as("n_copies"))
   }
 
-  /** Banded hamming-≤2 pairs over the DISTINCT hashes (the f11 body). */
-  private def imageDhashPairs(groups: DataFrame): DataFrame = {
+  /** Banded hamming-≤2 pairs over the DISTINCT hashes in column `h`: 4
+    * bands of `bits` bits, equi-joined per band (f11 and f13 over 16-bit
+    * dHash bands, f12 over 8-bit fingerprint bands).
+    */
+  private def bandedHashPairs(groups: DataFrame, h: String, bits: Int): DataFrame = {
     val bands = groups
-      .select(col("keeper"), col("dhash"), col("n_copies"),
+      .select(col("keeper"), col(h), col("n_copies"),
         explode(expr("sequence(0, 3)")).as("k"))
-      .withColumn("key", expr("shiftright(dhash, k * 16) & 65535"))
+      .withColumn("key", expr(s"shiftright($h, k * $bits) & ${(1 << bits) - 1}"))
     bands.as("a")
       .join(bands.as("b"),
         col("a.k") === col("b.k") && col("a.key") === col("b.key") &&
           col("a.keeper") < col("b.keeper"))
       .select(col("a.keeper").as("id_a"), col("b.keeper").as("id_b"),
-        col("a.dhash").as("ha"), col("b.dhash").as("hb"),
+        col(s"a.$h").as("ha"), col(s"b.$h").as("hb"),
         col("a.n_copies").as("copies_a"), col("b.n_copies").as("copies_b"))
       .distinct()
       .withColumn("hamming", expr("cast(bit_count(ha ^ hb) as int)"))
       .filter(col("hamming") <= 2)
       .select("id_a", "id_b", "hamming", "copies_a", "copies_b")
   }
+
+  /** f11-f13's planted media rows `rws`(row_id, d = source doc, pert):
+    * originals, exact twins (%20==0) and perturbed copies (%20==10); the
+    * truncated %20==15 rows dead-letter and never hash.
+    */
+  private val mediaRowsCte: String =
+    """rws AS (
+      |  SELECT doc_id AS row_id, doc_id AS d, FALSE AS pert FROM documents
+      |  UNION ALL
+      |  SELECT doc_id + 100000, doc_id, FALSE FROM documents WHERE doc_id % 20 = 0
+      |  UNION ALL
+      |  SELECT doc_id + 200000, doc_id, TRUE FROM documents WHERE doc_id % 20 = 10)""".stripMargin
+
+  /** The dHash replay over planted rows `rws`(row_id, d, pert) into
+    * `hashes`(row_id, dhash), `key` (", side" for g10, else empty) carried
+    * through: w=8+d%9, h=8+d%7, pixel(p)=(d*31+p*7)%256 (+16 on plane byte
+    * 0 for the perturbed rows), sample p=(oy*h//8)*w+(ox*w//9),
+    * bit(oy*8+ox)=g(ox)<g(ox+1); hugeint bit sum → two's-complement BIGINT.
+    */
+  private def dhashCtes(key: String): String =
+    s"""grid AS (
+      |  SELECT row_id, d, pert$key, oy.i AS oy, ox.i AS ox,
+      |         ((oy.i * (8 + d % 7)) // 8) * (8 + d % 9)
+      |           + (ox.i * (8 + d % 9)) // 9 AS p
+      |  FROM rws, generate_series(0, 7) oy(i), generate_series(0, 8) ox(i)),
+      |gv AS (
+      |  SELECT row_id$key, oy, ox,
+      |         CASE WHEN pert AND p = 0 THEN ((d * 31) % 256 + 16) % 256
+      |              ELSE (d * 31 + p * 7) % 256 END AS g
+      |  FROM grid),
+      |bits AS (
+      |  SELECT row_id$key, oy, ox, g,
+      |         lead(g) OVER (PARTITION BY row_id, oy ORDER BY ox) AS nxt
+      |  FROM gv),
+      |hsum AS (
+      |  SELECT row_id$key,
+      |         sum(CASE WHEN g < nxt
+      |               THEN CAST(power(2, oy * 8 + ox) AS HUGEINT)
+      |               ELSE 0::HUGEINT END) AS s
+      |  FROM bits WHERE ox < 8 GROUP BY row_id$key),
+      |hashes AS (
+      |  SELECT row_id$key,
+      |         CAST(CASE WHEN s >= 9223372036854775808
+      |                THEN s - 18446744073709551616
+      |                ELSE s END AS BIGINT) AS dhash
+      |  FROM hsum)""".stripMargin
+
+  /** f11/f13's [[dhashCtes]] over [[mediaRowsCte]], collapsed to
+    * `grp`(dhash, keeper, n_copies).
+    */
+  private val dhashGroupCtes: String =
+    s"""$mediaRowsCte,
+      |${dhashCtes("")},
+      |grp AS (
+      |  SELECT dhash, min(row_id) AS keeper, count(*) AS n_copies
+      |  FROM hashes GROUP BY dhash)""".stripMargin
 
   private val f11 = Q(
     "f11_image_dhash",
@@ -5511,45 +5522,8 @@ object Queries {
     // distinct-hash pairs grow with data DIVERSITY, not volume. The oracle
     // computes every sampled pixel, gradient bit, keeper, band key, and
     // hamming distance ANALYTICALLY from the closed-form plane.
-    (s, dir) => imageDhashPairs(imageHashGroups(s, dir)),
-    // the dHash replay: w=8+d%9, h=8+d%7, pixel(p)=(d*31+p*7)%256 (+16 on
-    // plane byte 0 for the perturbed rows), sample p=(oy*h//8)*w+(ox*w//9),
-    // bit(oy*8+ox)=g(ox)<g(ox+1); hugeint bit sum → two's-complement BIGINT
-    Some("""WITH rws AS (
-      |  SELECT doc_id AS row_id, doc_id AS d, FALSE AS pert FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, doc_id, FALSE FROM documents WHERE doc_id % 20 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, doc_id, TRUE FROM documents WHERE doc_id % 20 = 10),
-      |grid AS (
-      |  SELECT row_id, d, pert, oy.i AS oy, ox.i AS ox,
-      |         ((oy.i * (8 + d % 7)) // 8) * (8 + d % 9)
-      |           + (ox.i * (8 + d % 9)) // 9 AS p
-      |  FROM rws, generate_series(0, 7) oy(i), generate_series(0, 8) ox(i)),
-      |gv AS (
-      |  SELECT row_id, oy, ox,
-      |         CASE WHEN pert AND p = 0 THEN ((d * 31) % 256 + 16) % 256
-      |              ELSE (d * 31 + p * 7) % 256 END AS g
-      |  FROM grid),
-      |bits AS (
-      |  SELECT row_id, oy, ox, g,
-      |         lead(g) OVER (PARTITION BY row_id, oy ORDER BY ox) AS nxt
-      |  FROM gv),
-      |hsum AS (
-      |  SELECT row_id,
-      |         sum(CASE WHEN g < nxt
-      |               THEN CAST(power(2, oy * 8 + ox) AS HUGEINT)
-      |               ELSE 0::HUGEINT END) AS s
-      |  FROM bits WHERE ox < 8 GROUP BY row_id),
-      |hashes AS (
-      |  SELECT row_id,
-      |         CAST(CASE WHEN s >= 9223372036854775808
-      |                THEN s - 18446744073709551616
-      |                ELSE s END AS BIGINT) AS dhash
-      |  FROM hsum),
-      |grp AS (
-      |  SELECT dhash, min(row_id) AS keeper, count(*) AS n_copies
-      |  FROM hashes GROUP BY dhash),
+    (s, dir) => bandedHashPairs(imageHashGroups(s, dir), "dhash", 16),
+    Some(s"""WITH $dhashGroupCtes,
       |bands AS (
       |  SELECT keeper, dhash, n_copies, k.i AS k,
       |         (dhash >> (k.i * 16)) & 65535 AS key
@@ -5597,30 +5571,11 @@ object Queries {
         }).toDF("row_id", "fp")
       val groups = hashes.groupBy("fp")
         .agg(min("row_id").as("keeper"), count(lit(1)).as("n_copies"))
-      val bands = groups
-        .select(col("keeper"), col("fp"), col("n_copies"),
-          explode(expr("sequence(0, 3)")).as("k"))
-        .withColumn("key", expr("shiftright(fp, k * 8) & 255"))
-      bands.as("a")
-        .join(bands.as("b"),
-          col("a.k") === col("b.k") && col("a.key") === col("b.key") &&
-            col("a.keeper") < col("b.keeper"))
-        .select(col("a.keeper").as("id_a"), col("b.keeper").as("id_b"),
-          col("a.fp").as("ha"), col("b.fp").as("hb"),
-          col("a.n_copies").as("copies_a"), col("b.n_copies").as("copies_b"))
-        .distinct()
-        .withColumn("hamming", expr("cast(bit_count(ha ^ hb) as int)"))
-        .filter(col("hamming") <= 2)
-        .select("id_a", "id_b", "hamming", "copies_a", "copies_b")
+      bandedHashPairs(groups, "fp", 8)
     },
     // n = 64 + d%129 samples, sample(i) = (d*13 + i*11) % 256 (+32 on
     // sample 0 for perturbed rows), window k(i) = i*33 // n, mean = floor
-    Some("""WITH rws AS (
-      |  SELECT doc_id AS row_id, doc_id AS d, FALSE AS pert FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, doc_id, FALSE FROM documents WHERE doc_id % 20 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, doc_id, TRUE FROM documents WHERE doc_id % 20 = 10),
+    Some(s"""WITH $mediaRowsCte,
       |smp AS (
       |  SELECT row_id,
       |         CASE WHEN pert AND s.i = 0 THEN ((d * 13) % 256 + 32) % 256
@@ -5669,7 +5624,7 @@ object Queries {
     // → banded pairs → recursive min-label closure → cluster aggregates.
     (s, dir) => {
       val groups = imageHashGroups(s, dir)
-      val pairs = imageDhashPairs(groups)
+      val pairs = bandedHashPairs(groups, "dhash", 16)
       val cc = operators.Dedup.connectedComponents(pairs.select("id_a", "id_b"))
       val withCopies = cc.join(
         groups.select(col("keeper").as("doc_id"), col("n_copies")), "doc_id")
@@ -5680,41 +5635,7 @@ object Queries {
         .select(col("doc_id").as("keeper_id"), col("rep"),
           col("cluster_keepers"), col("cluster_copies"))
     },
-    Some("""WITH RECURSIVE rws AS (
-      |  SELECT doc_id AS row_id, doc_id AS d, FALSE AS pert FROM documents
-      |  UNION ALL
-      |  SELECT doc_id + 100000, doc_id, FALSE FROM documents WHERE doc_id % 20 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, doc_id, TRUE FROM documents WHERE doc_id % 20 = 10),
-      |grid AS (
-      |  SELECT row_id, d, pert, oy.i AS oy, ox.i AS ox,
-      |         ((oy.i * (8 + d % 7)) // 8) * (8 + d % 9)
-      |           + (ox.i * (8 + d % 9)) // 9 AS p
-      |  FROM rws, generate_series(0, 7) oy(i), generate_series(0, 8) ox(i)),
-      |gv AS (
-      |  SELECT row_id, oy, ox,
-      |         CASE WHEN pert AND p = 0 THEN ((d * 31) % 256 + 16) % 256
-      |              ELSE (d * 31 + p * 7) % 256 END AS g
-      |  FROM grid),
-      |bits AS (
-      |  SELECT row_id, oy, ox, g,
-      |         lead(g) OVER (PARTITION BY row_id, oy ORDER BY ox) AS nxt
-      |  FROM gv),
-      |hsum AS (
-      |  SELECT row_id,
-      |         sum(CASE WHEN g < nxt
-      |               THEN CAST(power(2, oy * 8 + ox) AS HUGEINT)
-      |               ELSE 0::HUGEINT END) AS s
-      |  FROM bits WHERE ox < 8 GROUP BY row_id),
-      |hashes AS (
-      |  SELECT row_id,
-      |         CAST(CASE WHEN s >= 9223372036854775808
-      |                THEN s - 18446744073709551616
-      |                ELSE s END AS BIGINT) AS dhash
-      |  FROM hsum),
-      |grp AS (
-      |  SELECT dhash, min(row_id) AS keeper, count(*) AS n_copies
-      |  FROM hashes GROUP BY dhash),
+    Some(s"""WITH RECURSIVE $dhashGroupCtes,
       |bands AS (
       |  SELECT keeper, dhash, k.i AS k, (dhash >> (k.i * 16)) & 65535 AS key
       |  FROM grp, generate_series(0, 3) k(i)),
@@ -5723,13 +5644,7 @@ object Queries {
       |  FROM bands a JOIN bands b
       |    ON a.k = b.k AND a.key = b.key AND a.keeper < b.keeper
       |  WHERE bit_count(xor(a.dhash, b.dhash)) <= 2),
-      |nodes AS (SELECT id_a AS id FROM pj UNION SELECT id_b FROM pj),
-      |edges AS (SELECT id_a AS u, id_b AS v FROM pj
-      |          UNION ALL SELECT id_b, id_a FROM pj),
-      |reach(id, r) AS (
-      |  SELECT id, id AS r FROM nodes
-      |  UNION
-      |  SELECT e.v AS id, reach.r FROM reach JOIN edges e ON e.u = reach.id),
+      |$closureCtes,
       |cc AS (SELECT id AS keeper_id, min(r) AS rep FROM reach GROUP BY id),
       |wc AS (
       |  SELECT cc.keeper_id, cc.rep, g.n_copies
@@ -5833,29 +5748,7 @@ object Queries {
         .toDF("user_id", "level")
         .groupBy("level").agg(count(lit(1)).as("n_users"))
     },
-    Some("""WITH t1 AS (
-      |  SELECT user_id, min(epoch_us(ts)) AS t1 FROM events
-      |  WHERE event_type = 'view' GROUP BY 1),
-      |t2 AS (
-      |  SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-      |  FROM events e JOIN t1 USING (user_id)
-      |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > t1.t1
-      |    AND epoch_us(e.ts) <= t1.t1 + 86400000000 GROUP BY 1),
-      |t3 AS (
-      |  SELECT e.user_id, min(epoch_us(e.ts)) AS t3
-      |  FROM events e JOIN t1 USING (user_id) JOIN t2 USING (user_id)
-      |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > t2.t2
-      |    AND epoch_us(e.ts) <= t1.t1 + 86400000000 GROUP BY 1),
-      |lv AS (
-      |  SELECT u.user_id,
-      |    CASE WHEN t3.user_id IS NOT NULL THEN 3
-      |         WHEN t2.user_id IS NOT NULL THEN 2
-      |         WHEN t1.user_id IS NOT NULL THEN 1 ELSE 0 END AS level
-      |  FROM (SELECT DISTINCT user_id FROM events) u
-      |  LEFT JOIN t1 USING (user_id) LEFT JOIN t2 USING (user_id)
-      |  LEFT JOIN t3 USING (user_id))
-      |SELECT CAST(level AS INT) AS level, count(*) AS n_users
-      |FROM lv GROUP BY level""".stripMargin))
+    Some(funnelOracleSql))
 
   private val g07 = Q(
     "g07_stream_retention",
@@ -5882,25 +5775,9 @@ object Queries {
         .toDF("user_id", "cohort", "week_offset")
         .groupBy("cohort", "week_offset")
         .agg(count(lit(1)).as("active_users"))
-      val sizes = cells.filter(col("week_offset") === 0)
-        .select(col("cohort"), col("active_users").as("cohort_size"))
-      cells.join(broadcast(sizes), "cohort")
-        .select(col("cohort"), col("week_offset"), col("active_users"),
-          round(col("active_users").cast("double") / col("cohort_size"), 4)
-            .as("retention"))
+      retentionShares(cells)
     },
-    Some("""WITH weeks AS (
-      |  SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events),
-      |firsts AS (SELECT user_id, min(wk) AS cohort FROM weeks GROUP BY 1),
-      |cells AS (
-      |  SELECT cohort, CAST(date_diff('day', cohort, wk) / 7 AS INT) AS week_offset,
-      |         count(*) AS active_users
-      |  FROM weeks JOIN firsts USING (user_id) GROUP BY 1, 2),
-      |sizes AS (SELECT cohort, active_users AS cohort_size FROM cells
-      |          WHERE week_offset = 0)
-      |SELECT CAST(cohort AS TIMESTAMP) AS cohort, week_offset, active_users,
-      |       round(CAST(active_users AS DOUBLE) / cohort_size, 4) AS retention
-      |FROM cells JOIN sizes USING (cohort)""".stripMargin))
+    Some(retentionOracleSql))
 
   private val g08 = Q(
     "g08_stream_sessionize",
@@ -5967,7 +5844,7 @@ object Queries {
       streaming.Admission.admit(
         recrawl.unionByName(junk).unionByName(fresh), docs, "doc_id", "text")
     },
-    Some("""WITH incoming AS (
+    Some(s"""WITH incoming AS (
       |  SELECT doc_id + 200000 AS doc_id,
       |         text || ' streamscreen probe suffix' AS text
       |  FROM documents WHERE doc_id % 10 = 0
@@ -5979,37 +5856,17 @@ object Queries {
       |  FROM documents WHERE doc_id % 10 IN (1, 3, 7)),
       |rules AS (
       |  SELECT doc_id, text,
-      |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
       |                    x -> x <> '')) AS n_words,
-      |    len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |    len(list_filter(regexp_split_to_array(trim(text), '\\s+'),
       |                    x -> regexp_full_match(x, '[a-z]+'))) AS alpha_words
       |  FROM incoming),
       |gated AS (
       |  SELECT doc_id, text, CAST(n_words AS INT) AS n_words,
       |         (n_words >= 5 AND alpha_words * 10 >= n_words * 7) AS quality_pass
       |  FROM rules),
-      |itoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-      |  FROM gated WHERE quality_pass
-      |    AND len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      |                        x -> x <> '')) > 0),
-      |igrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM itoks),
-      |ctoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-      |  FROM documents
-      |  WHERE len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      |                        x -> x <> '')) > 0),
-      |cgrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM ctoks),
+      |${gramSets("i", "gated", "quality_pass")},
+      |${gramSets("c", "documents")},
       |iex AS (SELECT doc_id, unnest(g) AS gram FROM igrams),
       |cex AS (SELECT doc_id AS corpus_id, unnest(g) AS gram FROM cgrams),
       |inter AS (
@@ -6052,16 +5909,7 @@ object Queries {
           .toDF("doc_id", "payload"), "doc_id", "payload")
       val batch = operators.Multimodal.extractDhash(s,
         ids.flatMap { id =>
-          val orig = operators.Multimodal.syntheticPgm(id)
-          val re = if (id % 20 == 0) Seq((id + 500000, orig)) else Seq.empty
-          val pert = if (id % 20 == 10) {
-            val p = orig.clone()
-            val plane = p.length - ((8 + id % 9) * (8 + id % 7)).toInt
-            p(plane) = (((p(plane) & 0xff) + 16) % 256).toByte
-            Seq((id + 600000, p))
-          } else Seq.empty
-          val dead = if (id % 20 == 15) Seq((id + 700000, orig.take(5))) else Seq.empty
-          re ++ pert ++ dead
+          pgmPlants(id, operators.Multimodal.syntheticPgm(id), 400000)
         }.toDF("doc_id", "payload"), "doc_id", "payload")
       val idxDir = operators.Scratch.dir("g10") + "/idx"
       operators.Multimodal.writeHashIndex(archive, idxDir)
@@ -6069,7 +5917,7 @@ object Queries {
     },
     // the f11 dHash replay, batch × archive edition: analytic hashes for
     // both sides, 4×16-bit band equi-join, hamming ≤ 2
-    Some("""WITH rws AS (
+    Some(s"""WITH rws AS (
       |  SELECT doc_id AS row_id, doc_id AS d, FALSE AS pert, 0 AS side
       |  FROM documents
       |  UNION ALL
@@ -6078,32 +5926,7 @@ object Queries {
       |  UNION ALL
       |  SELECT doc_id + 600000, doc_id, TRUE, 1
       |  FROM documents WHERE doc_id % 20 = 10),
-      |grid AS (
-      |  SELECT row_id, d, pert, side, oy.i AS oy, ox.i AS ox,
-      |         ((oy.i * (8 + d % 7)) // 8) * (8 + d % 9)
-      |           + (ox.i * (8 + d % 9)) // 9 AS p
-      |  FROM rws, generate_series(0, 7) oy(i), generate_series(0, 8) ox(i)),
-      |gv AS (
-      |  SELECT row_id, side, oy, ox,
-      |         CASE WHEN pert AND p = 0 THEN ((d * 31) % 256 + 16) % 256
-      |              ELSE (d * 31 + p * 7) % 256 END AS g
-      |  FROM grid),
-      |bits AS (
-      |  SELECT row_id, side, oy, ox, g,
-      |         lead(g) OVER (PARTITION BY row_id, oy ORDER BY ox) AS nxt
-      |  FROM gv),
-      |hsum AS (
-      |  SELECT row_id, side,
-      |         sum(CASE WHEN g < nxt
-      |               THEN CAST(power(2, oy * 8 + ox) AS HUGEINT)
-      |               ELSE 0::HUGEINT END) AS s
-      |  FROM bits WHERE ox < 8 GROUP BY row_id, side),
-      |hashes AS (
-      |  SELECT row_id, side,
-      |         CAST(CASE WHEN s >= 9223372036854775808
-      |                THEN s - 18446744073709551616
-      |                ELSE s END AS BIGINT) AS dhash
-      |  FROM hsum),
+      |${dhashCtes(", side")},
       |bands AS (
       |  SELECT row_id, side, dhash, k.i AS k,
       |         (dhash >> (k.i * 16)) & 65535 AS key
@@ -6150,22 +5973,14 @@ object Queries {
     */
   private def hourlyProfileSqlBlocks(tag: String,
                                      cols: Seq[(String, String)]): Seq[String] = {
-    def repr(c: String, kind: String): String = kind match {
-      case "int" => s"CAST($c AS BIGINT)"
-      case "num" => s"CAST(floor($c * 10000) AS BIGINT)"
-      case "ts"  => s"epoch_us($c)"
-      case _     => "CAST(NULL AS BIGINT)"
-    }
-    def hashSql(c: String, kind: String): String =
-      if (kind == "str") s"md5($c)" else s"md5(CAST(${repr(c, kind)} AS VARCHAR))"
     cols.map { case (c, kind) =>
       val (minN, maxN) =
         if (kind == "str") ("min(CAST(NULL AS BIGINT))", "max(CAST(NULL AS BIGINT))")
-        else (s"min(${repr(c, kind)})", s"max(${repr(c, kind)})")
+        else (s"min(${profileRepr(c, kind)})", s"max(${profileRepr(c, kind)})")
       val (minS, maxS) =
         if (kind == "str") (s"min($c)", s"max($c)")
         else ("min(CAST(NULL AS VARCHAR))", "max(CAST(NULL AS VARCHAR))")
-      s"""h_${tag}_$c AS (SELECT DISTINCT hr, ${hashSql(c, kind)} AS h FROM hrs_$tag WHERE $c IS NOT NULL),
+      s"""h_${tag}_$c AS (SELECT DISTINCT hr, ${profileHash(c, kind)} AS h FROM hrs_$tag WHERE $c IS NOT NULL),
          |r_${tag}_$c AS (SELECT hr, h, row_number() OVER (PARTITION BY hr ORDER BY h) AS rn,
          |         count(*) OVER (PARTITION BY hr) AS nd FROM h_${tag}_$c),
          |k_${tag}_$c AS (SELECT hr, max(nd) AS nd,
@@ -6215,14 +6030,7 @@ object Queries {
          |profm AS (${profileUnion("m", streamProfileCols)})
          |SELECT c.hr, c."column", c.kind,
          |  c.n_rows AS n_rows_cur, p.n_rows AS n_rows_base,
-         |  CAST(floor(c.n_nulls * 1000000 / c.n_rows)
-         |       - floor(p.n_nulls * 1000000 / p.n_rows) AS BIGINT) AS null_rate_delta_e6,
-         |  CAST(floor(c.n_distinct_est * 1000000
-         |             / greatest(p.n_distinct_est, 1)) AS BIGINT) AS distinct_ratio_e6,
-         |  (coalesce(c.min_num < p.min_num, FALSE)
-         |   OR coalesce(c.max_num > p.max_num, FALSE)
-         |   OR coalesce(c.min_str < p.min_str, FALSE)
-         |   OR coalesce(c.max_str > p.max_str, FALSE)) AS range_widened
+         |$driftColumnsSql
          |FROM profc c JOIN profm p ON c."column" = p."column"""".stripMargin
     })
 
@@ -6617,31 +6425,11 @@ object Queries {
         .withColumn("text", concat(col("text"), lit(" streamscreen probe suffix")))
       streaming.NearDupScreen.screen(incoming, docs, "doc_id", "text")
     },
-    Some("""WITH incoming AS (
+    Some(s"""WITH incoming AS (
       |  SELECT doc_id + 200000 AS doc_id, text || ' streamscreen probe suffix' AS text
       |  FROM documents WHERE doc_id % 10 = 0),
-      |itoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-      |  FROM incoming
-      |  WHERE len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      |                        x -> x <> '')) > 0),
-      |igrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM itoks),
-      |ctoks AS (
-      |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-      |  FROM documents
-      |  WHERE len(list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-      |                        x -> x <> '')) > 0),
-      |cgrams AS (
-      |  SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3
-      |    THEN list_transform(range(1, len(t) - 1),
-      |                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-      |    ELSE t END) AS g
-      |  FROM ctoks),
+      |${gramSets("i", "incoming")},
+      |${gramSets("c", "documents")},
       |iex AS (SELECT doc_id, unnest(g) AS gram FROM igrams),
       |cex AS (SELECT doc_id AS corpus_id, unnest(g) AS gram FROM cgrams),
       |inter AS (

@@ -145,9 +145,23 @@ h$lvl AS (
     */
   def writeZOrdered(df: DataFrame, path: String, numFiles: Int,
                     bitsPer: Int, cols: String*): Unit = {
+    val scaled = rankBuckets(df, bitsPer, cols)
+    df.withColumn("_z", zvalue(bitsPer, scaled: _*))
+      .repartitionByRange(numFiles, col("_z"))
+      .sortWithinPartitions("_z")
+      .drop("_z")
+      .write.mode("overwrite").parquet(path)
+  }
+
+  /** Each of `cols` as its `bitsPer`-bit equi-depth bucket index (the rank
+    * normalization [[writeZOrdered]] documents). One eager `approxQuantile`
+    * pass per column, in order: each pass creates RDDs, and the range
+    * exchange's sampler seed depends on how many RDDs exist before it.
+    */
+  private def rankBuckets(df: DataFrame, bitsPer: Int, cols: Seq[String]): Seq[Column] = {
     val nb = 1 << bitsPer
     val probs = (1 until nb).map(_.toDouble / nb).toArray
-    val scaled = cols.map { c =>
+    cols.map { c =>
       // distinct-ing the cuts collapses low-cardinality columns to m ≪ 2^bits
       // buckets; rescale the bucket index back to the full bit range or the
       // column's top bits would sit permanently at 0 and lose the interleave
@@ -156,11 +170,6 @@ h$lvl AS (
       val cnt = size(filter(lit(cuts), x => x <= col(c).cast("double")))
       floor(cnt.cast("double") * lit((nb - 1).toDouble / m)).cast("long")
     }
-    df.withColumn("_z", zvalue(bitsPer, scaled: _*))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
   }
 
   /** Linear (single-column sort) rewrite — the baseline layout z-ordering
@@ -171,10 +180,6 @@ h$lvl AS (
       .sortWithinPartitions(sortCol)
       .write.mode("overwrite").parquet(path)
 
-  /** How many of a layout's files hold rows matching `pred` — the count an
-    * engine with per-file column stats must read (skipping is exactly the
-    * complement). Diagnostic for specs and the scale probe.
-    */
   /** [[writeZOrdered]]'s Hilbert twin: same equi-depth rank normalization,
     * same single range-exchange + in-partition sort + write — only the
     * curve differs. The measured trade (LayoutSpec head-to-head): on 2-D
@@ -185,14 +190,7 @@ h$lvl AS (
     */
   def writeHilbertOrdered(df: DataFrame, path: String, numFiles: Int,
                           bitsPer: Int, xc: String, yc: String): Unit = {
-    val nb = 1 << bitsPer
-    val probs = (1 until nb).map(_.toDouble / nb).toArray
-    val scaled = Seq(xc, yc).map { c =>
-      val cuts = df.stat.approxQuantile(c, probs, 1.0 / (4 * nb)).distinct.sorted
-      val m = math.max(cuts.length, 1)
-      val cnt = size(filter(lit(cuts), x => x <= col(c).cast("double")))
-      floor(cnt.cast("double") * lit((nb - 1).toDouble / m)).cast("long")
-    }
+    val scaled = rankBuckets(df, bitsPer, Seq(xc, yc))
     withHilbertValue(df, bitsPer, scaled(0), scaled(1), "_h")
       .repartitionByRange(numFiles, col("_h"))
       .sortWithinPartitions("_h")
@@ -200,6 +198,10 @@ h$lvl AS (
       .write.mode("overwrite").parquet(path)
   }
 
+  /** How many of a layout's files hold rows matching `pred` — the count an
+    * engine with per-file column stats must read (skipping is exactly the
+    * complement). Diagnostic for specs and the scale probe.
+    */
   def filesTouched(spark: org.apache.spark.sql.SparkSession, path: String,
                    pred: Column): Long =
     spark.read.parquet(path).filter(pred)

@@ -800,22 +800,22 @@ case class HeavyHitters(
     copy(child = newChildren(0))
 }
 
-/** Sorted unique bottom-k of 128-bit md5 values as two parallel long
-  * arrays (unsigned (hi, lo) order == the hex strings' lexicographic
-  * order). Capacity k; `n` live entries.
+/** Sorted unique 128-bit hashes as two parallel long arrays (unsigned
+  * (hi, lo) order == the md5 hex strings' lexicographic order). Capacity
+  * k; `n` live entries.
   */
-final class KmvBuf(val k: Int) {
+abstract class Md5SortedBuf(val k: Int) {
   var n: Int = 0
   val hi: Array[Long] = new Array[Long](k)
   val lo: Array[Long] = new Array[Long](k)
 
-  private def cmpAt(i: Int, h: Long, l: Long): Int = {
+  protected final def cmpAt(i: Int, h: Long, l: Long): Int = {
     val c = java.lang.Long.compareUnsigned(hi(i), h)
     if (c != 0) c else java.lang.Long.compareUnsigned(lo(i), l)
   }
 
   /** Index of the first entry ≥ (h, l); n if none. */
-  private def lowerBound(h: Long, l: Long): Int = {
+  protected final def lowerBound(h: Long, l: Long): Int = {
     var a = 0; var b = n
     while (a < b) {
       val m = (a + b) >>> 1
@@ -823,7 +823,35 @@ final class KmvBuf(val k: Int) {
     }
     a
   }
+}
 
+/** 32-char md5 hex input → its two 64-bit halves, read in place from the
+  * UTF8String (no per-row allocation). `fn` names the calling function in
+  * the loud input-contract errors.
+  */
+private[graft] object Md5Hex {
+  def check(s: UTF8String, fn: String): Unit =
+    if (s.numBytes != 32) throw new IllegalArgumentException(
+      s"$fn expects 32-char hex (md5) input, got length ${s.numBytes}")
+
+  /** The 16 hex digits at `from` (0 → hi, 16 → lo) as one long. */
+  def half(s: UTF8String, from: Int, fn: String): Long = {
+    var v = 0L; var i = from
+    while (i < from + 16) { v = (v << 4) | nibble(s.getByte(i), fn); i += 1 }
+    v
+  }
+
+  private def nibble(b: Byte, fn: String): Int = {
+    if (b >= '0' && b <= '9') b - '0'
+    else if (b >= 'a' && b <= 'f') b - 'a' + 10
+    else if (b >= 'A' && b <= 'F') b - 'A' + 10
+    else throw new IllegalArgumentException(
+      s"$fn expects 32-char hex (md5) input, got byte '${b.toChar}'")
+  }
+}
+
+/** Sorted unique bottom-k of 128-bit md5 values. */
+final class KmvBuf(capacity: Int) extends Md5SortedBuf(capacity) {
   def insert(h: Long, l: Long): Unit = {
     // O(1) reject once full: not below the current k-th smallest
     if (n == k && cmpAt(n - 1, h, l) <= 0) return
@@ -894,26 +922,14 @@ case class KmvDistinct(
 
   override def createAggregationBuffer(): KmvBuf = new KmvBuf(k)
 
-  private def hexNibble(b: Byte): Int = {
-    if (b >= '0' && b <= '9') b - '0'
-    else if (b >= 'a' && b <= 'f') b - 'a' + 10
-    else if (b >= 'A' && b <= 'F') b - 'A' + 10
-    else throw new IllegalArgumentException(
-      s"kmv_distinct expects 32-char hex (md5) input, got byte '${b.toChar}'")
-  }
-
   override def update(buf: KmvBuf, input: InternalRow): KmvBuf = {
     val v = child.eval(input)
     if (v != null) {
       if (longInput) buf.insert(v.asInstanceOf[Long], 0L)
       else {
-        val s = v.asInstanceOf[UTF8String].getBytes
-        if (s.length != 32) throw new IllegalArgumentException(
-          s"kmv_distinct expects 32-char hex (md5) input, got length ${s.length}")
-        var h = 0L; var l = 0L; var i = 0
-        while (i < 16) { h = (h << 4) | hexNibble(s(i)); i += 1 }
-        while (i < 32) { l = (l << 4) | hexNibble(s(i)); i += 1 }
-        buf.insert(h, l)
+        val s = v.asInstanceOf[UTF8String]
+        Md5Hex.check(s, prettyName)
+        buf.insert(Md5Hex.half(s, 0, prettyName), Md5Hex.half(s, 16, prettyName))
       }
     }
     buf
@@ -970,25 +986,8 @@ case class KmvDistinct(
   * MINIMUM payload for that hash (so collisions resolve identically under
   * every merge order).
   */
-final class BottomKBuf(val k: Int) {
-  var n: Int = 0
-  val hi: Array[Long] = new Array[Long](k)
-  val lo: Array[Long] = new Array[Long](k)
+final class BottomKBuf(capacity: Int) extends Md5SortedBuf(capacity) {
   val pay: Array[Long] = new Array[Long](k)
-
-  private def cmpAt(i: Int, h: Long, l: Long): Int = {
-    val c = java.lang.Long.compareUnsigned(hi(i), h)
-    if (c != 0) c else java.lang.Long.compareUnsigned(lo(i), l)
-  }
-
-  private def lowerBound(h: Long, l: Long): Int = {
-    var a = 0; var b = n
-    while (a < b) {
-      val m = (a + b) >>> 1
-      if (cmpAt(m, h, l) < 0) a = m + 1 else b = m
-    }
-    a
-  }
 
   def insert(h: Long, l: Long, p: Long): Unit = {
     // full and strictly above the current k-th: reject (equal hash must
@@ -1052,14 +1051,6 @@ case class HashSample(
 
   override def createAggregationBuffer(): BottomKBuf = new BottomKBuf(k)
 
-  private def hexNibble(b: Byte): Int = {
-    if (b >= '0' && b <= '9') b - '0'
-    else if (b >= 'a' && b <= 'f') b - 'a' + 10
-    else if (b >= 'A' && b <= 'F') b - 'A' + 10
-    else throw new IllegalArgumentException(
-      s"hash_sample expects 32-char hex (md5) input, got byte '${b.toChar}'")
-  }
-
   private def payloadLong(pv: Any): Long = pv match {
     case l: Long => l
     case i: Int => i.toLong
@@ -1075,13 +1066,10 @@ case class HashSample(
     if (hv != null && pv != null) {
       if (longInput) buf.insert(hv.asInstanceOf[Long], 0L, payloadLong(pv))
       else {
-        val s = hv.asInstanceOf[UTF8String].getBytes
-        if (s.length != 32) throw new IllegalArgumentException(
-          s"hash_sample expects 32-char hex (md5) input, got length ${s.length}")
-        var h = 0L; var l = 0L; var i = 0
-        while (i < 16) { h = (h << 4) | hexNibble(s(i)); i += 1 }
-        while (i < 32) { l = (l << 4) | hexNibble(s(i)); i += 1 }
-        buf.insert(h, l, payloadLong(pv))
+        val s = hv.asInstanceOf[UTF8String]
+        Md5Hex.check(s, prettyName)
+        buf.insert(Md5Hex.half(s, 0, prettyName), Md5Hex.half(s, 16, prettyName),
+          payloadLong(pv))
       }
     }
     buf

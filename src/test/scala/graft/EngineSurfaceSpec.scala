@@ -167,6 +167,18 @@ class EngineSurfaceSpec extends AnyFunSuite with SparkTestBase {
     assert(byName.size == Queries.all.size, "duplicate query names")
     assert(SparkEntry.queries.keySet == Queries.all.map(_.name).toSet)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // oracles are stripMargin strings built from shared fragments: a missing
+    // `s` interpolator leaves `${x}`/`$x` in the text, and stripMargin (which
+    // runs after interpolation) eats the first `|` of a fragment line that
+    // starts with `||`, or leaves a margin the template forgot to strip
+    val unrendered = """\$\{|\$[A-Za-z_]""".r
+    val loneBar = """^\s*\|(?!\|)""".r
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      assert(unrendered.findFirstIn(sql).isEmpty, s"$name: unrendered interpolation")
+      sql.linesIterator.foreach { line =>
+        assert(loneBar.findFirstIn(line).isEmpty, s"$name: line led by a lone '|': $line")
+      }
+    }
   }
 
   test("session scale configs are set (SURVEY §4: AQE + skew join on, bounded shuffle partitions)") {
